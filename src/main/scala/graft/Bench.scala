@@ -155,15 +155,19 @@ object Bench {
     // compares against (the round-9 trap: an sf0.001 run silently
     // replaced the lock baseline). The un-suffixed BENCH_DETAIL.json
     // is additionally kept as the lock's canonical path, written ONLY
-    // for sf0.1 runs.
+    // for full sf0.1 runs at the lock's 32 cores; any other core count
+    // lands in BENCH_DETAIL.<sf>.c<N>.json, so it never replaces the
+    // 32-core baseline.
     val sfBase = new java.io.File(sfDir).getName // e.g. "sf0.1"
+    val cores = if (cpus == "32") "" else s".c$cpus"
     // a SUBSET run (SPARK_GRAFT_BENCH_ONLY) must never overwrite a
     // full sweep's detail — it lands in a .partial file instead
     val suffix = if (only.isDefined) ".partial" else ""
     val detailPaths = sys.env.get("SPARK_GRAFT_BENCH_DETAIL")
       .map(Seq(_))
-      .getOrElse(Seq(s"BENCH_DETAIL.$sfBase$suffix.json") ++
-        (if (sfBase == "sf0.1" && only.isEmpty) Seq("BENCH_DETAIL.json")
+      .getOrElse(Seq(s"BENCH_DETAIL.$sfBase$cores$suffix.json") ++
+        (if (sfBase == "sf0.1" && only.isEmpty && cores.isEmpty)
+          Seq("BENCH_DETAIL.json")
          else Nil))
     detailPaths.foreach { detailPath =>
       try java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),

@@ -1036,8 +1036,8 @@ object SparkEntry {
     }),
 
     // The same maintenance delta committed the OBJECT-STORE-SAFE way:
-    // the appended generation is one _manifest.json naming immutable
-    // segment directories (no hard links — S3-style stores have
+    // the appended generation lists immutable segment directories in
+    // the committed state (no hard links — S3-style stores have
     // none), served through a union view. Same oracle as
     // q_sim_index_append: the commit mode cannot change results.
     "q_sim_index_append_commit" -> ((s, dir) => {

@@ -1,15 +1,10 @@
 package graft.ops
 
-import scala.collection.JavaConverters._
-
-/** The ONE copy of the bucketed-artifact file contract shared by the
-  * persisted-artifact maintainers ([[Index]], [[GraphStore]],
-  * [[TextIndex]]): bucket-tag parsing, data-file listing, hard-link
-  * fan-out (copy fallback for linkless stores) and recursive delete.
-  * Before this object each maintainer re-declared the `_NNNNN`
-  * regex and its own fs helpers — a future change to Spark's bucket
-  * file naming or the link-fallback policy would have had to be found
-  * in every copy.
+/** The naming and input contracts shared by the persisted-artifact
+  * maintainers ([[Index]], [[GraphStore]], [[TextIndex]]): DDL
+  * quoting, artifact-name validation, the unique-id precondition and
+  * bucket-tag parsing. Their commit protocol and filesystem helpers
+  * live in [[Generations]].
   */
 private[ops] object ArtifactFiles {
 
@@ -74,41 +69,4 @@ private[ops] object ArtifactFiles {
     case BucketedFileName(b) => Some(b.toInt)
     case _ => None
   }
-
-  /** The data files of a directory (committed parquet parts — no
-    * `_SUCCESS` markers, no hidden sidecars).
-    */
-  def dataFiles(d: java.nio.file.Path): Seq[java.nio.file.Path] = {
-    val s = java.nio.file.Files.list(d)
-    try s.iterator().asScala.toVector.filter { f =>
-      val n = f.getFileName.toString
-      java.nio.file.Files.isRegularFile(f) &&
-        !n.startsWith("_") && !n.startsWith(".")
-    } finally s.close()
-  }
-
-  /** Hard-link `files` into `dstDir` under their own names (copy
-    * fallback for stores without link support). Parquet files are
-    * immutable once committed, so links are safe shared references.
-    */
-  def linkFiles(files: Seq[java.nio.file.Path],
-      dstDir: java.nio.file.Path): Unit = {
-    java.nio.file.Files.createDirectories(dstDir)
-    files.foreach { f =>
-      val t = dstDir.resolve(f.getFileName.toString)
-      try java.nio.file.Files.createLink(t, f)
-      catch {
-        case _: UnsupportedOperationException =>
-          java.nio.file.Files.copy(f, t)
-      }
-    }
-  }
-
-  def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      val s = java.nio.file.Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.delete(f))
-      finally s.close()
-    }
 }

@@ -24,6 +24,18 @@ object Bucketing {
     path.fold(w)(p => w.option("path", p)).saveAsTable(table)
   }
 
+  /** Bucket-write `df` to the directory `path` through a throwaway
+    * external table `table` (the only way to bucketBy-write to a
+    * path): the entry is dropped, the files kept and returned — the
+    * staging step of every artifact's [[Generations]] commit.
+    */
+  def stageBucketed(df: DataFrame, table: String, key: String,
+      buckets: Int, path: String): Seq[java.nio.file.Path] = {
+    writeBucketed(df, table, key, buckets, Some(path))
+    df.sparkSession.sql(s"DROP TABLE ${ArtifactFiles.ident(table)}")
+    Generations.dataFiles(java.nio.file.Paths.get(path))
+  }
+
   /** Append rows into an existing bucketed table (same key + bucket
     * count — Spark validates the spec). New files land in their key's
     * bucket; existing files are never rewritten, so an append is

@@ -1,7 +1,5 @@
 package graft.ops
 
-import scala.collection.JavaConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -61,59 +59,45 @@ object GraphStore {
   def exists(spark: SparkSession, name: String): Boolean =
     spark.catalog.tableExists(part(name, "edges"))
 
+  /** The five parts; the three big ones are bucketed by these keys. */
+  private val Parts = Seq("edges", "labels", "blocks", "cents", "meta")
+  private val BucketKeys =
+    Map("edges" -> "src_id", "blocks" -> "cl", "labels" -> "id")
+
+  private def stateOf(dir: String): Generations.State =
+    Generations.stateOf(dir, " — build the graph first")
+
+  private def metaOf(spark: SparkSession, name: String): (Int, Int, Int) = {
+    val r = spark.table(part(name, "meta")).collect()(0)
+    (r.getAs[Int]("k"), r.getAs[Int]("massign"), r.getAs[Int]("nBuckets"))
+  }
+
+  /** (Re-)attach `parts` over their committed directories (bucket
+    * specs for the big three).
+    */
+  private def attach(spark: SparkSession, name: String, dir: String,
+      st: Generations.State, parts: Seq[String], nBuckets: Int): Unit =
+    for (p <- parts)
+      Generations.attachBucketed(spark, part(name, p), s"$dir/${st.dir(p)}",
+        BucketKeys.getOrElse(p, ""),
+        if (BucketKeys.contains(p)) nBuckets else 0)
+
   /** Re-attach a graph BUILT BY A PREVIOUS SESSION from its files —
-    * the [[Index.register]]/[[TextIndex.register]] analog, closing
-    * the artifact-lifecycle gap (build once, serve from any number of
-    * later sessions). This artifact has no pointer files: every
-    * maintenance op writes its fresh sibling directory and sweeps the
-    * superseded one IN THE SAME CALL, so a quiesced artifact holds
-    * exactly ONE directory per part (`p` or `p_<tag>`). Resolution is
-    * therefore by uniqueness, and an ambiguous layout (two dirs for
-    * one part — a maintenance run crashed between its rewrite and its
-    * sweep) is REFUSED loudly with both names rather than guessed at:
-    * finish the interrupted op from the original session or rebuild.
-    * Bucket specs come from the persisted meta (a caller-supplied
-    * count could declare a false spec and silently drop join
-    * candidates — the [[Index.register]] rationale). Metadata-only:
-    * no data read beyond schema footers.
+    * the [[Index.register]]/[[TextIndex.register]] analog (build
+    * once, serve from any number of later sessions). Parts resolve
+    * through the committed [[Generations]] state, so leftovers of a
+    * crashed maintenance run are ignored (the next commit sweeps
+    * them). Bucket specs come from the persisted meta (a
+    * caller-supplied count could declare a false spec and silently
+    * drop join candidates — the [[Index.register]] rationale).
+    * Metadata-only: no data read beyond schema footers.
     */
   def register(spark: SparkSession, name: String, baseDir: String): Unit = {
     ArtifactFiles.requireArtifactName(name)
-    val dir = java.nio.file.Paths.get(graphDir(Some(baseDir), name))
-    require(java.nio.file.Files.isDirectory(dir),
-      s"no graph artifact at $dir")
-    def resolve(p: String): String = {
-      val s = java.nio.file.Files.list(dir)
-      val cands = try {
-        s.iterator().asScala.filter { c =>
-          val n = c.getFileName.toString
-          java.nio.file.Files.isDirectory(c) &&
-            (n == p || n.startsWith(s"${p}_"))
-        }.toVector
-      } finally s.close()
-      require(cands.nonEmpty, s"part $p missing under $dir")
-      require(cands.size == 1,
-        s"part $p is ambiguous under $dir (${cands.map(_.getFileName)
-          .mkString(", ")}) — a maintenance run crashed between its " +
-          "rewrite and its sweep; finish it from the original session " +
-          "or rebuild")
-      cands.head.toString
-    }
-    def attachPlain(tbl: String, location: String): Unit = {
-      if (spark.catalog.tableExists(tbl)) spark.sql(
-        s"DROP TABLE ${ArtifactFiles.ident(tbl)}")
-      val cols = spark.read.parquet(location).schema.toDDL
-      spark.sql(
-        s"CREATE TABLE ${ArtifactFiles.ident(tbl)} ($cols) USING parquet " +
-          s"LOCATION '${ArtifactFiles.sqlLit(location)}'")
-    }
-    attachPlain(part(name, "meta"), resolve("meta"))
-    attachPlain(part(name, "cents"), resolve("cents"))
-    val nBuckets =
-      spark.table(part(name, "meta")).collect()(0).getAs[Int]("nBuckets")
-    for ((p, key) <- Seq(("edges", "src_id"), ("blocks", "cl"),
-        ("labels", "id")))
-      attachBucketed(spark, part(name, p), key, nBuckets, resolve(p))
+    val dir = graphDir(Some(baseDir), name)
+    val st = stateOf(dir)
+    attach(spark, name, dir, st, Seq("meta", "cents"), 0)
+    attach(spark, name, dir, st, BucketKeys.keys.toSeq, metaOf(spark, name)._3)
   }
 
   /** Auto-compaction policy hook — [[Index.maybeCompact]]'s graph
@@ -129,21 +113,11 @@ object GraphStore {
     */
   def maybeCompact(spark: SparkSession, name: String,
       maxFilesPerPart: Int): Boolean = {
-    val nBuckets =
-      spark.table(part(name, "meta")).collect()(0).getAs[Int]("nBuckets")
-    val threshold = math.max(maxFilesPerPart, nBuckets)
-    val over = Seq("edges", "blocks", "labels").exists { p =>
-      val d = dirOf(spark, part(name, p))
-      val s = java.nio.file.Files.list(d)
-      val n = try {
-        s.iterator().asScala.count { f =>
-          val fn = f.getFileName.toString
-          java.nio.file.Files.isRegularFile(f) &&
-            !fn.startsWith("_") && !fn.startsWith(".")
-        }
-      } finally s.close()
-      n > threshold
-    }
+    val dir = Generations.rootOf(spark, part(name, "meta"))
+    val st = stateOf(dir)
+    val threshold = math.max(maxFilesPerPart, metaOf(spark, name)._3)
+    val over = BucketKeys.keys.exists(p =>
+      Generations.filesOf(dir, st.current(p)).size > threshold)
     if (over) compact(spark, name)
     over
   }
@@ -195,29 +169,9 @@ object GraphStore {
     Seq((k, massign, nBuckets)).toDF("k", "massign", "nBuckets")
       .write.mode("overwrite").format("parquet")
       .option("path", s"$dir/meta").saveAsTable(part(name, "meta"))
-    // A REBUILD over a previously appended/deleted artifact lands in
-    // the canonical dirs above while the superseded generation dirs
-    // (edges_aXXXX / *_dXXXX — append/delete rewrite into fresh
-    // siblings and re-point the catalog) would otherwise stay on disk
-    // forever. Build is the only entry point that re-establishes the
-    // canonical layout, so it owns the sweep: every sibling that is
-    // not one of the five canonical tables goes. Safe under the
-    // artifact's single-writer contract — no reader holds a
-    // superseded generation once the catalog points at the new build.
-    sweepOrphans(dir)
-  }
-
-  private val CanonicalParts = Set("edges", "labels", "blocks", "cents", "meta")
-
-  private def sweepOrphans(dir: String): Unit = {
-    val p = java.nio.file.Paths.get(dir)
-    if (!java.nio.file.Files.isDirectory(p)) return
-    val s = java.nio.file.Files.list(p)
-    try s.forEach { c =>
-      if (java.nio.file.Files.isDirectory(c)
-          && !CanonicalParts.contains(c.getFileName.toString))
-        deleteDir(c)
-    } finally s.close()
+    // a rebuild is a new artifact: generation 0 over the canonical
+    // dirs, every superseded generation swept
+    Generations.rebuild(dir, Parts.map(p => p -> Seq(p)).toMap)
   }
 
   /** Incremental maintenance — the [[Index.append]] analog for the
@@ -237,116 +191,31 @@ object GraphStore {
     * the union corpus (GraphStoreSpec proves equality; the
     * `q_sim_graph_append` oracle proves it end-to-end), at cost
     * ∝ |delta|·avg-list + touched edges, never ∝ Σ|list|².
-    * Single-writer, like all artifact maintenance; the edges rewrite
-    * lands in a fresh sibling directory and re-attaches (the
-    * [[Index.compact]] pattern — the X56/X88 generation machinery is
-    * the upgrade path if graph maintenance ever needs reader
-    * snapshots). IDEMPOTENT under replay: ids already in the artifact
-    * are dropped up front, so at-least-once delivery
+    * This is [[upsert]] of the ids the artifact does not hold yet
+    * (its merge of gained candidates is exactly the rule above), so
+    * it commits in ONE [[Generations]] swap and block files hard-link
+    * byte-identical. IDEMPOTENT under replay: ids already in the
+    * artifact are dropped up front, so at-least-once delivery
     * ([[graft.streaming.GraphStream.maintain]]) cannot double-merge.
     */
   def append(spark: SparkSession, name: String, newEmbs: DataFrame,
       idCol: String, vecCol: String, seedCol: String): Unit = {
-    val metaRow = spark.table(part(name, "meta")).collect()(0)
-    val (k, massign, nBuckets) = (metaRow.getAs[Int]("k"),
-      metaRow.getAs[Int]("massign"), metaRow.getAs[Int]("nBuckets"))
-    val cents = spark.table(part(name, "cents"))
-    // idempotence gate: ids already in the artifact are dropped, so an
-    // at-least-once REPLAY (GraphStream's foreachBatch contract, or a
-    // crashed-and-retried batch append) is a no-op instead of
-    // double-merging pairs into the top-k — one anti-join probe of the
-    // bucketed labels table, cost ∝ batch
-    val fresh = Caching.cachedOnce(newEmbs.join(
-      spark.table(part(name, "labels"))
-        .select(col("id").as(s"__seen_$idCol")),
-      newEmbs(idCol) === col(s"__seen_$idCol"), "left_anti"))
-    if (fresh.isEmpty) return
-    val newBase = baseOf(fresh, idCol, vecCol)
-    val newBlocks = Caching.cachedOnce(
-      Similarity.assignWithVec(newBase, cents, massign)
-        .select(col("cl"), col("id"), col("v"), col("nrm")))
-    val oldBlocks = spark.table(part(name, "blocks"))
-
-    def cos = (Vectors.dot(col("sv"), col("v"))
-      / (col("snrm") * col("nrm"))).as("cos")
-    def srcSide(df: DataFrame) = df.select(col("cl"),
-      col("id").as("src_id"), col("v").as("sv"), col("nrm").as("snrm"))
-    def dstSide(df: DataFrame) = df.select(col("cl"),
-      col("id").as("neighbor_id"), col("v"), col("nrm"))
-
-    // pairs with a NEW source: new↔new plus new→old through shared
-    // lists (the tiny new side broadcasts against the bucketed blocks)
-    val newSrcPairs = srcSide(newBlocks)
-      .join(dstSide(newBlocks).unionByName(dstSide(oldBlocks)), Seq("cl"))
-      .filter(col("src_id") =!= col("neighbor_id"))
-      .select(col("src_id"), col("neighbor_id"), cos)
-    val newEdges = Similarity.knnRankPairs(newSrcPairs, k,
-      dedup = massign > 1)
-
-    // pairs where a STORED source gains a new candidate
-    val oldNewPairs = srcSide(oldBlocks).join(dstSide(newBlocks), Seq("cl"))
-      .select(col("src_id"), col("neighbor_id"), cos)
-    val oldNewDedup = Caching.cachedOnce(
-      if (massign > 1) oldNewPairs.distinct() else oldNewPairs)
-
-    // stored rows split by whether their source gained candidates;
-    // read BY PATH so the rewrite below can target the same table
-    val edgesTbl = part(name, "edges")
-    val oldDir = dirOf(spark, edgesTbl)
-    val stored = spark.read.parquet(oldDir.toString)
-    val touched = oldNewDedup.select(col("src_id")).distinct()
-    val untouched = stored.join(touched, Seq("src_id"), "left_anti")
-    val merged = Similarity.knnRankPairs(
-      stored.join(touched, Seq("src_id"), "left_semi")
-        .select(col("src_id"), col("neighbor_id"), col("cos_raw").as("cos"))
-        .unionByName(oldNewDedup),
-      k, dedup = false) // stored rows and new pairs are disjoint sets
-
-    val dir = oldDir.getParent.toString
-    val newName = s"edges_a${java.util.UUID.randomUUID().toString.take(8)}"
-    Bucketing.writeBucketed(
-      untouched.unionByName(merged).unionByName(newEdges),
-      edgesTbl, "src_id", nBuckets, Some(s"$dir/$newName"))
-
-    // delta-append the blocks and labels (concurrently — distinct
-    // tables, both ∝ batch; they run only AFTER the edges rewrite, so
-    // the rewrite's scan of the blocks table never races the append);
-    // then sweep the superseded edges dir
-    Par.jobs(Seq(
-      () => Bucketing.appendBucketed(newBlocks, part(name, "blocks"), "cl",
-        nBuckets),
-      () => Bucketing.appendBucketed(
-        fresh.select(col(idCol).cast("long").as("id"),
-          col(seedCol).cast("long").as("label")),
-        part(name, "labels"), "id", nBuckets)))
-    deleteDir(oldDir)
+    val dir = Generations.rootOf(spark, part(name, "meta"))
+    val labels = spark.read.parquet(s"$dir/${stateOf(dir).dir("labels")}")
+    val fresh = newEmbs.join(labels.select(col("id").as(s"__seen_$idCol")),
+      newEmbs(idCol) === col(s"__seen_$idCol"), "left_anti")
+    upsertImpl(spark, name, Some((fresh, idCol, vecCol, seedCol)), None,
+      idCol)
   }
 
-  /** A table's backing directory, resolved through its file relation
-    * — lets a rewrite read the OLD files by path while its write
-    * re-targets the same catalog name.
+  /** Bucket-write `df` as part `p` into `.staging/<p>_<tag>` (a
+    * throwaway stage table); returns the staged data files.
     */
-  private def dirOf(spark: SparkSession, tbl: String): java.nio.file.Path = {
-    // drop any cached relation first: maintenance runs inside
-    // foreachBatch's CLONED session, whose DROP/CREATE re-points the
-    // shared external catalog but leaves the PARENT session's relation
-    // cache holding the superseded location — a post-stream describe/
-    // compact in the parent would walk a swept directory (r16 spec)
-    spark.catalog.refreshTable(tbl)
-    val scan = spark.table(tbl).queryExecution.analyzed.collectFirst {
-      case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        r.relation.asInstanceOf[
-          org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-    }.getOrElse(sys.error(s"$tbl is not file-backed"))
-    java.nio.file.Paths.get(scan.location.rootPaths.head.toUri.getPath)
-  }
-
-  private def deleteDir(d: java.nio.file.Path): Unit = {
-    val s = java.nio.file.Files.walk(d)
-    try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(f => java.nio.file.Files.delete(f))
-    finally s.close()
-  }
+  private def stage(spark: SparkSession, name: String, dir: String,
+      df: DataFrame, p: String, nBuckets: Int,
+      tag: String): Seq[java.nio.file.Path] =
+    Bucketing.stageBucketed(df, s"${part(name, p)}_stage_$tag",
+      BucketKeys(p), nBuckets, s"$dir/${Generations.Staging}/${p}_$tag")
 
   /** Takedown for the graph artifact — the [[graft.ops.Index.delete]]
     * analog: the result equals a full rebuild at the STORED centroids
@@ -412,8 +281,8 @@ object GraphStore {
     *  - ingested sources take the top-k of their full candidate set;
     *  - every other source keeps its stored rows, and untouched
     *    bucket FILES hard-link into the fresh generation
-    *    byte-identical ([[delete]]'s pruning, extended with the
-    *    ingest's own buckets).
+    *    byte-identical ([[delete]]'s pruning; the ingest's rows land
+    *    as new files).
     *
     * Replay-idempotent WITHOUT markers (the [[Index.upsert]]
     * argument): a replayed upsert removes exactly the ids it itself
@@ -431,19 +300,16 @@ object GraphStore {
 
   /** The one removal+ingest commit path behind [[upsert]] AND
     * [[delete]] (delete is its empty-ingest specialization — the
-    * [[Index.upsertImpl]] discipline). Phase 1 stages the three
-    * bucket-pruned rewrites concurrently into fresh sibling dirs
-    * while the catalog still serves the old generation — a crash
-    * anywhere in phase 1 leaves the served graph untouched; phase 2
-    * swaps the catalog over the complete fresh dirs and sweeps the
-    * old ones.
+    * [[Index.upsertImpl]] discipline): the three bucket-pruned
+    * rewrites stage concurrently while the catalog still serves the
+    * old generation, then all three parts commit in ONE
+    * [[Generations]] swap — a crash leaves the old graph or the new
+    * one, never a mix of parts.
     */
   private def upsertImpl(spark: SparkSession, name: String,
       ingest: Option[(DataFrame, String, String, String)],
       delIds: Option[DataFrame], delCol: String): Unit = {
-    val metaRow = spark.table(part(name, "meta")).collect()(0)
-    val (k, massign, nBuckets) = (metaRow.getAs[Int]("k"),
-      metaRow.getAs[Int]("massign"), metaRow.getAs[Int]("nBuckets"))
+    val (k, massign, nBuckets) = metaOf(spark, name)
     // removal set: every ingested id leaves first (an upsert of a
     // graphed id must REPLACE its vector), plus the explicit
     // tombstones. Explicit persist + finally-unpersist: the streaming
@@ -480,11 +346,11 @@ object GraphStore {
       val hasIngest = probe.get("i").exists(_.getLong(1) > 0)
       if (!hasIngest && !probe.contains("d")) return
       val cents = spark.table(part(name, "cents"))
-      val edgesTbl = part(name, "edges")
-      val blocksTbl = part(name, "blocks")
-      val labelsTbl = part(name, "labels")
-      val (edgesDir, blocksDir, labelsDir) =
-        (dirOf(spark, edgesTbl), dirOf(spark, blocksTbl), dirOf(spark, labelsTbl))
+      val dir = Generations.rootOf(spark, part(name, "meta"))
+      val st = stateOf(dir)
+      val Seq(edgesDir, blocksDir, labelsDir) =
+        Seq("edges", "blocks", "labels")
+          .map(p => java.nio.file.Paths.get(dir, st.dir(p)))
       val blocks = spark.read.parquet(blocksDir.toString)
       val keptBlocks =
         blocks.join(del, blocks("id") === col("__del"), "left_anti").persist()
@@ -554,18 +420,14 @@ object GraphStore {
             col(sc).cast("long").as("label"))
         }.filter(_ => hasIngest)
 
-        val dir = edgesDir.getParent.toString
-        val tag = if (hasIngest) "u" else "d"
-        def fresh(p: String) =
-          s"${p}_$tag${java.util.UUID.randomUUID().toString.take(8)}"
         def bucketOf(c: org.apache.spark.sql.Column) =
           pmod(hash(c), lit(nBuckets))
-        // per-part touched-bucket digests (≤ nBuckets values each);
-        // the ingest's own ids/clusters join the touched sets, so
-        // every staged row hashes into a rewritten bucket. ONE
-        // tagged-union collect for all three parts (r18: three
-        // separate ~0.1 s digest jobs fused into one — same sets,
-        // same ≤ 3·nBuckets bound)
+        // per-part touched-bucket digests (≤ nBuckets values each) —
+        // the buckets whose rows can change; the ingest's rows stage
+        // as new files beside the kept ones (a bucket may hold several
+        // files; [[compact]] re-pins one). ONE tagged-union collect for
+        // all three parts (r18: three separate ~0.1 s digest jobs fused
+        // into one — same sets, same ≤ 3·nBuckets bound)
         def tagb(df: DataFrame, t: String) =
           df.select(lit(t).as("t"), col("b"))
         val digests = (Seq(
@@ -575,13 +437,7 @@ object GraphStore {
             tagb(blocks.join(del, blocks("id") === col("__del"), "left_semi")
               .select(bucketOf(col("cl")).as("b")), "b")) ++
           gainedOnly.map(g =>
-            tagb(g.select(bucketOf(col("src_id")).as("b")), "e")) ++
-          newBlocks.map(nb =>
-            tagb(nb.select(bucketOf(col("id")).as("b")), "e")) ++
-          newBlocks.map(nb =>
-            tagb(nb.select(bucketOf(col("id")).as("b")), "l")) ++
-          newBlocks.map(nb =>
-            tagb(nb.select(bucketOf(col("cl")).as("b")), "b")))
+            tagb(g.select(bucketOf(col("src_id")).as("b")), "e")))
           .reduce(_ unionByName _).distinct().collect()
           .groupBy(_.getString(0))
           .map { case (t, rs) => t -> rs.map(_.getInt(1)).toSet }
@@ -592,88 +448,50 @@ object GraphStore {
         // kept or row-filtered away); kept files hard-link
         // byte-identical
         def split(d: java.nio.file.Path, bkts: Set[Int]) =
-          ArtifactFiles.dataFiles(d).partition(f =>
+          Generations.dataFiles(d).partition(f =>
             ArtifactFiles.bucketIdOf(f.getFileName.toString)
               .forall(bkts.contains))
         val (rewE, keptE) = split(edgesDir, edgeBkts)
         val (rewB, keptB) = split(blocksDir, blockBkts)
         val (rewL, keptL) = split(labelsDir, labelBkts)
-        val (eNew, bNew, lNew) =
-          (fresh("edges"), fresh("blocks"), fresh("labels"))
         def readFiles(files: Seq[java.nio.file.Path]) =
           spark.read.parquet(files.map(_.toString): _*)
-        def stageWrite(df: DataFrame, p: String, key: String,
-            newName: String): Unit = {
-          val stageTbl = s"${part(name, p)}_stage_${newName.takeRight(8)}"
-          Bucketing.writeBucketed(df, stageTbl, key, nBuckets,
-            Some(s"$dir/$newName"))
-          spark.sql(s"DROP TABLE ${ArtifactFiles.ident(stageTbl)}")
-        }
-        // phase 1, CONCURRENT: the pruned rewrites (removal + ingest
-        // fused per part) land in fresh dirs through throwaway stage
-        // tables — the real catalog entries still serve the old
-        // generation, so a crash here leaves the served graph intact
-        // (orphans swept by the next build)
-        Par.jobs(Seq(
-          () => if (rewE.nonEmpty || hasIngest) {
-            // rows of the touched edge files whose src neither died,
-            // re-ranks nor merges, plus the recomputed top-ks
-            val kept = if (rewE.isEmpty) None else Some {
-              val t = readFiles(rewE)
-              val k0 = t.join(del, t("src_id") === col("__del"), "left_anti")
-                .join(touched, Seq("src_id"), "left_anti")
-              gainedOnly.map(g => k0.join(g, Seq("src_id"), "left_anti"))
-                .getOrElse(k0)
-            }
-            stageWrite(
-              (kept.toSeq ++ Seq(reranked) ++ merged.toSeq ++ newEdges.toSeq)
-                .reduce(_ unionByName _),
-              "edges", "src_id", eNew)
-          },
-          () => if (rewB.nonEmpty || hasIngest) {
-            val kept = if (rewB.isEmpty) None else Some {
-              val t = readFiles(rewB)
-              t.join(del, t("id") === col("__del"), "left_anti")
-            }
-            stageWrite((kept.toSeq ++ newBlocks.toSeq)
-              .reduce(_ unionByName _), "blocks", "cl", bNew)
-          },
-          () => if (rewL.nonEmpty || hasIngest) {
-            val kept = if (rewL.isEmpty) None else Some {
-              val t = readFiles(rewL)
-              t.join(del, t("id") === col("__del"), "left_anti")
-            }
-            stageWrite((kept.toSeq ++ newLabels.toSeq)
-              .reduce(_ unionByName _), "labels", "id", lNew)
-          }))
-        ArtifactFiles.linkFiles(keptE, java.nio.file.Paths.get(dir, eNew))
-        ArtifactFiles.linkFiles(keptB, java.nio.file.Paths.get(dir, bNew))
-        ArtifactFiles.linkFiles(keptL, java.nio.file.Paths.get(dir, lNew))
-        // phase 2: catalog swaps over the COMPLETE fresh dirs, then
-        // the old dirs go — one generation advance per part
-        attachBucketed(spark, edgesTbl, "src_id", nBuckets, s"$dir/$eNew")
-        attachBucketed(spark, blocksTbl, "cl", nBuckets, s"$dir/$bNew")
-        attachBucketed(spark, labelsTbl, "id", nBuckets, s"$dir/$lNew")
-        Seq(edgesDir, blocksDir, labelsDir)
-          .foreach(ArtifactFiles.deleteRecursively)
+        // the pruned rewrites (removal + ingest fused per part) stage
+        // concurrently through throwaway stage tables — the real
+        // catalog entries still serve the old generation, so a crash
+        // here leaves the served graph intact
+        val u = Generations.uid()
+        def stageAll(p: String, rew: Seq[java.nio.file.Path],
+            kept: DataFrame => DataFrame,
+            add: Seq[DataFrame]): () => Seq[java.nio.file.Path] = () =>
+          if (rew.isEmpty && !hasIngest) Nil
+          else stage(spark, name, dir,
+            ((if (rew.isEmpty) None else Some(kept(readFiles(rew)))).toSeq
+              ++ add).reduce(_ unionByName _), p, nBuckets, u)
+        val staged = Par.collect(Seq(
+          // rows of the touched edge files whose src neither died,
+          // re-ranks nor merges, plus the recomputed top-ks
+          stageAll("edges", rewE, { t =>
+            val k0 = t.join(del, t("src_id") === col("__del"), "left_anti")
+              .join(touched, Seq("src_id"), "left_anti")
+            gainedOnly.map(g => k0.join(g, Seq("src_id"), "left_anti"))
+              .getOrElse(k0)
+          }, Seq(reranked) ++ merged.toSeq ++ newEdges.toSeq),
+          stageAll("blocks", rewB,
+            t => t.join(del, t("id") === col("__del"), "left_anti"),
+            newBlocks.toSeq),
+          stageAll("labels", rewL,
+            t => t.join(del, t("id") === col("__del"), "left_anti"),
+            newLabels.toSeq)))
+        val next = Generations.commitFiles(dir, st, Map(
+          "edges" -> (keptE ++ staged(0)),
+          "blocks" -> (keptB ++ staged(1)),
+          "labels" -> (keptL ++ staged(2))))
+        attach(spark, name, dir, next, BucketKeys.keys.toSeq, nBuckets)
       } finally { touched.unpersist(); keptBlocks.unpersist()
         gainedOnly.foreach(_.unpersist()); oldNewDedup.foreach(_.unpersist())
         newBlocks.foreach(_.unpersist()) }
     } finally { del.unpersist(); ingestBase.foreach(_.unpersist()) }
-  }
-
-  /** (Re-)create the catalog entry of a bucketed part over `location`
-    * (schema recovered from the files' own footer — metadata-only).
-    */
-  private def attachBucketed(spark: SparkSession, tbl: String,
-      key: String, nBuckets: Int, location: String): Unit = {
-    if (spark.catalog.tableExists(tbl)) spark.sql(
-      s"DROP TABLE ${ArtifactFiles.ident(tbl)}")
-    val cols = spark.read.parquet(location).schema.toDDL
-    spark.sql(
-      s"""CREATE TABLE ${ArtifactFiles.ident(tbl)} ($cols) USING parquet
-         |CLUSTERED BY ($key) SORTED BY ($key) INTO $nBuckets BUCKETS
-         |LOCATION '${ArtifactFiles.sqlLit(location)}'""".stripMargin)
   }
 
   /** Offline file-count maintenance — [[Index.compact]]'s graph
@@ -685,47 +503,40 @@ object GraphStore {
     * tables with an explicit pre-partition on their bucket key —
     * `repartition(n, key)` and `bucketBy(n, key)` share the same
     * murmur3 hash partitioning, so each write task holds exactly one
-    * bucket and the table lands as ≤ nBuckets files. Content is
+    * bucket and the table lands as ≤ nBuckets files — into fresh
+    * directories committed in one [[Generations]] swap. Content is
     * byte-identical by construction (GraphStoreSpec asserts the
-    * serve surfaces and the post-compact file counts); fresh sibling
-    * dirs + catalog re-point + old-dir sweep, the artifact's
-    * single-writer maintenance contract throughout.
+    * serve surfaces and the post-compact file counts).
     */
   def compact(spark: SparkSession, name: String): Unit = {
-    val metaRow = spark.table(part(name, "meta")).collect()(0)
-    val nBuckets = metaRow.getAs[Int]("nBuckets")
-    Par.jobs(Seq(("edges", "src_id"), ("blocks", "cl"), ("labels", "id"))
-      .map { case (p, key) => () => {
-        val tbl = part(name, p)
-        val oldDir = dirOf(spark, tbl)
-        val rows = spark.read.parquet(oldDir.toString)
-          .repartition(nBuckets, col(key))
-        val newName = s"${p}_c${java.util.UUID.randomUUID().toString.take(8)}"
-        Bucketing.writeBucketed(rows, tbl, key, nBuckets,
-          Some(s"${oldDir.getParent}/$newName"))
-        deleteDir(oldDir)
-      }})
+    val nBuckets = metaOf(spark, name)._3
+    val dir = Generations.rootOf(spark, part(name, "meta"))
+    val st = stateOf(dir)
+    val u = Generations.uid()
+    val parts = BucketKeys.keys.toSeq
+    Par.jobs(parts.map { p => () =>
+      Bucketing.stageBucketed(spark.read.parquet(s"$dir/${st.dir(p)}")
+          .repartition(nBuckets, col(BucketKeys(p))),
+        s"${part(name, p)}_stage_$u", BucketKeys(p), nBuckets,
+        s"$dir/${p}_c$u")
+    })
+    val next = Generations.commit(dir, st,
+      parts.map(p => p -> Seq(s"${p}_c$u")).toMap)
+    attach(spark, name, dir, next, parts, nBuckets)
   }
 
   /** Operational snapshot — [[Index.describe]]'s graph analog: one
-    * row per table with its backing directory name and file
-    * count/bytes from the filesystem (no data read, no job). File
-    * counts creep with delta appends; [[compact]] re-pins them.
+    * row per table with its committed directory and file count/bytes
+    * from the filesystem (no data read, no job). File counts creep
+    * with delta appends; [[compact]] re-pins them.
     */
   def describe(spark: SparkSession, name: String): DataFrame = {
     import spark.implicits._
-    val rows = Seq("edges", "labels", "blocks", "cents", "meta").map { p =>
-      val d = dirOf(spark, part(name, p))
-      val w = java.nio.file.Files.walk(d)
-      val files = try {
-        import scala.collection.JavaConverters._
-        w.iterator().asScala.filter { f =>
-          val n = f.getFileName.toString
-          java.nio.file.Files.isRegularFile(f) &&
-            !n.startsWith("_") && !n.startsWith(".")
-        }.toVector
-      } finally w.close()
-      (p, d.getFileName.toString, files.size.toLong,
+    val dir = Generations.rootOf(spark, part(name, "meta"))
+    val st = stateOf(dir)
+    val rows = Parts.map { p =>
+      val files = Generations.filesOf(dir, st.current(p))
+      (p, st.current(p).mkString(","), files.size.toLong,
         files.map(java.nio.file.Files.size(_)).sum)
     }
     rows.toDF("part", "dir", "n_files", "bytes")

@@ -1,7 +1,5 @@
 package graft.ops
 
-import scala.collection.JavaConverters._
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -68,133 +66,13 @@ object Index {
   private def indexDir(baseDir: Option[String], name: String): String =
     s"${baseDir.getOrElse(s"${sys.props("java.io.tmpdir")}/graft_index")}/$name"
 
-  // ------------------------------------------------- filesystem helpers
-
-  private def listDir(p: java.nio.file.Path): Seq[java.nio.file.Path] = {
-    val s = java.nio.file.Files.list(p)
-    try s.iterator().asScala.toVector finally s.close()
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      val s = java.nio.file.Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.delete(f))
-      finally s.close()
-    }
-
-  /** Each part's committed metadata lives in ONE file
-    * `<indexDir>/<part>.current`, replaced by atomic tmp-write + move —
-    * the part's single commit point (the [[graft.streaming.StateTable]]
-    * manifest shape): the CURRENT data directory, a monotone commit
-    * generation, the retired directories still inside their grace
-    * window, and the committed grace policy. Every maintenance path
-    * ([[build]], [[appendCommitted]], [[compact]]) moves through it, so
-    * [[register]] resolves the right directory across sessions AND
-    * across crashes — a maintenance run that dies before sweeping old
-    * directories leaves the state file authoritative, and the next
-    * commit sweeps every non-current, non-graced sibling.
-    *
-    * Legacy content (a bare directory name from earlier layouts) is
-    * read as generation 0 with no retired entries.
+  /** Every part's current directories live in ONE [[Generations]]
+    * state: a bucketed part names one directory, or — after
+    * [[appendCommitted]]`(manifestCommit = true)` — its chain of
+    * segment directories.
     */
-  private[graft] final case class PartState(current: String, gen: Long,
-      retired: Seq[(String, Long)], grace: Int)
-
-  private[graft] def loadPart(dir: String, p: String): PartState = {
-    val f = java.nio.file.Paths.get(dir, s"$p.current")
-    if (!java.nio.file.Files.exists(f)) PartState(p, 0L, Seq.empty, 0)
-    else {
-      val s = java.nio.file.Files.readString(f).trim
-      if (!s.startsWith("{")) PartState(s, 0L, Seq.empty, 0)
-      else {
-        val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(s)
-        val retired = Option(node.get("retired")).toSeq
-          .flatMap(_.elements().asScala)
-          .map(r => (r.get("d").asText, r.get("gen").asLong))
-        PartState(node.get("current").asText,
-          Option(node.get("gen")).map(_.asLong).getOrElse(0L),
-          retired,
-          Option(node.get("grace")).map(_.asInt).getOrElse(0))
-      }
-    }
-  }
-
-  private def writePartState(dir: String, p: String, st: PartState): Unit = {
-    val retired = st.retired
-      .map { case (d, g) => s"""{"d": "$d", "gen": $g}""" }.mkString(", ")
-    val tmp = java.nio.file.Paths.get(dir,
-      s".$p.current.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-    java.nio.file.Files.writeString(tmp,
-      s"""{"current": "${st.current}", "gen": ${st.gen}, "grace": ${st.grace}, "retired": [$retired]}""")
-    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(dir, s"$p.current"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  private def readPointer(dir: String, p: String): String =
-    loadPart(dir, p).current
-
-  /** A MANIFEST generation directory holds no data files at all — just
-    * `_manifest.json` naming its constituent SEGMENT directories (each
-    * a bucketed-parquet dir: the original build dir, a compact output,
-    * or one committed delta). This is the object-store-safe commit
-    * shape ([[appendCommitted]]'s `manifestCommit = true`): a commit
-    * writes ONE small JSON file instead of a hard-link farm, which on
-    * S3-style stores (no links, renames are copies) is the only
-    * O(1)-data option — exactly the Delta/Iceberg snapshot shape.
-    */
-  private val ManifestFile = "_manifest.json"
-
-  private def hasManifest(dir: String, gen: String): Boolean =
-    java.nio.file.Files.exists(
-      java.nio.file.Paths.get(dir, gen, ManifestFile))
-
-  /** The data directories a generation resolves to: itself for a plain
-    * directory, its manifest's segment list otherwise (manifests list
-    * segments only — chains are flattened at commit time, never nested).
-    */
-  private[graft] def segmentsOf(dir: String, gen: String): Seq[String] =
-    if (!hasManifest(dir, gen)) Seq(gen)
-    else {
-      val s = java.nio.file.Files.readString(
-        java.nio.file.Paths.get(dir, gen, ManifestFile))
-      new com.fasterxml.jackson.databind.ObjectMapper().readTree(s)
-        .get("segments").elements().asScala.map(_.asText).toVector
-    }
-
-  private def writeManifest(dir: String, gen: String,
-      segments: Seq[String]): Unit = {
-    val genDir = java.nio.file.Paths.get(dir, gen)
-    java.nio.file.Files.createDirectories(genDir)
-    java.nio.file.Files.writeString(genDir.resolve(ManifestFile),
-      s"""{"segments": [${segments.map(s => s""""$s"""").mkString(", ")}]}""")
-  }
-
-  /** Commit `newDir` as part `p`'s current directory: one atomic state
-    * swap, then GC. The previous current enters the retired list at
-    * the new generation; entries whose grace window elapsed leave it
-    * and their directories are deleted AFTER the swap — a reader that
-    * resolved a recent state file keeps its files for `grace` further
-    * commits (the [[graft.streaming.StateTable]] reader-snapshot
-    * contract). The effective grace is the larger of the call's value
-    * and the committed policy, so a default-grace maintenance call can
-    * never expire versions a previous maintainer promised.
-    */
-  private def commitPart(dir: String, p: String, newDir: String,
-      graceCommits: Int): Unit = {
-    val st = loadPart(dir, p)
-    val gen = st.gen + 1
-    val grace = math.max(graceCommits, st.grace)
-    val kept = (st.retired :+ (st.current, gen))
-      .filter { case (_, g) => gen - g < grace }
-    writePartState(dir, p, PartState(newDir, gen, kept, grace))
-    // expired generations are reclaimed by the sweep below — which,
-    // unlike a direct delete, keeps any directory a LIVE manifest
-    // still references as a segment (an expired generation's data can
-    // outlive it when later manifests share it)
-    sweepStale(dir, p)
-  }
+  private def stateOf(dir: String): Generations.State =
+    Generations.stateOf(dir, " — build the index first")
 
   /** The id column is CAST TO LONG at the artifact boundary (advice
     * r13): [[delete]]'s touched-bucket digest hashes the del ids as
@@ -221,13 +99,14 @@ object Index {
       itersPq: Int = 2, nBuckets: Int = 8,
       baseDir: Option[String] = None): Unit = {
     ArtifactFiles.requireArtifactName(name)
-    require(64 % m == 0, "subspaces must divide the dimension")
-    val subDim = 64 / m
+    // one width probe serves the code-width guard and the k-means
+    val dim = Similarity.vecDim(embs, vecCol)
+    val subDim = Pq.subDimOf(dim, m)
     import spark.implicits._
 
     val base = baseOf(embs, idCol, vecCol)
     val cents = Similarity.withCNorm(
-      Similarity.kmeans(embs, idCol, vecCol, seedCol, itersIvf))
+      Similarity.kmeansAt(embs, idCol, vecCol, seedCol, itersIvf, dim))
     val postings = Similarity.assignToNearest(base, cents, massign)
       .select(col("cl"), col("id"))
 
@@ -241,7 +120,7 @@ object Index {
 
     // BQ tier: one sign-packed long per vector (32×) — the coarsest
     // serving option, an 8-byte full sweep instead of a probe
-    val bqCodes = base.select(col("id"), Bq.packCol("v", 64).as("code"))
+    val bqCodes = base.select(col("id"), Bq.packCol("v", Pq.Width).as("code"))
 
     val dir = indexDir(baseDir, name)
     def loc(p: String) = s"$dir/$p"
@@ -267,7 +146,7 @@ object Index {
     // locks whichever job touches a partition first.
     val sqCodes = base.join(broadcast(
         Sq.collapseRanges(spark.table(part(name, "sq_ranges")))))
-      .select(col("id"), Sq.codeCol(64, clamp = false).cast("array<int>")
+      .select(col("id"), Sq.codeCol(Pq.Width, clamp = false).cast("array<int>")
         .as("code"))
     Par.jobs(Seq(
       () => Bucketing.writeBucketed(postings, part(name, "postings"), "cl",
@@ -282,55 +161,20 @@ object Index {
       .toDF("massign", "m", "ksub", "nBuckets")
       .write.mode("overwrite").format("parquet")
       .option("path", loc("meta")).saveAsTable(part(name, "meta"))
-    // a rebuild re-establishes the canonical layout: reset every
-    // part's state (an earlier compact/append may have moved one
-    // aside) and sweep superseded generation directories. A rebuild is
-    // a NEW index — it does not extend grace promises of the one it
-    // replaces (retrain cadence is an offline, coordinated act).
-    for (p <- Parts) {
-      writePartState(dir, p, PartState(p, 0L, Seq.empty, 0))
-      sweepStale(dir, p)
-    }
+    // a rebuild is a NEW index: it does not extend grace promises of
+    // the one it replaces (retrain cadence is an offline, coordinated
+    // act), and its commit sweeps every superseded generation
+    Generations.rebuild(dir, Parts.map(p => p -> Seq(p)).toMap)
   }
 
   private val Parts =
     Seq("cents", "codebooks", "sq_ranges", "postings", "codes", "sq_codes",
       "bq_codes", "meta")
-  /** The bucketed (key-clustered) parts and their bucket keys. */
-  /** Bucket id of a bucketed-writer data file — delegated to the one
-    * shared copy of the file contract ([[ArtifactFiles.bucketIdOf]]).
-    */
-  private[ops] def bucketIdOf(fileName: String): Option[Int] =
-    ArtifactFiles.bucketIdOf(fileName)
 
+  /** The bucketed (key-clustered) parts and their bucket keys. */
   private val BucketedParts =
     Seq("postings" -> "cl", "codes" -> "id", "sq_codes" -> "id",
       "bq_codes" -> "id")
-
-  /** Delete every sibling directory of part `p` that is neither its
-    * current state target nor a still-graced retiree (superseded
-    * generations past their window, crashed-attempt leftovers), plus
-    * any crashed staging entries for the part (single-writer contract:
-    * nothing of `p`'s can be legitimately in flight during a commit).
-    */
-  private def sweepStale(dir: String, p: String): Unit = {
-    val st = loadPart(dir, p)
-    val gens = st.retired.map(_._1) :+ st.current
-    // a manifest generation keeps every segment it references alive —
-    // including plain directories of generations that already expired
-    val keep = (gens ++ gens.flatMap(segmentsOf(dir, _))).toSet
-    listDir(java.nio.file.Paths.get(dir))
-      .filter(d => java.nio.file.Files.isDirectory(d) && {
-        val n = d.getFileName.toString
-        (n == p || n.startsWith(s"${p}_")) && !keep.contains(n)
-      })
-      .foreach(deleteRecursively)
-    val staging = java.nio.file.Paths.get(dir, ".staging")
-    if (java.nio.file.Files.exists(staging))
-      listDir(staging)
-        .filter(_.getFileName.toString.startsWith(s"${p}_"))
-        .foreach(deleteRecursively)
-  }
 
   private def readMeta(spark: SparkSession, name: String): Meta = {
     val r = spark.table(part(name, "meta")).collect()(0)
@@ -345,8 +189,8 @@ object Index {
   /** Re-attach an index BUILT BY A PREVIOUS SESSION from its files:
     * recreates the catalog entries (including the bucketing spec —
     * without it the zero-exchange join layout would be lost) over the
-    * existing locations, resolved through the per-part pointer files
-    * (so compacted parts are found, and a crashed compact cannot
+    * existing locations, resolved through the committed state (so
+    * compacted parts are found, and a crashed maintenance run cannot
     * strand the index). The bucket count comes from the persisted
     * meta table — a caller-supplied value could silently declare a
     * false bucket spec and drop join candidates. No data is read or
@@ -356,22 +200,25 @@ object Index {
   def register(spark: SparkSession, name: String, baseDir: String): Unit = {
     ArtifactFiles.requireArtifactName(name)
     val dir = s"$baseDir/$name"
-    def loc(p: String): String = s"$dir/${readPointer(dir, p)}"
-    for (p <- Seq("cents", "codebooks", "sq_ranges", "meta")) {
-      spark.sql(
-        s"DROP TABLE IF EXISTS ${ArtifactFiles.ident(part(name, p))}")
-      spark.sql(
-        s"""CREATE TABLE ${ArtifactFiles.ident(part(name, p))} USING parquet
-           |LOCATION '${ArtifactFiles.sqlLit(loc(p))}'""".stripMargin)
-    }
-    val nBuckets = readMeta(spark, name).nBuckets
-    for ((p, key) <- BucketedParts) {
-      val cur = readPointer(dir, p)
-      if (hasManifest(dir, cur))
-        attachView(spark, name, p, dir, segmentsOf(dir, cur))
-      else attachBucketed(spark, name, p, key, nBuckets, s"$dir/$cur")
-    }
+    val st = stateOf(dir)
+    for (p <- Seq("cents", "codebooks", "sq_ranges", "meta"))
+      Generations.attachBucketed(spark, part(name, p), s"$dir/${st.dir(p)}")
+    attachParts(spark, name, dir, st, readMeta(spark, name).nBuckets)
   }
+
+  /** Re-attach the bucketed parts: a one-directory part as a bucketed
+    * table, a manifest-mode segment chain as a union view
+    * ([[attachView]]).
+    */
+  private def attachParts(spark: SparkSession, name: String, dir: String,
+      st: Generations.State, nBuckets: Int): Unit =
+    for ((p, key) <- BucketedParts) {
+      val ds = st.current(p)
+      if (ds.size == 1)
+        Generations.attachBucketed(spark, part(name, p), s"$dir/${ds.head}",
+          key, nBuckets)
+      else attachView(spark, name, p, dir, ds)
+    }
 
   /** (postings, codes, sq_codes, bq_codes) of `embs` encoded at the
     * STORED centroids, codebooks and ranges — the no-training encode
@@ -386,7 +233,7 @@ object Index {
       idCol: String, vecCol: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val meta = readMeta(spark, name)
-    val subDim = 64 / meta.m
+    val subDim = Pq.Width / meta.m
     val base = baseOf(embs, idCol, vecCol)
     val postings = Similarity.assignToNearest(base,
         spark.table(part(name, "cents")), meta.massign)
@@ -396,9 +243,9 @@ object Index {
       spark.table(part(name, "codebooks")))
     val sqCodes = base.join(broadcast(
         Sq.collapseRanges(spark.table(part(name, "sq_ranges")))))
-      .select(col("id"), Sq.codeCol(64, clamp = true).cast("array<int>")
+      .select(col("id"), Sq.codeCol(Pq.Width, clamp = true).cast("array<int>")
         .as("code"))
-    val bqCodes = base.select(col("id"), Bq.packCol("v", 64).as("code"))
+    val bqCodes = base.select(col("id"), Bq.packCol("v", Pq.Width).as("code"))
     (postings, codes, sqCodes, bqCodes)
   }
 
@@ -432,52 +279,27 @@ object Index {
         meta.nBuckets)))
   }
 
-  /** THE append path: atomic visibility and reader snapshots — the
-    * delta is published as a fresh GENERATION directory committed
-    * through the part state file, never by dripping files into the
-    * live directory (the in-place drip survives only as the
-    * package-private [[appendInPlace]] spec fixture):
+  /** THE append path: the encoded delta is bucket-written to
+    * `.staging`, and each part's fresh generation — hard links to its
+    * committed files plus the staged ones, metadata only — is
+    * committed for all four parts in ONE [[Generations]] swap (the
+    * in-place drip survives only as the package-private
+    * [[appendInPlace]] spec fixture). A crash during the delta writes
+    * leaves no trace in the served index (IndexSpec pins it), a
+    * graced cross-session reader keeps its file set for
+    * `graceCommits` further commits, and an at-least-once replay
+    * re-commits a fresh generation whose duplicate rows the
+    * duplicate-tolerant search and [[compact]] absorb.
     *
-    *  1. the encoded delta is bucket-written to `.staging/<uuid>`;
-    *  2. a new generation directory is populated with HARD LINKS to
-    *     every committed file of the current generation plus the
-    *     staged delta files (metadata-only on a posix store — this
-    *     directory IS a manifest of immutable files, materialized as
-    *     links. Data is never copied: parquet files are immutable once
-    *     written). With `manifestCommit = true` the generation is
-    *     instead ONE `_manifest.json` naming the segment directories —
-    *     the object-store-safe shape (S3-style stores have no links
-    *     and copy on rename), exactly the Delta/Iceberg snapshot: the
-    *     delta writes straight to its segment dir and the commit
-    *     writes one small file, at the cost of attaching the part as a
-    *     union view (no bucket spec declarable over multiple dirs —
-    *     [[attachView]]); [[compact]] collapses the chain back to one
-    *     plain bucketed directory. Search results are identical either
-    *     way (IndexSpec proves byte-identity);
-    *  3. one atomic state-file swap makes the generation current
-    *     ([[commitPart]]), retiring the previous one under the grace
-    *     window.
-    *
-    * What this buys over the in-place drip (whose delta files appear
-    * one by one in the live directory):
-    *  - a crash during the phase-1 delta writes leaves NO trace in
-    *    the served index (the state files still name the old
-    *    generations; staged orphans are swept on the next commit —
-    *    IndexSpec pins this) — with in-place append a half-landed
-    *    delta is visible immediately. A crash inside phase 2 (four
-    *    metadata-only state swaps, ~ms) can commit a prefix of the
-    *    parts; candidates probing the new postings simply lack code
-    *    rows until the replayed append re-commits, so the window
-    *    degrades to "delta not yet visible", never to corruption;
-    *  - a cross-session reader that resolved [[register]] against a
-    *    recent state keeps a consistent file set for `graceCommits`
-    *    further commits — with in-place append there is no snapshot
-    *    to hold;
-    *  - at-least-once maintenance replays ([[
-    *    graft.streaming.IndexStream.maintain]]) re-commit a fresh
-    *    generation; the duplicate-tolerant search plus [[compact]]
-    *    (which now also commits generations) reclaim storage on the
-    *    same cadence as before.
+    * With `manifestCommit = true` no file is linked or moved: the
+    * delta writes straight into its own segment directory and the
+    * commit appends that segment to the part's directory list — the
+    * object-store-safe shape (S3-style stores have no links and copy
+    * on rename), exactly the Delta/Iceberg snapshot. The part then
+    * attaches as a union view (no bucket spec is declarable over
+    * several directories — [[attachView]]) until [[compact]]
+    * collapses the chain; search results are identical either way
+    * (IndexSpec proves byte-identity).
     *
     * Cost stays ∝ |delta| + O(#files) link metadata, never ∝ corpus
     * bytes. Single writer, like all index maintenance.
@@ -488,87 +310,50 @@ object Index {
     val meta = readMeta(spark, name)
     val (postings, codes, sqCodes, bqCodes) =
       encode(spark, name, newEmbs, idCol, vecCol)
-    val dir = indexDirOf(spark, name)
+    val dir = Generations.rootOf(spark, part(name, "meta"))
+    val st = stateOf(dir)
+    val u = Generations.uid()
     val parts = Seq(("postings", "cl", postings), ("codes", "id", codes),
-        ("sq_codes", "id", sqCodes), ("bq_codes", "id", bqCodes))
-      .map { case (p, key, df) =>
-        (p, key, df, loadPart(dir, p),
-          java.util.UUID.randomUUID().toString.take(8))
-      }
-    // Phase 1, CONCURRENT: the four delta bucket-writes — the only
-    // steps that move data ([[Par.jobs]]; distinct stage tables,
-    // distinct target dirs). Staged files are invisible to readers
-    // until phase 2 commits, so concurrency cannot widen the
-    // visibility window. Bucket-writing goes through a throwaway
-    // EXTERNAL table (the only way to bucketBy-write); the entry is
-    // dropped, the files kept.
-    Par.jobs(parts.map { case (p, key, df, _, uid) => () =>
-      val stageTbl = s"${part(name, p)}_stage_$uid"
-      val target =
-        if (manifestCommit) s"$dir/${p}_s$uid" // straight to its segment dir
-        else java.nio.file.Paths.get(dir, ".staging", s"${p}_$uid").toString
-      Bucketing.writeBucketed(df, stageTbl, key, meta.nBuckets, Some(target))
-      spark.sql(s"DROP TABLE $stageTbl")
+      ("sq_codes", "id", sqCodes), ("bq_codes", "id", bqCodes))
+    def target(p: String) =
+      if (manifestCommit) s"${p}_s$u" else s"${Generations.Staging}/${p}_$u"
+    // the four delta bucket-writes run CONCURRENTLY (distinct stage
+    // tables and target dirs, all invisible until the commit)
+    Par.jobs(parts.map { case (p, key, df) => () =>
+      Bucketing.stageBucketed(df, s"${part(name, p)}_stage_$u", key,
+        meta.nBuckets, s"$dir/${target(p)}")
     })
-    // Phase 2, SEQUENTIAL: metadata-only publication + the atomic
-    // per-part state swaps (cheap — links/manifests and catalog DDL).
-    for ((p, key, _, st, uid) <- parts) {
-      val newName = s"${p}_g${st.gen + 1}_$uid"
-      if (manifestCommit) {
-        // object-store path: the delta already sits in its immutable
-        // segment directory (no rename — renames copy on S3-style
-        // stores); the generation is one small manifest naming the
-        // live segment set. No links, no data copied or moved.
-        val segments = segmentsOf(dir, st.current) :+ s"${p}_s$uid"
-        writeManifest(dir, newName, segments)
-        attachView(spark, name, p, dir, segments)
-      } else {
-        val staging = java.nio.file.Paths.get(dir, ".staging", s"${p}_$uid")
-        val newDir = java.nio.file.Paths.get(dir, newName)
-        java.nio.file.Files.createDirectories(newDir)
-        linkInto(newDir, java.nio.file.Paths.get(dir, st.current))
-        linkInto(newDir, staging)
-        attachBucketed(spark, name, p, key, meta.nBuckets, s"$dir/$newName")
-      }
-      commitPart(dir, p, newName, graceCommits)
-    }
+    val next =
+      if (manifestCommit)
+        Generations.commit(dir, st, parts.map { case (p, _, _) =>
+          p -> (st.current(p) :+ target(p)) }.toMap,
+          graceCommits = graceCommits)
+      else
+        Generations.commitFiles(dir, st, parts.map { case (p, _, _) =>
+          p -> (Generations.filesOf(dir, st.current(p)) ++
+            Generations.dataFiles(java.nio.file.Paths.get(dir, target(p))))
+        }.toMap, graceCommits)
+    attachParts(spark, name, dir, next, meta.nBuckets)
   }
 
-  /** The index's directory on disk, resolved from the (file-backed)
-    * meta table — never caller-supplied, so maintenance always acts on
-    * the directory the catalog actually serves.
-    */
   /** Operational snapshot of the artifact — the
     * [[graft.streaming.StateTable.describe]] analog for the index:
-    * one row per part with its committed state (current generation
-    * name, gen counter, grace policy, still-graced retiree count),
-    * its resolved segment count (a manifest-committed chain lists >1
-    * until [[compact]] collapses it) and the file count/bytes of the
-    * CURRENT generation's data, straight from the filesystem — no
-    * data read, no job. The numbers an operator checks before/after
-    * append chains, compact, delete, and grace tuning.
+    * one row per part with its committed directories, the gen counter,
+    * grace policy and the part's still-graced retirees, its segment
+    * count (a manifest-committed chain lists >1 until [[compact]]
+    * collapses it) and the file count/bytes of the CURRENT data,
+    * straight from the filesystem — no data read, no job.
     */
   def describe(spark: SparkSession, name: String): DataFrame = {
     import spark.implicits._
-    val dir = indexDirOf(spark, name)
+    val dir = Generations.rootOf(spark, part(name, "meta"))
+    val st = stateOf(dir)
     val rows = Parts.map { p =>
-      val st = loadPart(dir, p)
-      val segs = segmentsOf(dir, st.current)
-      val files = segs.flatMap { s =>
-        val d = java.nio.file.Paths.get(dir, s)
-        if (!java.nio.file.Files.isDirectory(d)) Seq.empty
-        else {
-          val w = java.nio.file.Files.walk(d)
-          try w.iterator().asScala.filter { f =>
-            val n = f.getFileName.toString
-            java.nio.file.Files.isRegularFile(f) &&
-              !n.startsWith("_") && !n.startsWith(".")
-          }.toVector finally w.close()
-        }
-      }
-      (p, st.current, st.gen, st.grace, st.retired.size.toLong,
-        segs.size.toLong, files.size.toLong,
-        files.map(java.nio.file.Files.size(_)).sum)
+      val ds = st.current(p)
+      val files = Generations.filesOf(dir, ds)
+      (p, ds.mkString(","), st.gen, st.grace,
+        st.retired.count(_._2.contains(p)).toLong, ds.size.toLong,
+        files.size.toLong, files.map(java.nio.file.Files.size(_)).sum)
     }
     rows.toDF("part", "current", "gen", "grace", "n_retired",
       "n_segments", "n_files", "bytes")
@@ -587,82 +372,19 @@ object Index {
     */
   def maybeCompact(spark: SparkSession, name: String,
       maxFilesPerPart: Int): Boolean = {
-    val dir = indexDirOf(spark, name)
+    val dir = Generations.rootOf(spark, part(name, "meta"))
+    val st = stateOf(dir)
     // clamp to the post-compact floor (compact leaves one file per
     // bucket): an unsatisfiable threshold would otherwise re-run a
     // full compact after EVERY batch (review r15)
     val threshold = math.max(maxFilesPerPart, readMeta(spark, name).nBuckets)
     val over = BucketedParts.exists { case (p, _) =>
-      val n = segmentsOf(dir, loadPart(dir, p).current).map { s =>
-        val d = java.nio.file.Paths.get(dir, s)
-        if (!java.nio.file.Files.isDirectory(d)) 0
-        else listDir(d).count { f =>
-          val fn = f.getFileName.toString
-          java.nio.file.Files.isRegularFile(f) &&
-            !fn.startsWith("_") && !fn.startsWith(".")
-        }
-      }.sum
-      n > threshold
-    }
+      Generations.filesOf(dir, st.current(p)).size > threshold }
     if (over) compact(spark, name)
     over
   }
 
-  private def indexDirOf(spark: SparkSession, name: String): String = {
-    val scan = spark.table(part(name, "meta")).queryExecution.analyzed.collectFirst {
-      case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        r.relation.asInstanceOf[
-          org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-    }.getOrElse(sys.error(s"${part(name, "meta")} is not file-backed"))
-    java.nio.file.Paths.get(scan.location.rootPaths.head.toUri.getPath)
-      .getParent.toString
-  }
-
-  /** Hard-link every data file of `srcDir` into `dst` (fallback: copy,
-    * for stores without link support). Parquet files are immutable
-    * once committed, so links are safe shared references.
-    */
-  private def linkInto(dst: java.nio.file.Path, srcDir: java.nio.file.Path): Unit =
-    listDir(srcDir)
-      .filter { f =>
-        val n = f.getFileName.toString
-        java.nio.file.Files.isRegularFile(f) &&
-          !n.startsWith("_") && !n.startsWith(".")
-      }
-      .foreach { f =>
-        val t = dst.resolve(f.getFileName.toString)
-        try java.nio.file.Files.createLink(t, f)
-        catch {
-          case _: UnsupportedOperationException => java.nio.file.Files.copy(f, t)
-        }
-      }
-
-  /** Drop the part's catalog entry whatever it is — bucketed table
-    * (link-mode generations, build output) or view (manifest-mode
-    * generations). Spark rejects DROP TABLE on a view and vice versa.
-    */
-  private def dropEntry(spark: SparkSession, tbl: String): Unit =
-    if (spark.catalog.tableExists(tbl)) {
-      if (spark.catalog.getTable(tbl).tableType == "VIEW")
-        spark.sql(s"DROP VIEW $tbl")
-      else spark.sql(s"DROP TABLE $tbl")
-    }
-
-  /** (Re-)create the catalog entry of a bucketed part over `location`
-    * (schema recovered from the files' own footer — metadata-only).
-    */
-  private def attachBucketed(spark: SparkSession, name: String, p: String,
-      key: String, nBuckets: Int, location: String): Unit = {
-    dropEntry(spark, part(name, p))
-    val cols = spark.read.parquet(location).schema.toDDL
-    spark.sql(
-      s"""CREATE TABLE ${ArtifactFiles.ident(part(name, p))} ($cols)
-         |USING parquet
-         |CLUSTERED BY ($key) SORTED BY ($key) INTO $nBuckets BUCKETS
-         |LOCATION '${ArtifactFiles.sqlLit(location)}'""".stripMargin)
-  }
-
-  /** Catalog entry for a MANIFEST generation: a view unioning
+  /** Catalog entry for a MANIFEST-mode part: a view unioning
     * path-scans of the segment directories. The bucket spec is not
     * declarable on a multi-directory scan (Spark's bucketed tables are
     * single-location), so manifest-mode parts trade the zero-exchange
@@ -673,7 +395,7 @@ object Index {
     */
   private def attachView(spark: SparkSession, name: String, p: String,
       dir: String, segments: Seq[String]): Unit = {
-    dropEntry(spark, part(name, p))
+    Generations.dropEntry(spark, part(name, p))
     val legs = segments
       .map(s => s"SELECT * FROM parquet.`$dir/$s`")
       .mkString(" UNION ALL ")
@@ -683,51 +405,41 @@ object Index {
   /** Offline compaction for an append-heavy index: every [[append]]
     * adds one file per touched bucket, so after many deltas the
     * postings/codes tables hold (appends × buckets) small files.
-    * Rewrites each as ONE file per bucket into a fresh sibling
-    * directory (dropping exact-duplicate rows — both tables are sets,
-    * so the only source of duplicates is an at-least-once maintenance
-    * replay, and removing them reclaims that storage), re-points the
-    * catalog entry AND the part's pointer file, then sweeps every
-    * non-current sibling — search output unchanged; file count
-    * re-pinned to the bucket count. Crash-safe at every step: before
-    * the pointer move the old directory is untouched and pointed; a
-    * crash after it leaves an orphan sibling that the sweep of the
-    * NEXT compact (or rebuild) removes, with the pointer authoritative
-    * throughout.
+    * Rewrites each bucketed part as ONE file per bucket into a fresh
+    * directory (dropping exact-duplicate rows — the parts are sets, so
+    * the only source of duplicates is an at-least-once maintenance
+    * replay) and commits all four in one [[Generations]] swap — search
+    * output unchanged; file count re-pinned to the bucket count; a
+    * manifest-mode chain collapses back to one plain bucketed
+    * directory.
     */
   def compact(spark: SparkSession, name: String,
       graceCommits: Int = 0): Unit = {
-    val dir = indexDirOf(spark, name)
+    val dir = Generations.rootOf(spark, part(name, "meta"))
+    val st = stateOf(dir)
     val nBuckets = readMeta(spark, name).nBuckets
-    for ((p, key) <- BucketedParts) {
-      val tbl = part(name, p)
-      // resolve the current data directories through the state file,
-      // NOT the catalog entry: a manifest-mode part is a view over
-      // several segment dirs, and compact is what collapses that
-      // chain back to one plain bucketed directory
-      val segs = segmentsOf(dir, loadPart(dir, p).current)
-        .map(s => s"$dir/$s")
-      val newName = s"${p}_c${java.util.UUID.randomUUID().toString.take(8)}"
-      // read the OLD files by path (overwriting a table being read from
-      // is rejected by identity — the path read sidesteps it, and the
-      // write targets a fresh directory anyway); repartition on the
-      // bucket key (same murmur3 hash family as bucketBy) so each
-      // bucket's rows land wholly in one task → one file per bucket
-      dropEntry(spark, tbl)
-      Bucketing.writeBucketed(
-        spark.read.parquet(segs: _*).distinct()
-          .repartition(nBuckets, col(key)),
-        tbl, key, nBuckets, Some(s"$dir/$newName"))
-      commitPart(dir, p, newName, graceCommits)
-    }
+    val u = Generations.uid()
+    // read the committed files by PATH; repartition on the bucket key
+    // (same murmur3 hash family as bucketBy) so each bucket's rows
+    // land wholly in one task → one file per bucket
+    Par.jobs(BucketedParts.map { case (p, key) => () =>
+      Bucketing.stageBucketed(
+        spark.read.parquet(st.current(p).map(d => s"$dir/$d"): _*)
+          .distinct().repartition(nBuckets, col(key)),
+        s"${part(name, p)}_stage_$u", key, nBuckets, s"$dir/${p}_c$u")
+    })
+    val next = Generations.commit(dir, st,
+      BucketedParts.map { case (p, _) => p -> Seq(s"${p}_c$u") }.toMap,
+      graceCommits = graceCommits)
+    attachParts(spark, name, dir, next, nBuckets)
   }
 
   /** Takedown maintenance — remove `delIds` from every encoded part
     * (the right-to-be-forgotten half of the index lifecycle, next to
     * [[append]]/[[appendCommitted]]/[[compact]]): each bucketed part
     * is rewritten minus the deleted ids into a fresh generation
-    * directory and committed through the same atomic per-part state
-    * swap as every other maintenance op — a crash mid-delete leaves
+    * directory and committed through the same [[Generations]] swap
+    * as every other maintenance op — a crash mid-delete leaves
     * the served index untouched, and graced readers keep their
     * snapshot (which is a FEATURE for audits and a RETENTION BOUND
     * for takedowns: set `graceCommits = 0`, the default, when the
@@ -755,8 +467,8 @@ object Index {
     * it is bucketed by `cl`, and deleted ids scatter across cluster
     * buckets (finding which would read all postings anyway). The four
     * part rewrites land concurrently ([[Par.jobs]]); reads resolve
-    * through the state file, so link-mode AND manifest-mode parts
-    * both collapse to a plain bucketed dir.
+    * through the committed state, so link-mode AND manifest-mode
+    * parts both collapse to a plain bucketed dir.
     */
   def delete(spark: SparkSession, name: String, delIds: DataFrame,
       idCol: String, graceCommits: Int = 0): Unit =
@@ -798,20 +510,17 @@ object Index {
 
   /** The one removal+ingest commit path behind [[upsert]] AND
     * [[delete]] (delete is its empty-ingest specialization — one
-    * removal path, the [[TextIndex.upsertImpl]] discipline). Phase 1
-    * stages everything concurrently per part: the bucket-pruned
-    * removal rewrite AND the encoded ingest delta land under
-    * `.staging`, kept files hard-link — readers still serve the old
-    * generations. Phase 2 commits each part through its atomic state
-    * swap; a crash between part commits degrades to "delta not yet
-    * visible on the later parts" (the [[appendCommitted]] window),
-    * never to a half-applied removal within a part.
+    * removal path, the [[TextIndex.upsertImpl]] discipline): the
+    * bucket-pruned removal rewrites AND the encoded ingest delta stage
+    * concurrently per part, kept files hard-link, and all four parts
+    * commit in ONE [[Generations]] swap — never a half-applied batch
+    * across parts.
     */
   private def upsertImpl(spark: SparkSession, name: String,
       ingest: Option[(DataFrame, String, String)],
       delIds: Option[DataFrame], delCol: String,
       graceCommits: Int): Unit = {
-    val dir = indexDirOf(spark, name)
+    val dir = Generations.rootOf(spark, part(name, "meta"))
     val meta = readMeta(spark, name)
     // removal set: every ingested id leaves first (an upsert of an
     // indexed id must REPLACE it), plus the explicit tombstones
@@ -878,67 +587,35 @@ object Index {
         Map("postings" -> po, "codes" -> co, "sq_codes" -> sq,
           "bq_codes" -> bq)
       }.getOrElse(Map.empty)
-    val parts = BucketedParts.map { case (p, key) =>
-      (p, key, s"${p}_u${java.util.UUID.randomUUID().toString.take(8)}")
-    }
-    // phase 1, CONCURRENT: per-part removal rewrites + ingest delta
-    // stages into fresh generation dirs (distinct stage tables and
-    // target dirs; readers still serve the old generations). id-keyed
-    // parts rewrite ONLY the files of touched buckets and link the
-    // rest; postings rewrites fully.
-    Par.jobs(parts.map { case (p, key, newName) => () =>
-      val segDirs = segmentsOf(dir, loadPart(dir, p).current)
-        .map(s => java.nio.file.Paths.get(dir, s))
-      val files = segDirs.flatMap(listDir).filter { f =>
-        val n = f.getFileName.toString
-        java.nio.file.Files.isRegularFile(f) &&
-          !n.startsWith("_") && !n.startsWith(".")
-      }
+    val st = stateOf(dir)
+    val u = Generations.uid()
+    // CONCURRENT per-part staging (distinct stage tables and dirs;
+    // readers still serve the old generation): id-keyed parts rewrite
+    // ONLY the files of touched buckets and keep the rest; postings
+    // rewrites fully
+    val staged = Par.collect(BucketedParts.map { case (p, key) => () =>
+      val files = Generations.filesOf(dir, st.current(p))
       // a file with no parseable bucket tag is conservatively treated
       // as touched (rewritten) — never silently kept
       val (rewrite, keep) =
         if (key != "id") (files, Seq.empty[java.nio.file.Path])
-        else files.partition(f =>
-          bucketIdOf(f.getFileName.toString).forall(touched.contains))
-      val newDir = java.nio.file.Paths.get(dir, newName)
-      java.nio.file.Files.createDirectories(newDir)
-      if (rewrite.nonEmpty) {
-        val stageTbl = s"${part(name, p)}_stage_${newName.takeRight(8)}"
-        val stage = java.nio.file.Paths.get(dir, ".staging", newName)
-        Bucketing.writeBucketed(
-          spark.read.parquet(rewrite.map(_.toString): _*)
-            .join(del, col("id") === col("__del_id"), "left_anti")
-            .repartition(meta.nBuckets, col(key)),
-          stageTbl, key, meta.nBuckets, Some(stage.toString))
-        spark.sql(s"DROP TABLE $stageTbl")
-        linkInto(newDir, stage)
-      }
-      // the ingest delta: its own staged bucket-write, linked into the
-      // SAME generation dir — removal and ingest publish in one swap
-      deltaOf.get(p).foreach { df =>
-        val stageTbl = s"${part(name, p)}_stage_i${newName.takeRight(8)}"
-        val stage = java.nio.file.Paths.get(dir, ".staging",
-          s"${newName}_delta")
-        Bucketing.writeBucketed(df, stageTbl, key, meta.nBuckets,
-          Some(stage.toString))
-        spark.sql(s"DROP TABLE $stageTbl")
-        linkInto(newDir, stage)
-      }
-      keep.foreach { f =>
-        val t = newDir.resolve(f.getFileName.toString)
-        try java.nio.file.Files.createLink(t, f)
-        catch {
-          case _: UnsupportedOperationException =>
-            java.nio.file.Files.copy(f, t)
-        }
-      }
+        else files.partition(f => ArtifactFiles
+          .bucketIdOf(f.getFileName.toString).forall(touched.contains))
+      def stage(df: DataFrame, tag: String): Seq[java.nio.file.Path] =
+        Bucketing.stageBucketed(df, s"${part(name, p)}_stage_$tag$u", key,
+          meta.nBuckets, s"$dir/${Generations.Staging}/${p}_$tag$u")
+      val rewritten =
+        if (rewrite.isEmpty) Nil
+        else stage(spark.read.parquet(rewrite.map(_.toString): _*)
+          .join(del, col("id") === col("__del_id"), "left_anti")
+          .repartition(meta.nBuckets, col(key)), "r")
+      // the ingest delta joins the SAME generation — removal and
+      // ingest publish in one swap
+      p -> (keep ++ rewritten ++ deltaOf.get(p).toSeq.flatMap(stage(_, "i")))
     })
-    // phase 2, SEQUENTIAL: re-attach + atomic per-part commits (the
-    // staged rewrite dirs are swept by commitPart once linked)
-    for ((p, key, newName) <- parts) {
-      attachBucketed(spark, name, p, key, meta.nBuckets, s"$dir/$newName")
-      commitPart(dir, p, newName, graceCommits)
-    }
+    attachParts(spark, name, dir,
+      Generations.commitFiles(dir, st, staged.toMap, graceCommits),
+      meta.nBuckets)
     } finally { del.unpersist(); ingestBase.foreach(_.unpersist()) }
   }
 
@@ -1059,7 +736,7 @@ object Index {
         .join(sqCodes, "id")
         .dropDuplicates("id")
         .withColumn("code", col("code").cast("array<double>"))
-        .join(broadcast(ranges)), 64)
+        .join(broadcast(ranges)), Pq.Width)
     val scored = pairs.join(candCodes, "id")
       .join(broadcast(queries), "qid")
     Sq.cutAndRerank(base, queries, scored, k, rerank)
@@ -1107,7 +784,7 @@ object Index {
   def searchQueries(spark: SparkSession, name: String, base: DataFrame,
       queries: DataFrame, k: Int, nprobe: Int, rerank: Int): DataFrame = {
     val meta = readMeta(spark, name)
-    val subDim = 64 / meta.m
+    val subDim = Pq.Width / meta.m
     val cents = spark.table(part(name, "cents"))
     val cb = spark.table(part(name, "codebooks"))
     val postings = spark.table(part(name, "postings"))

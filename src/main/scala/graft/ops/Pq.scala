@@ -30,6 +30,26 @@ import org.apache.spark.sql.functions._
   */
 object Pq {
 
+  /** The vector width the persisted PQ/SQ/BQ codes are built for (BQ
+    * packs one 64-bit word per vector).
+    */
+  private[ops] val Width = 64
+
+  /** The subspace width for `m` subspaces of `dim`-wide vectors —
+    * failing loud, naming the width, unless `dim` is [[Width]] and the
+    * m slices tile it exactly ([[tallOf]] would otherwise slice short
+    * or past the end, and the SQ/BQ codes would hit an ANSI
+    * `element_at` error or drop dimensions).
+    */
+  private[ops] def subDimOf(dim: Int, m: Int): Int = {
+    require(dim == Width,
+      s"vector width $dim: the PQ/SQ/BQ codes are built for $Width-dim vectors")
+    val subDim = Width / m
+    require(m * subDim == Width,
+      s"m=$m subspaces of width $subDim do not tile the $Width-dim vectors")
+    subDim
+  }
+
   /** In-row slice of the m-th subspace (1-based slice). */
   private[ops] def sub(v: Column, m: Int, subDim: Int): Column =
     slice(v, m * subDim + 1, subDim)
@@ -174,9 +194,9 @@ object Pq {
       codes: DataFrame, lut: DataFrame)
 
   private def build(embs: DataFrame, idCol: String, vecCol: String,
-      queryPred: Column, m: Int, ksub: Int, iters: Int): PqParts = {
-    require(64 % m == 0, "subspaces must divide the dimension")
-    val subDim = 64 / m
+      queryPred: Column, m: Int, ksub: Int, iters: Int,
+      dim: Int): PqParts = {
+    val subDim = subDimOf(dim, m)
     val base = embs.select(col(idCol).as("id"),
         Vectors.toDouble(col(vecCol)).as("v"))
       .withColumn("nrm", Vectors.norm(col("v")))
@@ -231,7 +251,8 @@ object Pq {
   def topK(embs: DataFrame, idCol: String, vecCol: String,
       queryPred: Column, k: Int, m: Int, ksub: Int, iters: Int,
       rerank: Int): DataFrame = {
-    val p = build(embs, idCol, vecCol, queryPred, m, ksub, iters)
+    val p = build(embs, idCol, vecCol, queryPred, m, ksub, iters,
+      Similarity.vecDim(embs, vecCol))
     // ADC over the WHOLE corpus: integer parts sum associatively
     val approx = p.codes.join(broadcast(p.lut), Seq("m", "cl"))
       .groupBy(col("qid"), col("id"))
@@ -252,9 +273,11 @@ object Pq {
       seedCol: String, queryPred: Column, k: Int, nprobe: Int,
       itersIvf: Int, massign: Int, m: Int, ksub: Int, itersPq: Int,
       rerank: Int): DataFrame = {
-    val p = build(embs, idCol, vecCol, queryPred, m, ksub, itersPq)
+    // one width probe serves both the PQ guard and the IVF training
+    val dim = Similarity.vecDim(embs, vecCol)
+    val p = build(embs, idCol, vecCol, queryPred, m, ksub, itersPq, dim)
     val cents = Similarity.withCNorm(
-      Similarity.kmeans(embs, idCol, vecCol, seedCol, itersIvf))
+      Similarity.kmeansAt(embs, idCol, vecCol, seedCol, itersIvf, dim))
     val assigned = Similarity.assignToNearest(p.base, cents, massign)
 
     // queries → nprobe nearest centroid lists (qid, cl)
@@ -356,7 +379,7 @@ object Pq {
   private def prefixSql(id: String, vec: String, table: String,
       queryPredSql: String, k: Int, m: Int, ksub: Int, iters: Int,
       rerank: Int): String = {
-    val subDim = 64 / m
+    val subDim = Width / m
     val subspaces = (0 until m).map(subspaceSql(_, subDim, ksub, iters))
       .mkString(",\n")
     val codesTall = (0 until m).map(mi => s"SELECT * FROM codes_$mi")
@@ -432,7 +455,7 @@ object Pq {
       queryPredSql: String, k: Int, nprobe: Int, itersIvf: Int,
       massign: Int, m: Int, ksub: Int, itersPq: Int, rerank: Int,
       trainPredSql: String = "true", candPredSql: String = "true"): String = {
-    val subDim = 64 / m
+    val subDim = Width / m
     val subspaces = (0 until m)
       .map(subspaceSql(_, subDim, ksub, itersPq, trainPredSql))
       .mkString(",\n")
@@ -444,7 +467,7 @@ object Pq {
          |FROM q CROSS JOIN cents${itersPq}_$mi c""".stripMargin
     }.mkString(" UNION ALL ")
     s"""${Similarity.ivfTrainedPrefixSql(id, vec, seed, table, queryPredSql,
-          k, itersIvf, 64, massign, trainPredSql)},
+          k, itersIvf, Width, massign, trainPredSql)},
        |$subspaces,
        |codes AS ($codesTall),
        |lut AS ($lutTall),

@@ -252,14 +252,22 @@ object Similarity {
         .as("cent"))
   }
 
-  /** Vector width, read once from the data (one one-row job). Every
-    * corpus these operators see is fixed-width; the ANSI `element_at`
-    * in [[centroidsExact]] fails loud if a row is narrower than the
-    * sampled width rather than silently null-padding.
+  /** Vector width, probed once from the data (one aggregate job).
+    * Every corpus these operators see must be fixed-width: a ragged
+    * one fails here naming both widths, rather than having the
+    * centroids silently truncate the wider rows to a sampled narrower
+    * width. An empty corpus probes as width 1.
     */
-  private[ops] def vecDim(embs: DataFrame, vecCol: String): Int =
-    embs.select(size(col(vecCol)).as("d")).head(1)
-      .headOption.map(_.getInt(0)).getOrElse(1)
+  private[ops] def vecDim(embs: DataFrame, vecCol: String): Int = {
+    val r = embs.agg(min(size(col(vecCol))), max(size(col(vecCol)))).head()
+    if (r.isNullAt(0)) 1
+    else {
+      require(r.getInt(0) == r.getInt(1),
+        s"vector column $vecCol is ragged: widths ${r.getInt(0)} and " +
+          s"${r.getInt(1)} — every vector must have the same width")
+      r.getInt(0)
+    }
+  }
 
   def centroidsExactSql(assign: String, dim: Int): String =
     s"""SELECT cl, list(cx ORDER BY d) AS cent FROM (
@@ -276,10 +284,14 @@ object Similarity {
     * the oracle unrolls the SAME rounds and matches bit-for-bit.
     */
   def kmeans(embs: DataFrame, idCol: String, vecCol: String,
-      seedCol: String, iters: Int): DataFrame = {
+      seedCol: String, iters: Int): DataFrame =
+    kmeansAt(embs, idCol, vecCol, seedCol, iters, vecDim(embs, vecCol))
+
+  /** [[kmeans]] at an already-probed width `dim` ([[vecDim]]). */
+  private[ops] def kmeansAt(embs: DataFrame, idCol: String, vecCol: String,
+      seedCol: String, iters: Int, dim: Int): DataFrame = {
     val spark = embs.sparkSession
     val base = baseOf(embs, idCol, vecCol)
-    val dim = vecDim(embs, vecCol)
     val seed = centroidsExact(
       embs.select(col(seedCol).as("cl"), Vectors.toDouble(col(vecCol)).as("v")),
       dim)

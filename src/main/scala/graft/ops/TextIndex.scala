@@ -1,7 +1,5 @@
 package graft.ops
 
-import scala.collection.JavaConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -46,34 +44,18 @@ import org.apache.spark.sql.functions._
   * `q_text_bm25`'s oracle verbatim). Contrast [[Index.append]], which
   * holds trained centroids fixed because k-means is not additive.
   *
-  * == The commit protocol: ONE atomic swap across all four tables ==
+  * == The commit: ONE generation across all four tables ==
   *
   * Exactness only holds for states where the four tables agree —
   * postings landed without their stats row would serve a wrong idf,
   * dl landed without postings would make a replay's known-id guard
   * hide the docs forever (advice r13). So every maintenance op
-  * ([[append]], [[delete]], [[compact]]) commits through a single
-  * state file `index.current` naming ALL FOUR current generation
-  * directories (the [[Index.PartState]] machinery, collapsed to one
-  * file because TextIndex maintenance always touches the four tables
-  * together):
-  *
-  *  1. the op's delta/rewrite files land under `.staging/` and the
-  *     fresh generation directories are populated (hard links of the
-  *     current generation's files plus the staged ones — metadata
-  *     only; parquet files are immutable);
-  *  2. one atomic tmp-write + move of `index.current` makes the new
-  *     generation current FOR ALL FOUR TABLES AT ONCE;
-  *  3. the per-batch commit marker is written (see below), the
-  *     catalog entries re-attach, superseded generations are swept.
-  *
-  * A crash before step 2 leaves the OLD index served, fully
-  * consistent (orphans are swept by the next commit or [[build]]); a
-  * crash after step 2 has already committed everything, including
-  * the stats/meta corrections — there is no window where the four
-  * tables disagree. [[register]] resolves generations through the
-  * state file, so a crashed maintenance run can never strand a
-  * cross-session reader on `require(one live dir)`.
+  * ([[append]], [[delete]], [[upsert]], [[compact]]) stages its
+  * delta/rewrite files, then commits ALL the tables' fresh directories
+  * as one [[Generations]] swap: a crash leaves either the old index or
+  * the new one, corrections included, never a mix. [[register]]
+  * resolves the tables through the committed state, so a crashed
+  * maintenance run cannot strand a cross-session reader.
   *
   * == Replay detection (at-least-once maintenance) ==
   *
@@ -111,10 +93,10 @@ object TextIndex {
   def exists(spark: SparkSession, name: String): Boolean =
     spark.catalog.tableExists(part(name, "meta"))
 
-  // --------------------------------------------- state file + commit layer
+  // ------------------------------------------------- committed state
 
   /** The base tables; `pos` joins them when the index is built with
-    * `positions = true` (X150 phrase serving). The state file lists
+    * `positions = true` (X150 phrase serving). The state lists
     * whichever parts the artifact actually has.
     */
   private val PartNames = Seq("postings", "dl", "stats", "meta")
@@ -122,114 +104,35 @@ object TextIndex {
   private val BucketKeys =
     Map("postings" -> "tok", "dl" -> "id", "stats" -> "tok",
       "pos" -> "tok")
-  private val StateFile = "index.current"
-
-  /** The committed state: one monotone generation counter, the
-    * tables' current directory names — swapped as ONE atomic file
-    * move, so they can never disagree — plus the retired generations
-    * still inside their grace window and the committed grace policy
-    * (the [[Index.PartState]] reader-snapshot contract, whole-index
-    * because TextIndex always commits every table together): a
-    * cross-session reader that resolved a recent state keeps its
-    * file set for `grace` further commits.
-    */
-  private[graft] final case class IndexState(gen: Long,
-      parts: Map[String, String],
-      retired: Seq[(Long, Map[String, String])] = Seq.empty,
-      grace: Int = 0)
-
-  private val MetaFields = Set("gen", "grace", "retired")
-
-  private[graft] def loadState(dir: String): Option[IndexState] = {
-    val f = java.nio.file.Paths.get(dir, StateFile)
-    if (!java.nio.file.Files.exists(f)) None
-    else {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(java.nio.file.Files.readString(f))
-      def partsOf(n: com.fasterxml.jackson.databind.JsonNode)
-          : Map[String, String] =
-        n.fieldNames.asScala.filterNot(MetaFields.contains)
-          .map(p => p -> n.get(p).asText).toMap
-      val retired = Option(node.get("retired")).toSeq
-        .flatMap(_.elements().asScala)
-        .map(r => (r.get("gen").asLong, partsOf(r)))
-      Some(IndexState(node.get("gen").asLong, partsOf(node), retired,
-        Option(node.get("grace")).map(_.asInt).getOrElse(0)))
-    }
-  }
-
-  private def writeState(dir: String, st: IndexState): Unit = {
-    def partsJson(parts: Map[String, String]): String =
-      parts.toSeq.sortBy(_._1)
-        .map { case (p, d) => s""""$p": "$d"""" }.mkString(", ")
-    val retired = st.retired
-      .map { case (g, ps) => s"""{"gen": $g, ${partsJson(ps)}}""" }
-      .mkString(", ")
-    val tmp = java.nio.file.Paths.get(dir,
-      s".$StateFile.tmp.${uid8()}")
-    java.nio.file.Files.writeString(tmp,
-      s"""{"gen": ${st.gen}, "grace": ${st.grace}, "retired": [$retired], ${partsJson(st.parts)}}""")
-    java.nio.file.Files.move(tmp,
-      java.nio.file.Paths.get(dir, StateFile),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
 
   /** The committed state. Every artifact [[build]] has written since
     * the atomic-commit protocol carries one; a PRE-state-file artifact
     * is migrated exactly once, in [[register]] (the only entry a
     * cross-session artifact can arrive through) — maintenance never
-    * falls back to directory guessing, so the pre-r14 "two live dirs
-    * after a crash" failure class is unreachable (r14 verdict #3).
+    * falls back to directory guessing (r14 verdict #3).
     */
-  private def stateOf(dir: String): IndexState =
-    loadState(dir).getOrElse(sys.error(
-      s"no committed state file under $dir — re-attach the artifact " +
-        "with TextIndex.register (a legacy artifact is migrated there)"))
+  private def stateOf(dir: String): Generations.State =
+    Generations.stateOf(dir, " — re-attach the artifact with " +
+      "TextIndex.register (a legacy artifact is migrated there)")
 
   /** One-time migration of a pre-state-file artifact, run from
-    * [[register]]: resolve each part's single live directory under
-    * the legacy layout rule and COMMIT a state file for it, so every
-    * subsequent op (this session's and every later session's) goes
-    * through the snapshot path.
+    * [[register]]: each part's single live directory under the legacy
+    * layout rule is committed as generation 0.
     */
-  private def migrateLegacy(dir: String): IndexState = {
-    val hasPos = listDir(java.nio.file.Paths.get(dir)).exists { d =>
-      val n = d.getFileName.toString
-      java.nio.file.Files.isDirectory(d) &&
-        (n == "pos" || n.startsWith("pos_d") || n.startsWith("pos_c"))
-    }
-    val names = if (hasPos) AllPartNames else PartNames
-    val st = IndexState(0L, names.map(p => p -> legacyLiveDir(dir, p)).toMap)
-    writeState(dir, st)
-    st
+  private def migrateLegacy(dir: String): Generations.State = {
+    def live(p: String) = Generations.list(java.nio.file.Paths.get(dir))
+      .map(_.getFileName.toString).filter { n =>
+        java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir, n)) &&
+          (n == p || n.startsWith(s"${p}_d") || n.startsWith(s"${p}_c"))
+      }
+    val names = if (live("pos").nonEmpty) AllPartNames else PartNames
+    Generations.rebuild(dir, names.map { p =>
+      val l = live(p)
+      require(l.size == 1,
+        s"no state file and not exactly one live dir for part $p: $l")
+      p -> l
+    }.toMap)
   }
-
-  private def legacyLiveDir(dir: String, p: String): String = {
-    val live = listDir(java.nio.file.Paths.get(dir)).filter { d =>
-      val n = d.getFileName.toString
-      java.nio.file.Files.isDirectory(d) &&
-        (n == p || n.startsWith(s"${p}_d") || n.startsWith(s"${p}_c"))
-    }
-    require(live.size == 1,
-      s"no state file and not exactly one live dir for part $p: $live")
-    live.head.getFileName.toString
-  }
-
-  private def uid8(): String =
-    java.util.UUID.randomUUID().toString.take(8)
-
-  private def listDir(d: java.nio.file.Path): Seq[java.nio.file.Path] =
-    if (!java.nio.file.Files.isDirectory(d)) Seq.empty
-    else {
-      val s = java.nio.file.Files.list(d)
-      try s.iterator().asScala.toVector finally s.close()
-    }
-
-  /** Data files of the part's CURRENT generation directory. */
-  private def currentFiles(dir: String, st: IndexState,
-      p: String): Seq[java.nio.file.Path] =
-    ArtifactFiles.dataFiles(java.nio.file.Paths.get(dir, st.parts(p)))
 
   // ------------------------------------------------------ commit markers
 
@@ -283,7 +186,7 @@ object TextIndex {
     */
   private def pruneMarkers(dir: String): Unit = {
     val cd = java.nio.file.Paths.get(dir, "_commits")
-    val parsed = listDir(cd).flatMap { f =>
+    val parsed = Generations.list(cd).flatMap { f =>
       f.getFileName.toString match {
         case StreamMarker(feed, ns, epoch) =>
           Some((feed + ns, epoch.toLong, f))
@@ -304,98 +207,54 @@ object TextIndex {
     */
   private def pruneMarkersOlderThan(dir: String, horizonMs: Long): Unit = {
     val cutoff = System.currentTimeMillis() - horizonMs
-    listDir(java.nio.file.Paths.get(dir, "_commits")).foreach { f =>
+    Generations.list(java.nio.file.Paths.get(dir, "_commits")).foreach { f =>
       if (java.nio.file.Files.getLastModifiedTime(f).toMillis < cutoff)
         java.nio.file.Files.deleteIfExists(f)
     }
   }
 
-  /** THE commit: populate the four fresh generation directories from
-    * `newFiles` (hard links — metadata only), one atomic state swap,
-    * then marker / catalog / sweep. Everything before the swap is
-    * invisible; everything after it is fully consistent.
+  /** Commit `newFiles` (part → the files of its fresh generation) as
+    * ONE [[Generations]] swap, then the batch marker and the catalog.
     */
-  private def commitGeneration(spark: SparkSession, name: String,
-      dir: String, st: IndexState, nBuckets: Int,
+  private def commit(spark: SparkSession, name: String, dir: String,
+      st: Generations.State, nBuckets: Int,
       newFiles: Map[String, Seq[java.nio.file.Path]],
       batchId: Option[String], graceCommits: Int = 0,
       resetGrace: Boolean = false): Unit = {
-    val gen = st.gen + 1
-    val u = uid8()
-    val newParts = newFiles.keys.toSeq.map { p =>
-      val newName = s"${p}_g${gen}_$u"
-      ArtifactFiles.linkFiles(newFiles(p),
-        java.nio.file.Paths.get(dir, newName))
-      p -> newName
-    }.toMap
-    // the effective grace is the larger of the call's value and the
-    // committed policy (a default-grace maintainer can never expire
-    // versions a previous one promised — the Index.commitPart rule);
-    // ONLY the explicit resetGrace escape (compact's, an operator
-    // action on the tidy op — advice r14: the ratchet had no way
-    // down short of a destructive rebuild) re-commits the call's
-    // value verbatim. Retirees past the effective window leave the
-    // list and the sweep below reclaims their directories.
-    val grace = if (resetGrace) graceCommits
-      else math.max(graceCommits, st.grace)
-    val kept = (st.retired :+ (gen, st.parts))
-      .filter { case (g, _) => gen - g < grace }
-    val newSt = IndexState(gen, newParts, kept, grace)
-    writeState(dir, newSt) // the atomic commit point
+    val next = Generations.commitFiles(dir, st, newFiles, graceCommits,
+      resetGrace)
     batchId.foreach(markBatch(dir, _))
-    try attachAll(spark, name, dir, newSt, nBuckets)
+    try next.current.foreach { case (p, ds) =>
+      attach(spark, name, dir, p, ds, nBuckets) }
     catch { case t: Throwable =>
       // the swap has COMMITTED; a half-attached catalog would keep
       // serving the superseded generation, and a same-session
       // append's known-id anti-join could then read the OLD dl
       // against the NEW committed state and double-ingest (advice
       // r14). Fail the session's catalog entries hard — the next op
-      // is forced through register/stateOf, which resolve the
-      // committed state correctly.
+      // is forced through register, which resolves the committed
+      // state.
       AllPartNames.foreach { p =>
-        try {
-          if (spark.catalog.tableExists(part(name, p)))
-            spark.sql(s"DROP TABLE ${part(name, p)}")
-        } catch { case _: Throwable => () }
+        try Generations.dropEntry(spark, part(name, p))
+        catch { case _: Throwable => () }
       }
       throw t
     }
-    sweep(dir, newSt)
   }
 
-  /** Delete every part-prefixed sibling directory the state does not
-    * name (superseded generations, crashed attempts) and the whole
-    * staging area (single-writer: nothing is legitimately in flight
-    * at a commit point).
+  /** (Re-)create part `p`'s catalog entry over its directory with the
+    * DECLARED schema — attach never infers from files, so a legally
+    * EMPTY generation (a takedown that removed a whole bucket, an
+    * all-cancelled stats chain) still attaches.
     */
-  private def sweep(dir: String, st: IndexState): Unit = {
-    val keep = st.parts.values.toSet ++
-      st.retired.flatMap(_._2.values)
-    listDir(java.nio.file.Paths.get(dir)).foreach { d =>
-      val n = d.getFileName.toString
-      if (java.nio.file.Files.isDirectory(d) && !keep.contains(n) &&
-          AllPartNames.exists(p => n == p || n.startsWith(s"${p}_")))
-        ArtifactFiles.deleteRecursively(d)
-    }
-    ArtifactFiles.deleteRecursively(
-      java.nio.file.Paths.get(dir, ".staging"))
-  }
+  private def attach(spark: SparkSession, name: String, dir: String,
+      p: String, dirs: Seq[String], nBuckets: Int): Unit =
+    Generations.attachBucketed(spark, part(name, p), s"$dir/${dirs.head}",
+      BucketKeys.getOrElse(p, ""),
+      if (BucketKeys.contains(p)) nBuckets else 0, Some(PartSchemas(p)))
 
-  private def attachAll(spark: SparkSession, name: String, dir: String,
-      st: IndexState, nBuckets: Int): Unit = {
-    for (p <- st.parts.keys if p != "meta")
-      attachBucketed(spark, name, p, BucketKeys(p), nBuckets,
-        s"$dir/${st.parts(p)}")
-    attachMeta(spark, name, s"$dir/${st.parts("meta")}")
-  }
-
-  /** The four tables' DECLARED schemas — attach never infers from
-    * files, so a legally-EMPTY generation directory (a takedown that
-    * removed a whole bucket, an all-cancelled stats chain) still
-    * attaches instead of failing parquet schema inference.
-    */
-  /** Read a generation directory with the part's DECLARED schema —
-    * a legally-empty directory (full takedown) must not fail parquet
+  /** Read part `p`'s directories with its declared schema — a
+    * legally-empty directory (full takedown) must not fail parquet
     * schema inference (review r14).
     */
   private def readPart(spark: SparkSession, p: String,
@@ -415,17 +274,15 @@ object TextIndex {
     * analog: one row per part with the committed state (current
     * generation dir, gen counter, grace policy, still-graced retiree
     * count) and the CURRENT generation's file count/bytes, straight
-    * from the filesystem — no data read, no job. What an operator
-    * checks before/after append chains, compact, takedowns and grace
-    * tuning.
+    * from the filesystem — no data read, no job.
     */
   def describe(spark: SparkSession, name: String): DataFrame = {
     import spark.implicits._
-    val dir = rootDirOf(spark, name)
+    val dir = Generations.rootOf(spark, part(name, "meta"))
     val st = stateOf(dir)
-    val rows = st.parts.toSeq.sortBy(_._1).map { case (p, d) =>
-      val files = ArtifactFiles.dataFiles(java.nio.file.Paths.get(dir, d))
-      (p, d, st.gen, st.grace, st.retired.size.toLong,
+    val rows = st.current.toSeq.sortBy(_._1).map { case (p, ds) =>
+      val files = Generations.filesOf(dir, ds)
+      (p, ds.mkString(","), st.gen, st.grace, st.retired.size.toLong,
         files.size.toLong,
         files.map(java.nio.file.Files.size(_)).sum)
     }
@@ -433,58 +290,32 @@ object TextIndex {
       "n_files", "bytes")
   }
 
-  /** (Re-)create the catalog entry of a bucketed part over `location`
-    * (declared schema — metadata-only).
-    */
-  private def attachBucketed(spark: SparkSession, name: String,
-      p: String, key: String, nBuckets: Int, location: String): Unit = {
-    val tbl = ArtifactFiles.ident(part(name, p))
-    if (spark.catalog.tableExists(part(name, p)))
-      spark.sql(s"DROP TABLE $tbl")
-    spark.sql(
-      s"""CREATE TABLE $tbl (${PartSchemas(p)}) USING parquet
-         |CLUSTERED BY ($key) SORTED BY ($key) INTO $nBuckets BUCKETS
-         |LOCATION '${ArtifactFiles.sqlLit(location)}'""".stripMargin)
-  }
-
-  private def attachMeta(spark: SparkSession, name: String,
-      location: String): Unit = {
-    val tbl = ArtifactFiles.ident(part(name, "meta"))
-    if (spark.catalog.tableExists(part(name, "meta")))
-      spark.sql(s"DROP TABLE $tbl")
-    spark.sql(
-      s"""CREATE TABLE $tbl (${PartSchemas("meta")})
-         |USING parquet LOCATION '${ArtifactFiles.sqlLit(location)}'"""
-        .stripMargin)
-  }
-
   /** Bucket-write `df` into `.staging/<p>_<u>` through a throwaway
     * external stage table (the only way to bucketBy-write to a path);
-    * returns the staged data files. An empty delta stages zero files.
+    * returns the staging directory. An empty delta stages zero files.
     */
   private def stageBucketed(spark: SparkSession, name: String,
       dir: String, df: DataFrame, p: String, nBuckets: Int,
       u: String): java.nio.file.Path = {
-    val target = java.nio.file.Paths.get(dir, ".staging", s"${p}_$u")
-    val stageTbl = s"${part(name, p)}_stage_$u"
-    Bucketing.writeBucketed(df, stageTbl, BucketKeys(p), nBuckets,
-      Some(target.toString))
-    spark.sql(s"DROP TABLE $stageTbl")
+    val target = java.nio.file.Paths.get(dir, Generations.Staging, s"${p}_$u")
+    Bucketing.stageBucketed(df, s"${part(name, p)}_stage_$u", BucketKeys(p),
+      nBuckets, target.toString)
     target
   }
 
   private def stageMeta(spark: SparkSession, dir: String,
       rows: Seq[(Long, Long, Int)], u: String): java.nio.file.Path = {
     import spark.implicits._
-    val target = java.nio.file.Paths.get(dir, ".staging", s"meta_$u")
+    val target = java.nio.file.Paths.get(dir, Generations.Staging, s"meta_$u")
     rows.toDF("n", "sumdl", "nBuckets")
       .coalesce(1).write.mode("overwrite").parquet(target.toString)
     target
   }
 
-  private def stagedFiles(p: java.nio.file.Path): Seq[java.nio.file.Path] =
-    if (!java.nio.file.Files.isDirectory(p)) Seq.empty
-    else ArtifactFiles.dataFiles(p)
+  /** Data files of the part's CURRENT generation. */
+  private def currentFiles(dir: String, st: Generations.State,
+      p: String): Seq[java.nio.file.Path] =
+    Generations.filesOf(dir, st.current(p))
 
   // ------------------------------------------------------------ tokenize
 
@@ -557,17 +388,15 @@ object TextIndex {
       .write.mode("overwrite").format("parquet")
       .option("path", s"$dir/meta").saveAsTable(part(name, "meta"))
     val names = if (positions) AllPartNames else PartNames
-    val st = IndexState(0L, names.map(p => p -> p).toMap)
-    writeState(dir, st)
+    Generations.rebuild(dir, names.map(p => p -> Seq(p)).toMap,
+      removed = AllPartNames.diff(names))
     // a rebuild WITHOUT positions over a previously positional index
-    // must also retire the catalog entry (the sweep below removes its
-    // files; a dangling table would report positional support and
-    // fail at scan time — review r14)
-    if (!positions && spark.catalog.tableExists(part(name, "pos")))
-      spark.sql(s"DROP TABLE ${part(name, "pos")}")
-    ArtifactFiles.deleteRecursively(
+    // must also retire the catalog entry (the rebuild swept its files;
+    // a dangling table would report positional support and fail at
+    // scan time — review r14)
+    if (!positions) Generations.dropEntry(spark, part(name, "pos"))
+    Generations.deleteRecursively(
       java.nio.file.Paths.get(dir, "_commits"))
-    sweep(dir, st)
   }
 
   /** Ranked BM25 top-k from the artifact — output bit-identical to
@@ -750,7 +579,7 @@ object TextIndex {
       markerHorizonMs: Long = DefaultMarkerHorizonMs): Unit = {
     import spark.implicits._
     val nBuckets = metaOf(spark, name)
-    val dir = rootDirOf(spark, name)
+    val dir = Generations.rootOf(spark, part(name, "meta"))
     val st = stateOf(dir)
     // reclaim abandoned stream namespaces' replay markers (safe at
     // any horizon: markers are a fast path, the content guards stay)
@@ -758,10 +587,10 @@ object TextIndex {
     val (n, sumdl) = spark.table(part(name, "meta"))
       .agg(sum(col("n")), sum(col("sumdl")))
       .as[(Long, Long)].head()
-    val u = uid8()
+    val u = Generations.uid()
     def partDf(p: String): DataFrame =
-      readPart(spark, p, Seq(s"$dir/${st.parts(p)}"))
-    val hasPos = st.parts.contains("pos")
+      readPart(spark, p, st.current(p).map(d => s"$dir/$d"))
+    val hasPos = st.current.contains("pos")
     val posJob =
       if (!hasPos) Seq.empty
       else Seq(() => stageBucketed(spark, name, dir,
@@ -781,13 +610,13 @@ object TextIndex {
         "stats", nBuckets, u)) ++ posJob)
     val mS = stageMeta(spark, dir, Seq((n, sumdl, nBuckets)), u)
     val base = Map(
-      "postings" -> stagedFiles(staged(0)),
-      "dl" -> stagedFiles(staged(1)),
-      "stats" -> stagedFiles(staged(2)),
-      "meta" -> stagedFiles(mS))
+      "postings" -> Generations.dataFiles(staged(0)),
+      "dl" -> Generations.dataFiles(staged(1)),
+      "stats" -> Generations.dataFiles(staged(2)),
+      "meta" -> Generations.dataFiles(mS))
     val withPos =
-      if (hasPos) base + ("pos" -> stagedFiles(staged(3))) else base
-    commitGeneration(spark, name, dir, st, nBuckets, withPos,
+      if (hasPos) base + ("pos" -> Generations.dataFiles(staged(3))) else base
+    commit(spark, name, dir, st, nBuckets, withPos,
       batchId = None, graceCommits = graceCommits,
       resetGrace = resetGrace)
   }
@@ -811,17 +640,15 @@ object TextIndex {
     */
   def maybeCompact(spark: SparkSession, name: String,
       maxFilesPerPart: Int): Boolean = {
-    val dir = rootDirOf(spark, name)
+    val dir = Generations.rootOf(spark, part(name, "meta"))
     val st = stateOf(dir)
     // clamp to the post-compact floor (one file per occupied bucket):
     // a threshold below nBuckets could never be satisfied, so every
     // check would re-run a full O(corpus) compact — the fast path
     // must stay delta-proportional (review r15)
     val threshold = math.max(maxFilesPerPart, metaOf(spark, name))
-    val over = st.parts.exists { case (_, d) =>
-      ArtifactFiles.dataFiles(java.nio.file.Paths.get(dir, d)).size >
-        threshold
-    }
+    val over = st.current.valuesIterator.exists(ds =>
+      Generations.filesOf(dir, ds).size > threshold)
     if (over) compact(spark, name)
     over
   }
@@ -843,18 +670,16 @@ object TextIndex {
       baseDir: String): Unit = {
     ArtifactFiles.requireArtifactName(name)
     val dir = s"$baseDir/$name"
-    val st = loadState(dir).getOrElse(migrateLegacy(dir))
-    attachMeta(spark, name, s"$dir/${st.parts("meta")}")
+    val st = Generations.load(dir).getOrElse(migrateLegacy(dir))
+    attach(spark, name, dir, "meta", st.current("meta"), 0)
     val nBuckets = metaOf(spark, name)
-    for (p <- st.parts.keys if p != "meta")
-      attachBucketed(spark, name, p, BucketKeys(p), nBuckets,
-        s"$dir/${st.parts(p)}")
+    for ((p, ds) <- st.current if p != "meta")
+      attach(spark, name, dir, p, ds, nBuckets)
     // retire catalog entries for parts the committed state does NOT
     // have (a stale pos table from an earlier positional build would
     // report support and fail at scan time — review r14)
-    for (p <- AllPartNames if !st.parts.contains(p))
-      if (spark.catalog.tableExists(part(name, p)))
-        spark.sql(s"DROP TABLE ${part(name, p)}")
+    for (p <- AllPartNames if !st.current.contains(p))
+      Generations.dropEntry(spark, part(name, p))
   }
 
   /** Incremental ingest — pure appends, exact by additivity: the new
@@ -872,7 +697,7 @@ object TextIndex {
       batchId: Option[String] = None, graceCommits: Int = 0): Unit = {
     import spark.implicits._
     val nBuckets = metaOf(spark, name)
-    val dir = rootDirOf(spark, name)
+    val dir = Generations.rootOf(spark, part(name, "meta"))
     if (batchId.exists(batchCommitted(dir, _))) return
     val st = stateOf(dir)
     val known = spark.table(part(name, "dl")).select(col("id"))
@@ -887,7 +712,7 @@ object TextIndex {
     // positional stream is the source and tf aggregates it (review
     // r14 — a separate tokPos(fresh) re-ran the anti-join AND the
     // tokenize per micro-batch)
-    val hasPos = st.parts.contains("pos")
+    val hasPos = st.current.contains("pos")
     val ptoksDelta =
       if (hasPos) Some(tokPos(fresh, "id", "text").persist()) else None
     val tf = ptoksDelta
@@ -905,7 +730,7 @@ object TextIndex {
         .as[(Long, Option[Long])].head() // sum is NULL on an all-known replay
       if (n == 0) { batchId.foreach(markBatch(dir, _)); return }
       val dfT = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-      val u = uid8()
+      val u = Generations.uid()
       // phase 1 (concurrent): stage the deltas — invisible to
       // readers until the swap
       val posJob = ptoksDelta.toSeq.map(pt =>
@@ -919,16 +744,16 @@ object TextIndex {
       // phase 2: fresh generations = current files + delta files, one
       // atomic swap across all parts
       val base = Map(
-        "postings" -> (currentFiles(dir, st, "postings") ++ stagedFiles(staged(0))),
-        "dl" -> (currentFiles(dir, st, "dl") ++ stagedFiles(staged(1))),
-        "stats" -> (currentFiles(dir, st, "stats") ++ stagedFiles(staged(2))),
-        "meta" -> (currentFiles(dir, st, "meta") ++ stagedFiles(mS)))
+        "postings" -> (currentFiles(dir, st, "postings") ++ Generations.dataFiles(staged(0))),
+        "dl" -> (currentFiles(dir, st, "dl") ++ Generations.dataFiles(staged(1))),
+        "stats" -> (currentFiles(dir, st, "stats") ++ Generations.dataFiles(staged(2))),
+        "meta" -> (currentFiles(dir, st, "meta") ++ Generations.dataFiles(mS)))
       val withPos =
         if (hasPos)
           base + ("pos" -> (currentFiles(dir, st, "pos")
-            ++ stagedFiles(staged(3))))
+            ++ Generations.dataFiles(staged(3))))
         else base
-      commitGeneration(spark, name, dir, st, nBuckets, withPos, batchId,
+      commit(spark, name, dir, st, nBuckets, withPos, batchId,
         graceCommits)
     } finally {
       dl.unpersist(); tf.unpersist(); ptoksDelta.foreach(_.unpersist())
@@ -973,7 +798,7 @@ object TextIndex {
       batchId: Option[String], graceCommits: Int): Unit = {
     import spark.implicits._
     val nBuckets = metaOf(spark, name)
-    val dir = rootDirOf(spark, name)
+    val dir = Generations.rootOf(spark, part(name, "meta"))
     if (batchId.exists(batchCommitted(dir, _))) return
     val st = stateOf(dir)
     val newDocs = ingest.map { case (docs, idCol, textCol) =>
@@ -989,8 +814,8 @@ object TextIndex {
       // unique-ingest-id precondition (advice r16; multi-version
       // batches LWW-collapse first in TextIndexStream.applyChanges)
       newDocs.foreach(ArtifactFiles.requireUniqueIds)
-      val postingsDir = java.nio.file.Paths.get(dir, st.parts("postings"))
-      val dlDir = java.nio.file.Paths.get(dir, st.parts("dl"))
+      val postingsDir = java.nio.file.Paths.get(dir, st.dir("postings"))
+      val dlDir = java.nio.file.Paths.get(dir, st.dir("dl"))
       val postings = readPart(spark, "postings", Seq(postingsDir.toString))
       val dlT = readPart(spark, "dl", Seq(dlDir.toString))
       val delPost =
@@ -1001,7 +826,7 @@ object TextIndex {
       // ingest side (absent for a pure takedown): one tokenize pass —
       // positional stream first when the artifact has a pos part, tf
       // aggregated from it
-      val hasPos = st.parts.contains("pos")
+      val hasPos = st.current.contains("pos")
       val ptoksDelta =
         if (hasPos) newDocs.map(nd => tokPos(nd, "id", "text").persist())
         else None
@@ -1048,15 +873,15 @@ object TextIndex {
         val tokBkts = bkts("tb")
         val idBkts = bkts("ib")
         def split(d: java.nio.file.Path, bkts: Set[Int]) =
-          ArtifactFiles.dataFiles(d).partition(f =>
+          Generations.dataFiles(d).partition(f =>
             ArtifactFiles.bucketIdOf(f.getFileName.toString)
               .forall(bkts.contains))
         val (rewriteP, keptP) = split(postingsDir, tokBkts)
         val (rewriteD, keptD) = split(dlDir, idBkts)
         val (rewriteX, keptX) =
           if (!hasPos) (Seq.empty[java.nio.file.Path], Seq.empty[java.nio.file.Path])
-          else split(java.nio.file.Paths.get(dir, st.parts("pos")), tokBkts)
-        val u = uid8()
+          else split(java.nio.file.Paths.get(dir, st.dir("pos")), tokBkts)
+        val u = Generations.uid()
         // stage EVERYTHING concurrently: pruned removal rewrites, the
         // ingest deltas, and both stats corrections — all invisible
         // until the one swap
@@ -1098,7 +923,7 @@ object TextIndex {
         val staged = jobs.map(_._1)
           .zip(Par.collect(jobs.map(_._2))).toMap
         def filesOf(k: String): Seq[java.nio.file.Path] =
-          staged.get(k).flatten.toSeq.flatMap(stagedFiles)
+          staged.get(k).flatten.toSeq.flatMap(Generations.dataFiles)
         val mS = stageMeta(spark, dir,
           Seq((nNew - nGone,
             dlNewSum.getOrElse(0L) - dlGone.getOrElse(0L), nBuckets)), u)
@@ -1106,12 +931,12 @@ object TextIndex {
           "postings" -> (keptP ++ filesOf("rwP") ++ filesOf("newP")),
           "dl" -> (keptD ++ filesOf("rwD") ++ filesOf("newD")),
           "stats" -> (currentFiles(dir, st, "stats") ++ filesOf("st")),
-          "meta" -> (currentFiles(dir, st, "meta") ++ stagedFiles(mS)))
+          "meta" -> (currentFiles(dir, st, "meta") ++ Generations.dataFiles(mS)))
         val withPos =
           if (hasPos)
             base + ("pos" -> (keptX ++ filesOf("rwX") ++ filesOf("newX")))
           else base
-        commitGeneration(spark, name, dir, st, nBuckets, withPos, batchId,
+        commit(spark, name, dir, st, nBuckets, withPos, batchId,
           graceCommits)
       } finally {
         delPost.unpersist(); delDl.unpersist()
@@ -1119,21 +944,6 @@ object TextIndex {
         ptoksDelta.foreach(_.unpersist())
       }
     } finally { del.unpersist(); newDocs.foreach(_.unpersist()) }
-  }
-
-  /** The index's base directory, resolved from the (file-backed) meta
-    * table — never caller-supplied, so maintenance always acts on the
-    * directory the catalog actually serves.
-    */
-  private def rootDirOf(spark: SparkSession, name: String): String = {
-    val tbl = part(name, "meta")
-    val scan = spark.table(tbl).queryExecution.analyzed.collectFirst {
-      case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        r.relation.asInstanceOf[
-          org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-    }.getOrElse(sys.error(s"$tbl is not file-backed"))
-    java.nio.file.Paths.get(scan.location.rootPaths.head.toUri.getPath)
-      .getParent.toString
   }
 
   /** Takedown — bucket-pruned and stats-exact: the deleted docs'

@@ -62,7 +62,7 @@ object ChunkDupStore {
       nBucketsIfNew: Int, graceCommits: Int = 0): Unit = {
     val spark = batch.sparkSession
     Files.createDirectories(Paths.get(tableDir))
-    val st = StateTable.loadManifestFull(tableDir)
+    val st = StateTable.manifestOf(tableDir)
     val nBuckets = st.nBuckets.getOrElse(nBucketsIfNew)
     val bucket = pmod(hash(col("fp")), lit(nBuckets))
 

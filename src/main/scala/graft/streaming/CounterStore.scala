@@ -61,7 +61,7 @@ private[streaming] object CounterStore {
   def subtract(delta0: DataFrame, tableDir: String,
       graceCommits: Int): Unit = {
     val spark = delta0.sparkSession
-    val st = StateTable.loadManifestFull(tableDir)
+    val st = StateTable.manifestOf(tableDir)
     val nBuckets = st.nBuckets.getOrElse(StateTable.DefaultBuckets)
     val bucket = pmod(hash(col("source")), lit(nBuckets)).cast("int")
     val delta = delta0.withColumn("bkt", bucket).persist()

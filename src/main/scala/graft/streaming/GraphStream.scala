@@ -73,7 +73,7 @@ object GraphStream {
     *     edges AND its appearances in other sources' top-k; an
     *     unknown key's removal is a no-op) and the non-tombstone
     *     winners merge in at the stored centroids, fused into a
-    *     single generation advance per part (r16 verdict #1 — the
+    *     single generation of all three parts (r16 verdict #1 — the
     *     former delete-then-append pair left a crash window that
     *     served a graph missing the re-embedded keys until replay).
     *

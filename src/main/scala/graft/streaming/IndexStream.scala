@@ -176,7 +176,7 @@ object IndexStream {
     *     codes; an unknown key's removal is a no-op) and the
     *     non-tombstone winners' vectors are encoded at the FIXED
     *     trained params and ingested — removal rewrites and ingest
-    *     deltas publish in one generation swap per part.
+    *     deltas publish in one generation of all parts.
     *
     * Applying batches in log order IS last-writer-wins (the binlog
     * serializes a key's changes). Replay safety needs no marker

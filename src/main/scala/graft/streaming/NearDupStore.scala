@@ -65,7 +65,7 @@ object NearDupStore {
     require(bands * rows == numHashes)
     val spark = batch.sparkSession
     Files.createDirectories(Paths.get(tableDir))
-    val st = StateTable.loadManifestFull(tableDir)
+    val st = StateTable.manifestOf(tableDir)
     val nBuckets = st.nBuckets.getOrElse(nBucketsIfNew)
     val bucket = pmod(hash(col("bk")), lit(nBuckets)).cast("int")
 

@@ -77,7 +77,7 @@ object SampleStore {
     val spark = batch.sparkSession
     Files.createDirectories(Paths.get(tableDir))
     pinSalt(tableDir, salt)
-    val st = StateTable.loadManifestFull(tableDir)
+    val st = StateTable.manifestOf(tableDir)
     val nBuckets = st.nBuckets.getOrElse(nBucketsIfNew)
     val bucket = pmod(hash(col("source")), lit(nBuckets))
 
@@ -152,7 +152,7 @@ object SampleStore {
   def forget(ids: DataFrame, idCol: String, tableDir: String,
       graceCommits: Int = 0): Unit = {
     val spark = ids.sparkSession
-    val st = StateTable.loadManifestFull(tableDir)
+    val st = StateTable.manifestOf(tableDir)
     if (st.nBuckets.isEmpty) return // nothing committed: no-op
     val nBuckets = st.nBuckets.get
     val committed = st.buckets.keys.toSeq.sorted

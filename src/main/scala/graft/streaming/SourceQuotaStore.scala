@@ -70,7 +70,7 @@ object SourceQuotaStore {
       graceCommits: Int = 0): Unit = {
     val spark = batch.sparkSession
     Files.createDirectories(Paths.get(tableDir))
-    val st = StateTable.loadManifestFull(tableDir)
+    val st = StateTable.manifestOf(tableDir)
     val nBuckets = st.nBuckets.getOrElse(nBucketsIfNew)
     def bucket = pmod(hash(col("__src")), lit(nBuckets))
 
@@ -164,7 +164,7 @@ object SourceQuotaStore {
   def release(dels: DataFrame, sourceCol: String, nCol: String,
       tableDir: String, graceCommits: Int = 0): Unit = {
     val spark = dels.sparkSession
-    val st = StateTable.loadManifestFull(tableDir)
+    val st = StateTable.manifestOf(tableDir)
     val nBuckets = st.nBuckets.getOrElse(
       sys.error(s"no committed quota state at $tableDir"))
     val rel = dels

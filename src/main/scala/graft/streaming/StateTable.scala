@@ -1,14 +1,13 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-
-import scala.collection.JavaConverters._
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.cdc.Merge
+import graft.ops.Generations
 import graft.streaming.LwwMerge.KeyedChange
 
 /** Materialize a keyed CURRENT-STATE table from the change stream —
@@ -21,56 +20,44 @@ import graft.streaming.LwwMerge.KeyedChange
   * Delete is what stops a stale late backfill from resurrecting the
   * row. Read the table through [[read]] + [[graft.cdc.Merge.current]].
   *
-  * == Layout: hash-bucketed, versioned, manifest-committed ==
+  * == Layout: hash-bucketed, versioned, generation-committed ==
   *
   * The table is partitioned by `bucket = pmod(hash(key), nBuckets)`:
   *
   * {{{
-  *   tableDir/manifest.json            bucket → committed version dir
+  *   tableDir/_state.json              entry b<bucket> → its version dir
   *   tableDir/b<bucket>/<version>/     parquet winners of one bucket
   *   tableDir/.staging/<version>/      in-flight batch output
   * }}}
   *
   * A micro-batch touches ONLY the buckets its keys hash into: it reads
   * those buckets' committed winners, merges, writes the new winners to
-  * a fresh version directory per bucket, then commits by atomically
-  * replacing `manifest.json` (write-temp + ATOMIC_MOVE). Untouched
-  * buckets are never read, rewritten, or even listed — their files
-  * stay byte-identical (StreamingSpec asserts it). At 100 TB this is
-  * the difference between a full-table rewrite per trigger and work
-  * proportional to the batch's key spread; it is the same
-  * copy-on-write + atomic-metadata-swap shape Delta/Iceberg use, built
-  * on nothing but parquet and one JSON file.
+  * a fresh version directory per bucket, then commits them through
+  * [[graft.ops.Generations]] (the bucket count is the state's
+  * `layout`). Untouched buckets are never read, rewritten, or even
+  * listed — their files stay byte-identical (StreamingSpec asserts
+  * it). At 100 TB this is the difference between a full-table rewrite
+  * per trigger and work proportional to the batch's key spread.
   *
   * == Crash safety / exactly-once effect ==
   *
-  * Nothing committed is ever modified in place:
-  *  - crash mid-staging: the manifest still points at the old
-  *    versions; the replayed batch writes a fresh (uuid) staging dir.
-  *  - crash after manifest commit but before the stream checkpoint
-  *    commits: the batch replays against the already-updated buckets —
-  *    LWW is idempotent (re-applying the same changes cannot change a
-  *    per-key maximum; `seq` is the unique tie-break), so the replay
-  *    converges to the identical winners.
-  *  - superseded version dirs are deleted only AFTER the manifest
-  *    commit; orphaned bucket versions from a crash are swept the next
-  *    time their bucket is touched, and stale `.staging` entries are
-  *    swept after every successful commit.
+  * Nothing committed is ever modified in place, and a replay is
+  * harmless: a crash after the commit but before the stream
+  * checkpoint commits replays the batch against the already-updated
+  * buckets — LWW is idempotent (re-applying the same changes cannot
+  * change a per-key maximum; `seq` is the unique tie-break), so the
+  * replay converges to the identical winners. Orphaned versions of a
+  * crashed attempt are swept the next time their bucket is touched.
   *
   * == Concurrency contract (single writer, snapshot-unsafe GC) ==
   *
   * One maintenance writer at a time — the stream's checkpoint already
-  * serializes batches; a second concurrent writer would race manifest
-  * commits (each tmp file is uniquely named, so the LAST move wins and
-  * the loser's buckets leak until their next touch). Readers get
-  * atomic snapshots at manifest-load time. By default GC deletes
-  * superseded versions IMMEDIATELY after commit, so a reader that
-  * loaded the old manifest and is still mid-scan can lose its files —
-  * re-resolve [[read]] per query (cheap), or run with
-  * `graceCommits` > 0: each superseded version then survives that many
-  * further commits (tracked in the manifest's `retired` list with the
-  * generation that retired it), giving concurrent readers a bounded
-  * window to finish against their snapshot (StreamingSpec proves a
+  * serializes batches. Readers get atomic snapshots at state-load
+  * time. By default superseded versions are deleted IMMEDIATELY after
+  * the commit, so a reader that loaded the old state and is still
+  * mid-scan can lose its files — re-resolve [[read]] per query
+  * (cheap), or run with `graceCommits` > 0: each superseded version
+  * then survives that many further commits (StreamingSpec proves a
   * reader's snapshot survives commits inside the window and that
   * expired versions are swept).
   *
@@ -95,90 +82,30 @@ object StateTable {
   def applyBatch(existing: DataFrame, batch: DataFrame): DataFrame =
     Merge.winners(existing.unionByName(batch))
 
-  // ---------------------------------------------------------- manifest
+  // ------------------------------------------------------------ state
 
-  /** A superseded bucket version kept alive for grace-period readers:
-    * retired by commit generation `gen`.
+  /** A table's committed [[Generations]] state seen as buckets: entry
+    * `b<k>` names `b<k>/<version>`, and the layout carries the bucket
+    * count — part of the committed layout: later maintenance runs must
+    * hash with the SAME count or keys would be routed to the wrong
+    * buckets, so [[applyBatchBucketed]] always prefers the stored
+    * value. An uncommitted table is empty.
     */
-  private[graft] final case class Retired(bucket: Int, version: String, gen: Long)
-
-  /** Full committed metadata: layout bucket count, monotone commit
-    * generation, live bucket → version map, the retired versions
-    * still inside their grace window, and the table's committed grace
-    * POLICY — stored (like nBuckets) so one caller using a smaller
-    * per-call value cannot silently expire versions other callers
-    * promised to their readers.
-    */
-  private[graft] final case class Manifest(nBuckets: Option[Int], gen: Long,
-      buckets: Map[Int, String], retired: Seq[Retired], grace: Int = 0)
-
-  /** (bucket count, bucket → committed version-directory name).
-    * Absent file = empty table. The bucket count is part of the
-    * committed layout — later maintenance runs must hash with the SAME
-    * count or keys would be routed to the wrong buckets, so [[
-    * applyBatchBucketed]] always prefers the stored value.
-    */
-  private[graft] def loadManifest(tableDir: String): (Option[Int], Map[Int, String]) = {
-    val m = loadManifestFull(tableDir)
-    (m.nBuckets, m.buckets)
+  private[graft] final case class Manifest(state: Generations.State) {
+    def nBuckets: Option[Int] = state.layout.get("nBuckets")
+    def gen: Long = state.gen
+    def buckets: Map[Int, String] = state.current.map { case (e, ds) =>
+      e.stripPrefix("b").toInt -> Paths.get(ds.head).getFileName.toString }
   }
 
-  private[graft] def loadManifestFull(tableDir: String): Manifest = {
-    val p = Paths.get(tableDir, "manifest.json")
-    if (!Files.exists(p)) Manifest(None, 0L, Map.empty, Seq.empty)
-    else {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(Files.readString(p))
-      val retired = Option(node.get("retired")).toSeq
-        .flatMap(_.elements().asScala)
-        .map(r => Retired(r.get("b").asInt, r.get("v").asText, r.get("gen").asLong))
-      Manifest(
-        Some(node.get("nBuckets").asInt),
-        Option(node.get("gen")).map(_.asLong).getOrElse(0L),
-        node.get("buckets").properties().asScala
-          .map(e => e.getKey.toInt -> e.getValue.asText).toMap,
-        retired,
-        Option(node.get("grace")).map(_.asInt).getOrElse(0))
-    }
-  }
-
-  private def commitManifest(tableDir: String, nBuckets: Int, gen: Long,
-      m: Map[Int, String], retired: Seq[Retired], grace: Int): Unit = {
-    val entries = m.toSeq.sortBy(_._1)
-      .map { case (b, v) => s""""$b": "$v"""" }.mkString(", ")
-    val retEntries = retired.sortBy(r => (r.gen, r.bucket))
-      .map(r => s"""{"b": ${r.bucket}, "v": "${r.version}", "gen": ${r.gen}}""")
-      .mkString(", ")
-    // unique tmp name: two racing writers must not interleave partial
-    // writes into one tmp file (the later MOVE still wins the commit)
-    val tmp = Paths.get(tableDir,
-      s".manifest.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-    Files.writeString(tmp,
-      s"""{"nBuckets": $nBuckets, "gen": $gen, "grace": $grace, "buckets": {$entries}, "retired": [$retEntries]}""")
-    Files.move(tmp, Paths.get(tableDir, "manifest.json"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  // both helpers CLOSE their directory streams — this code runs once
-  // per micro-batch commit for the life of a query, and unclosed
-  // Files.walk/list handles only surface as fd exhaustion much later
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(f => Files.delete(f))
-      finally s.close()
-    }
-
-  private def listDir(p: Path): Seq[Path] = {
-    val s = Files.list(p)
-    try s.iterator().asScala.toVector finally s.close()
-  }
+  private[graft] def manifestOf(tableDir: String): Manifest =
+    Manifest(Generations.load(tableDir).getOrElse(Generations.Empty))
 
   /** Operational snapshot of a committed table: one row per LIVE
     * bucket — (bucket, version, n_files, bytes) straight from the
-    * filesystem, no data read, no Spark job — with the manifest
-    * header (gen, n_buckets, grace, n_retired) as constant columns.
+    * filesystem, no data read, no Spark job — with the committed
+    * state's header (gen, n_buckets, grace, n_retired) as constant
+    * columns.
     * The numbers an operator checks before/after compact, a
     * retraction, or grace-policy tuning: steady-state n_files is 1
     * per bucket (commitPartitioned compacts on write), so anything
@@ -187,26 +114,21 @@ object StateTable {
     */
   def describe(spark: SparkSession, tableDir: String): DataFrame = {
     import spark.implicits._
-    val m = loadManifestFull(tableDir)
+    val m = manifestOf(tableDir)
     val rows = m.buckets.toSeq.sortBy(_._1).map { case (b, v) =>
-      val d = Paths.get(tableDir, s"b$b", v)
-      val files =
-        if (Files.isDirectory(d)) listDir(d).filter { p =>
-          val n = p.getFileName.toString
-          Files.isRegularFile(p) && !n.startsWith("_") && !n.startsWith(".")
-        } else Seq.empty
+      val files = Generations.dataFiles(Paths.get(tableDir, s"b$b", v))
       (b, v, files.size.toLong, files.map(Files.size(_)).sum)
     }
     rows.toDF("bucket", "version", "n_files", "bytes")
       .withColumn("gen", lit(m.gen))
       .withColumn("n_buckets", lit(m.nBuckets.getOrElse(0)))
-      .withColumn("grace", lit(m.grace))
-      .withColumn("n_retired", lit(m.retired.size))
+      .withColumn("grace", lit(m.state.grace))
+      .withColumn("n_retired", lit(m.state.retired.map(_._2.size).sum))
   }
 
   /** The committed winners table (all buckets). */
   def read(spark: SparkSession, tableDir: String): DataFrame = {
-    val (_, m) = loadManifest(tableDir)
+    val m = manifestOf(tableDir).buckets
     require(m.nonEmpty, s"no committed state at $tableDir")
     val paths = m.toSeq.sortBy(_._1)
       .map { case (b, v) => s"$tableDir/b$b/$v" }
@@ -220,16 +142,16 @@ object StateTable {
     *
     * `graceCommits` > 0 keeps each superseded bucket version on disk
     * for that many further commits before deletion, so a reader that
-    * resolved [[read]] against a recent manifest can finish its scan
+    * resolved [[read]] against a recent state can finish its scan
     * across concurrent commits — the multi-reader extension of the
     * single-writer contract. 0 (default) deletes superseded versions
-    * immediately after the manifest swap (reader must re-resolve).
+    * immediately after the commit (reader must re-resolve).
     */
   def applyBatchBucketed(batch: DataFrame, tableDir: String, batchId: Long,
       nBucketsIfNew: Int, graceCommits: Int = 0): Unit = {
     val spark = batch.sparkSession
     Files.createDirectories(Paths.get(tableDir))
-    val st = loadManifestFull(tableDir)
+    val st = manifestOf(tableDir)
     val nBuckets = st.nBuckets.getOrElse(nBucketsIfNew)
     val bucket = pmod(hash(col("key")), lit(nBuckets))
     val bdf = batch.persist()
@@ -272,7 +194,7 @@ object StateTable {
       merge: (DataFrame, DataFrame) => (DataFrame, () => Unit)): Unit = {
     val spark = deltaNoB.sparkSession
     Files.createDirectories(Paths.get(tableDir))
-    val st = loadManifestFull(tableDir)
+    val st = manifestOf(tableDir)
     val nBuckets = st.nBuckets.getOrElse(nBucketsIfNew)
     val bucket = pmod(hash(col("source")), lit(nBuckets)).cast("int")
     val delta = deltaNoB.withColumn("b", bucket).persist()
@@ -303,23 +225,24 @@ object StateTable {
   }
 
   /** Stage `withB` (winners + int bucket column `b`), move each bucket
-    * dir into place, commit the manifest, then GC: superseded versions
-    * past their grace window, crashed-attempt orphans, and stale
-    * staging entries. (private[streaming]: [[DedupStore]] commits its
+    * dir into place and commit them as entries `b<k>` through
+    * [[Generations.commit]] (which retires the superseded versions
+    * under the grace policy and sweeps the touched buckets and the
+    * staging area). (private[streaming]: [[DedupStore]] commits its
     * fingerprint buckets through the same protocol.)
     *
     * `emptied` names touched buckets whose new content is EMPTY — a
     * partitioned write produces no directory for them, so without the
-    * explicit list the manifest would keep serving their superseded
-    * versions. They leave the bucket map (absent = empty) and their
-    * old versions retire under the same grace policy
+    * explicit list the state would keep serving their superseded
+    * versions. They leave the state (absent = empty) and their old
+    * versions retire under the same grace policy
     * ([[DedupStore.forget]] / [[NearDupStore.forget]] are the
     * callers).
     */
   private[streaming] def commitPartitioned(tableDir: String, withB: DataFrame,
       nBuckets: Int, st: Manifest, version: String,
       graceCommits: Int, emptied: Seq[Int] = Seq.empty): Unit = {
-    val staging = s"$tableDir/.staging/$version"
+    val staging = s"$tableDir/${Generations.Staging}/$version"
     // one exchange keyed on the bucket id → each bucket lands wholly in
     // one task → exactly ONE parquet file per committed bucket version:
     // compaction happens on write, and the table's file count stays
@@ -327,66 +250,31 @@ object StateTable {
     withB.repartition(col("b"))
       .write.partitionBy("b").parquet(staging)
 
-    val written = listDir(Paths.get(staging))
-      .filter(p => p.getFileName.toString.startsWith("b="))
-      .map(p => p.getFileName.toString.stripPrefix("b=").toInt -> p)
-    val moved0 = written.map { case (b, src) =>
+    def target(b: Int) = {
       val dst = Paths.get(tableDir, s"b$b", version)
       Files.createDirectories(dst.getParent)
-      Files.move(src, dst)
-      b -> version
-    }.toMap
+      dst
+    }
+    val moved0 = Generations.list(Paths.get(staging))
+      .filter(p => p.getFileName.toString.startsWith("b="))
+      .map { src =>
+        val b = src.getFileName.toString.stripPrefix("b=").toInt
+        Files.move(src, target(b))
+        b
+      }
     // a retraction that empties EVERY touched bucket stages nothing at
     // all — commit one empty (schema-bearing) version so a table whose
     // last key was forgotten stays readable instead of reverting to
     // "no committed state"
     val moved = if (moved0.nonEmpty || emptied.isEmpty) moved0 else {
-      val b = emptied.head
-      val dst = Paths.get(tableDir, s"b$b", version)
-      Files.createDirectories(dst.getParent)
-      withB.drop("b").limit(0).coalesce(1).write.parquet(dst.toString)
-      Map(b -> version)
+      withB.drop("b").limit(0).coalesce(1).write
+        .parquet(target(emptied.head).toString)
+      Seq(emptied.head)
     }
-
-    // the versions this commit supersedes enter the retired set at the
-    // new generation; entries whose grace window has elapsed leave it
-    // and their directories are deleted AFTER the manifest swap. The
-    // effective grace is the LARGER of the call's value and the
-    // table's committed policy — a default-grace caller (e.g. an
-    // operator running compact) can never expire versions a previous
-    // maintainer promised to concurrent readers; an explicit larger
-    // value upgrades the stored policy.
-    val gen = st.gen + 1
-    val grace = math.max(graceCommits, st.grace)
-    val removed = emptied.filterNot(moved.contains)
-    val newlyRetired = (moved.keys.toSeq ++ removed).sorted.distinct
-      .flatMap(b => st.buckets.get(b).map(v => Retired(b, v, gen)))
-    val (kept, expired) = (st.retired ++ newlyRetired)
-      .partition(r => gen - r.gen < grace)
-    commitManifest(tableDir, nBuckets, gen,
-      st.buckets ++ moved -- removed, kept, grace)
-
-    // post-commit GC: a touched bucket keeps its committed version and
-    // any still-graced retired versions; everything else there is a
-    // crashed-attempt orphan. Expired retirees (possibly in untouched
-    // buckets) are deleted by path. Then drop the whole staging area —
-    // nothing in-flight can live there under the single-writer contract.
-    val keptByBucket = kept.groupBy(_.bucket)
-    moved.foreach { case (b, v) =>
-      val keep = keptByBucket.getOrElse(b, Seq.empty).map(_.version).toSet + v
-      listDir(Paths.get(tableDir, s"b$b"))
-        .filter(p => !keep.contains(p.getFileName.toString))
-        .foreach(deleteRecursively)
-    }
-    removed.foreach { b =>
-      val keep = keptByBucket.getOrElse(b, Seq.empty).map(_.version).toSet
-      listDir(Paths.get(tableDir, s"b$b"))
-        .filter(p => !keep.contains(p.getFileName.toString))
-        .foreach(deleteRecursively)
-    }
-    expired.foreach(r =>
-      deleteRecursively(Paths.get(tableDir, s"b${r.bucket}", r.version)))
-    deleteRecursively(Paths.get(tableDir, ".staging"))
+    Generations.commit(tableDir, st.state,
+      moved.map(b => s"b$b" -> Seq(s"b$b/$version")).toMap,
+      removed = emptied.filterNot(moved.contains).map(b => s"b$b"),
+      graceCommits = graceCommits, layout = Map("nBuckets" -> nBuckets))
   }
 
   /** Remove `del`'s keys (single column `keyCol`) from a committed
@@ -398,7 +286,7 @@ object StateTable {
   private[streaming] def retractKeys(del: DataFrame, keyCol: String,
       tableDir: String, graceCommits: Int): Unit = {
     val spark = del.sparkSession
-    val st = loadManifestFull(tableDir)
+    val st = manifestOf(tableDir)
     if (st.nBuckets.isEmpty) return // nothing committed: no-op
     val nBuckets = st.nBuckets.get
     val bucket = pmod(hash(col(keyCol)), lit(nBuckets)).cast("int")
@@ -431,7 +319,7 @@ object StateTable {
     */
   def compact(spark: SparkSession, tableDir: String,
       graceCommits: Int = 0): Unit = {
-    val st = loadManifestFull(tableDir)
+    val st = manifestOf(tableDir)
     require(st.buckets.nonEmpty, s"no committed state at $tableDir")
     val union = st.buckets.toSeq.sortBy(_._1).map { case (b, v) =>
       spark.read.parquet(s"$tableDir/b$b/$v").withColumn("b", lit(b))

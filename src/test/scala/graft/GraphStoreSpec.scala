@@ -41,6 +41,10 @@ class GraphStoreSpec extends AnyFunSuite {
       }.toMap
   }
 
+  /** Part `p`'s committed directory, read from the artifact's state. */
+  private def curDir(gdir: String, p: String): String =
+    s"$gdir/${Generations.load(gdir).get.dir(p)}"
+
   test("append equals a full rebuild at the stored centroids; blocks delta-append byte-untouched; serves follow") {
     val dir = tmpBase("app")
     val even = embs.filter(col("vec_id") % 2 === 0)
@@ -52,8 +56,9 @@ class GraphStoreSpec extends AnyFunSuite {
 
     GraphStore.append(spark, "g_app", odd, "vec_id", "embedding", "label")
 
-    // committed block files are never rewritten; the delta is new files
-    val blocksAfter = fileHashes(s"$dir/g_app/blocks")
+    // committed block files are never rewritten (the new generation
+    // links them byte-identical); the delta is new files
+    val blocksAfter = fileHashes(curDir(s"$dir/g_app", "blocks"))
     assert(blocksBefore.forall { case (f, h) => blocksAfter.get(f).contains(h) })
     assert(blocksAfter.size > blocksBefore.size)
 
@@ -214,12 +219,9 @@ class GraphStoreSpec extends AnyFunSuite {
     GraphStore.delete(spark, "g_dp", Seq(delId).toDF("vec_id"), "vec_id")
 
     for ((p, beforeHashes, bkts) <- before) {
-      val newDir = Files.list(java.nio.file.Paths.get(gdir))
-        .iterator().asScala
-        .find(d => Files.isDirectory(d) &&
-          d.getFileName.toString.startsWith(s"${p}_d"))
-        .getOrElse(fail(s"no fresh $p dir after delete"))
-      val after = fileHashes(newDir.toString)
+      val newDir = curDir(gdir, p)
+      assert(!newDir.endsWith(s"/$p"), s"no fresh $p dir after delete")
+      val after = fileHashes(newDir)
       val (wasTouched, wasKept) =
         beforeHashes.partition { case (n, _) => bkts.contains(bOf(n)) }
       assert(wasTouched.nonEmpty && wasKept.nonEmpty,
@@ -291,15 +293,15 @@ class GraphStoreSpec extends AnyFunSuite {
     def children = Files.list(java.nio.file.Paths.get(s"$dir/g_rb"))
       .iterator().asScala.map(_.getFileName.toString).toSet
     // append rewrote the edges into a suffixed generation dir
-    assert(children.exists(_.startsWith("edges_a")), children.toString)
+    assert(children.exists(_.startsWith("edges_g1_")), children.toString)
 
     // a full rebuild re-establishes the canonical five-dir layout and
     // sweeps every superseded generation — no orphaned disk
     GraphStore.build(spark, embs, "vec_id", "embedding", "label",
       "g_rb", k = 4, iters = 2, massign = 2, nBuckets = 4,
       baseDir = Some(dir))
-    assert(children == Set("edges", "labels", "blocks", "cents", "meta"),
-      children.toString)
+    assert(children == Set("edges", "labels", "blocks", "cents", "meta",
+      Generations.StateFile), children.toString)
     // and the rebuilt artifact serves: every corpus vector is a source
     val srcs = GraphStore.edges(spark, "g_rb")
       .select(countDistinct(col("src_id"))).as[Long].collect()(0)
@@ -352,14 +354,14 @@ class GraphStoreSpec extends AnyFunSuite {
     assert(serve() == before)
   }
 
-  test("register re-attaches a graph from files in a fresh catalog; ambiguity is refused, maintenance still lands") {
+  test("register re-attaches a graph from files in a fresh catalog; register ignores a stray crashed sibling, and the next commit sweeps it") {
     val dir = tmpBase("reg")
     val even = embs.filter(col("vec_id") % 2 === 0)
     GraphStore.build(spark, even, "vec_id", "embedding", "label",
       "g_reg", k = 4, iters = 1, massign = 2, nBuckets = 4,
       baseDir = Some(dir))
     // maintenance first, so register resolves a REWRITTEN part dir
-    // (edges_aXXXX), not just the canonical build layout
+    // (edges_g1_XXXX), not just the canonical build layout
     val odd = embs.filter(col("vec_id") % 2 === 1)
     GraphStore.append(spark, "g_reg", odd, "vec_id", "embedding",
       "label")
@@ -377,16 +379,15 @@ class GraphStoreSpec extends AnyFunSuite {
       "label")
     assert(serve() == before)
     assert(GraphStore.describe(spark, "g_reg").count() == 5)
-    // an ambiguous layout (crashed-mid-maintenance leftovers) is
-    // refused loudly, never guessed at
+    // a stray sibling left by a crashed maintenance run is not part of
+    // the committed state: register ignores it, and the next commit
+    // of that part sweeps it
     val fake = java.nio.file.Paths.get(s"$dir/g_reg/edges_zzcrashed")
     java.nio.file.Files.createDirectories(fake)
-    val e = intercept[IllegalArgumentException] {
-      GraphStore.register(spark, "g_reg", dir)
-    }
-    assert(e.getMessage.contains("ambiguous"))
-    java.nio.file.Files.delete(fake)
-    GraphStore.register(spark, "g_reg", dir) // clean again
+    GraphStore.register(spark, "g_reg", dir)
+    assert(serve() == before)
+    GraphStore.compact(spark, "g_reg")
+    assert(!java.nio.file.Files.exists(fake))
     assert(serve() == before)
   }
 
@@ -484,21 +485,23 @@ class GraphStoreSpec extends AnyFunSuite {
         col("cos_micros"))
       .as[(Long, Long, Long, Long)].collect().sorted.toSeq
     assert(edgesOf("g_upa") == rebuilt)
-    // ONE generation advance per part: exactly one dir per part,
-    // freshly `_u`-tagged — not delete's `_d` followed by append's
-    // `_a` (the two-commit crash window this fusion closes)
+    // ONE generation advance for all three parts: exactly one dir per
+    // part, all committed at gen 1 — not a delete generation followed
+    // by an append one (the two-commit crash window this fusion
+    // closes)
+    assert(Generations.load(gdirA).get.gen == 1L)
     val dirsAfter = Files.list(java.nio.file.Paths.get(gdirA))
       .iterator().asScala.filter(Files.isDirectory(_))
       .map(_.getFileName.toString).toSeq.sorted
     for (p <- Seq("edges", "blocks", "labels")) {
       val of = dirsAfter.filter(d => d == p || d.startsWith(s"${p}_"))
-      assert(of.size == 1 && of.head.startsWith(s"${p}_u"),
-        s"$p advanced ${of.mkString(",")} — expected one _u generation")
+      assert(of.size == 1 && of.head.startsWith(s"${p}_g1_"),
+        s"$p advanced ${of.mkString(",")} — expected one gen-1 dir")
     }
     // kept bucket files hard-link byte-identical: every file name
     // surviving into the fresh generation carries its exact bytes
     for (p <- Seq("edges", "blocks", "labels")) {
-      val newDir = dirsAfter.find(_.startsWith(s"${p}_u")).get
+      val newDir = dirsAfter.find(_.startsWith(s"${p}_g1_")).get
       val after = fileHashes(s"$gdirA/$newDir")
       val common = beforeFiles(p).keySet intersect after.keySet
       for (n <- common)

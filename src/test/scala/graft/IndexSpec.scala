@@ -179,7 +179,7 @@ class IndexSpec extends AnyFunSuite {
       itersIvf = 1, massign = 2, m = 16, ksub = 32, itersPq = 1,
       nBuckets = 4, baseDir = Some(dir))
     val idxDir = s"$dir/idx_gen"
-    def current(p: String) = Index.loadPart(idxDir, p).current
+    def current(p: String) = Generations.load(idxDir).get.dir(p)
 
     val gen0 = current("postings")
     val gen0Hashes = fileHashes(s"$idxDir/$gen0")
@@ -254,13 +254,13 @@ class IndexSpec extends AnyFunSuite {
     Files.write(staging.resolve("part-00000.parquet"),
       Array[Byte](0x50, 0x41, 0x52, 0x31))
     assert(searchOf() == before, "staged orphans leaked into the served index")
-    assert(Index.loadPart(idxDir, "postings").gen == 0L)
+    assert(Generations.load(idxDir).get.gen == 0L)
     assert(fileHashes(s"$idxDir/postings") == hashesBefore)
 
     // the replayed append commits atomically and sweeps the orphan
     Index.appendCommitted(spark, "idx_crash", thirds(1), "vec_id", "embedding")
     assert(!Files.exists(staging))
-    assert(Index.loadPart(idxDir, "postings").gen == 1L)
+    assert(Generations.load(idxDir).get.gen == 1L)
     assert(searchOf().nonEmpty)
   }
 
@@ -302,14 +302,17 @@ class IndexSpec extends AnyFunSuite {
     Index.appendCommitted(spark, "idx_man", thirds(2), "vec_id", "embedding",
       manifestCommit = true)
 
-    // the committed generation holds NO data files — links disabled:
-    // one manifest naming the base dir + one segment per delta
-    val gen = Index.loadPart(idxDir, "postings").current
-    assert(gen.startsWith("postings_g2"))
-    val genFiles = Files.list(java.nio.file.Paths.get(s"$idxDir/$gen"))
-      .iterator().asScala.map(_.getFileName.toString).toSeq
-    assert(genFiles == Seq("_manifest.json"), s"generation dir holds $genFiles")
-    assert(Index.segmentsOf(idxDir, gen).size == 3)
+    // links disabled: the committed generation is the part's segment
+    // list in the state — the base dir + one segment per delta — and
+    // no linked generation directory exists
+    val st = Generations.load(idxDir).get
+    val segs = st.current("postings")
+    assert(st.gen == 2L && segs.size == 3 && segs.head == "postings" &&
+      segs.tail.forall(_.startsWith("postings_s")), s"postings spans $segs")
+    val linked = Files.list(java.nio.file.Paths.get(idxDir))
+      .iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("postings_g")).toSeq
+    assert(linked.isEmpty, s"manifest commit linked $linked")
     // the base segment's files are untouched bytes — nothing was
     // moved, linked, or rewritten
     assert(fileHashes(s"$idxDir/postings") == seg0Hashes)
@@ -327,8 +330,8 @@ class IndexSpec extends AnyFunSuite {
     // the segments leave once no kept generation references them
     Index.compact(spark, "idx_man")
     assert(searchOf("idx_man") == expected)
-    val cur = Index.loadPart(idxDir, "postings").current
-    assert(cur.startsWith("postings_c") && Index.segmentsOf(idxDir, cur) == Seq(cur))
+    val cur = Generations.load(idxDir).get.current("postings")
+    assert(cur.size == 1 && cur.head.startsWith("postings_c"))
     assert(!Files.exists(java.nio.file.Paths.get(s"$idxDir/postings")))
     import org.apache.spark.sql.execution.FileSourceScanExec
     val scan = spark.table("idx_man_postings").queryExecution.executedPlan
@@ -474,7 +477,7 @@ class IndexSpec extends AnyFunSuite {
       n match { case bucketRe(b) => b.toInt; case _ => -1 }
     val idParts = Seq("codes", "sq_codes", "bq_codes")
     val before = idParts.map { p =>
-      p -> fileHashes(s"$idxDir/${Index.loadPart(idxDir, p).current}")
+      p -> fileHashes(s"$idxDir/${Generations.load(idxDir).get.dir(p)}")
     }.toMap
     val rowsBefore = idParts.map { p =>
       p -> spark.table(s"idx_dp_$p").collect().map(_.toSeq).toSet
@@ -484,7 +487,7 @@ class IndexSpec extends AnyFunSuite {
 
     for (p <- idParts) {
       val after =
-        fileHashes(s"$idxDir/${Index.loadPart(idxDir, p).current}")
+        fileHashes(s"$idxDir/${Generations.load(idxDir).get.dir(p)}")
       val (wasTouched, wasKept) =
         before(p).partition { case (n, _) => bucketOf(n) == touchedBucket }
       assert(wasTouched.nonEmpty && wasKept.nonEmpty,
@@ -559,7 +562,7 @@ class IndexSpec extends AnyFunSuite {
     Index.delete(spark, "idx_eub", tomb, "vec_id")
     for (p <- parts) {
       def files(d: String) =
-        fileHashes(s"$d/${Index.loadPart(d, p).current}")
+        fileHashes(s"$d/${Generations.load(d).get.dir(p)}")
       assert(files(idxDirA).size == files(idxDirB).size,
         s"$p file count diverges from the delete twin (empty ingest " +
           "deltas staged?)")
@@ -569,12 +572,11 @@ class IndexSpec extends AnyFunSuite {
     }
     // a batch with nothing to remove AND nothing to ingest advances
     // no generation at all
-    val gens = parts.map(p => p -> Index.loadPart(idxDirA, p).gen).toMap
+    val gen = Generations.load(idxDirA).get.gen
     Index.upsert(spark, "idx_eua", emptyIngest, "vec_id", "embedding",
       delIds = Some(Seq.empty[Long].toDF("vec_id")), delCol = "vec_id")
-    for (p <- parts)
-      assert(Index.loadPart(idxDirA, p).gen == gens(p),
-        s"$p advanced a generation on a no-op batch")
+    assert(Generations.load(idxDirA).get.gen == gen,
+      "a no-op batch advanced a generation")
     // duplicate ingest ids: both rows would land in the encoded parts
     // and search could return one neighbor id twice — refused loudly
     val dup = embs.filter(col("vec_id").isin(8, 10))
@@ -604,18 +606,17 @@ class IndexSpec extends AnyFunSuite {
     val idxDirA = s"$dirA/idx_upa"
     val idParts = Seq("codes", "sq_codes", "bq_codes")
     val beforeFiles = idParts.map { p =>
-      p -> fileHashes(s"$idxDirA/${Index.loadPart(idxDirA, p).current}")
+      p -> fileHashes(s"$idxDirA/${Generations.load(idxDirA).get.dir(p)}")
     }.toMap
-    val gensBefore = (idParts :+ "postings").map(p =>
-      p -> Index.loadPart(idxDirA, p).gen).toMap
+    val genBefore = Generations.load(idxDirA).get.gen
 
     Index.upsert(spark, "idx_upa", ingest, "vec_id", "embedding",
       delIds = Some(tomb), delCol = "vec_id")
 
-    // ONE commit per part (delete-then-append would be two)
-    for ((p, g) <- gensBefore)
-      assert(Index.loadPart(idxDirA, p).gen == g + 1,
-        s"$p advanced ${Index.loadPart(idxDirA, p).gen - g} generations")
+    // ONE commit for every part (delete-then-append would be two)
+    val genAfter = Generations.load(idxDirA).get.gen
+    assert(genAfter == genBefore + 1,
+      s"upsert advanced ${genAfter - genBefore} generations")
     // row-equal to the same maintenance as explicit delete + append
     Index.delete(spark, "idx_upb",
       ingest.select(col("vec_id")).union(tomb), "vec_id")
@@ -634,7 +635,7 @@ class IndexSpec extends AnyFunSuite {
       n match { case bucketRe(b) => b.toInt; case _ => -1 }
     for (p <- idParts) {
       val after =
-        fileHashes(s"$idxDirA/${Index.loadPart(idxDirA, p).current}")
+        fileHashes(s"$idxDirA/${Generations.load(idxDirA).get.dir(p)}")
       val kept = beforeFiles(p).filter { case (n, _) =>
         !touchedBuckets.contains(bucketOf(n)) }
       assert(kept.nonEmpty, s"$p fixture must leave an untouched bucket")
@@ -665,5 +666,41 @@ class IndexSpec extends AnyFunSuite {
       assert(spark.table(s"idx_upa_$p").collect().map(_.toSeq).toSet
         == rowsBefore(p), s"$p rows changed under replay")
     assert(searchOf("idx_upa") == got)
+  }
+
+  test("a vector width other than the codes' 64 fails loud at build, naming the width, before any element_at") {
+    val narrow = embs.select(col("vec_id"),
+      slice(col("embedding"), 1, 32).as("embedding"), col("label"))
+    val e = intercept[IllegalArgumentException] {
+      Index.build(spark, narrow, "vec_id", "embedding", "label", "idx_w32",
+        itersIvf = 1, massign = 2, m = 16, ksub = 32, itersPq = 1,
+        nBuckets = 4, baseDir = Some(tmpBase("w32")))
+    }
+    assert(e.getMessage.contains("vector width 32"), e.getMessage)
+    assert(!Index.exists(spark, "idx_w32"))
+    val e2 = intercept[IllegalArgumentException] {
+      Pq.topK(narrow, "vec_id", "embedding", col("vec_id") < 4, k = 3,
+        m = 16, ksub = 32, iters = 1, rerank = 20).collect()
+    }
+    assert(e2.getMessage.contains("vector width 32"), e2.getMessage)
+    // m must tile the width too (the tallOf slice guard)
+    val e3 = intercept[IllegalArgumentException] {
+      Index.build(spark, embs, "vec_id", "embedding", "label", "idx_m5",
+        itersIvf = 1, massign = 2, m = 5, ksub = 32, itersPq = 1,
+        nBuckets = 4, baseDir = Some(tmpBase("m5")))
+    }
+    assert(e3.getMessage.contains("m=5"), e3.getMessage)
+  }
+
+  test("a ragged-width corpus fails loud in k-means, naming both widths, instead of training on a sampled width") {
+    val first = embs.agg(min(col("vec_id"))).head().get(0)
+    val ragged = embs.select(col("vec_id"),
+      when(col("vec_id") === lit(first), slice(col("embedding"), 1, 32))
+        .otherwise(col("embedding")).as("embedding"), col("label"))
+    val e = intercept[IllegalArgumentException] {
+      Similarity.kmeans(ragged, "vec_id", "embedding", "label", 1).collect()
+    }
+    assert(e.getMessage.contains("ragged") && e.getMessage.contains("32") &&
+      e.getMessage.contains("64"), e.getMessage)
   }
 }

@@ -19,6 +19,13 @@ import graft.streaming.LwwMerge.KeyedChange
   */
 class StreamingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+
+  /** A state table's bucket → committed version, read from its
+    * committed generation state (entry `b<k>` names `b<k>/<version>`).
+    */
+  private def committed(tableDir: String): Map[Int, String] =
+    graft.ops.Generations.load(tableDir).get.current.map { case (e, ds) =>
+      e.stripPrefix("b").toInt -> ds.head.stripPrefix(s"$e/") }
   import spark.implicits._
 
   test("streaming LWW state matches the batch merge winners") {
@@ -140,7 +147,7 @@ class StreamingSpec extends AnyFunSuite {
         }.toMap
     }
     val before = fileState()
-    val (_, manifestBefore) = StateTable.loadManifest(tableDir)
+    val manifestBefore = committed(tableDir)
     assert(manifestBefore.nonEmpty)
 
     // one-key update batch: exactly one bucket may change
@@ -151,7 +158,7 @@ class StreamingSpec extends AnyFunSuite {
     q2.stop()
 
     val after = fileState()
-    val (_, manifestAfter) = StateTable.loadManifest(tableDir)
+    val manifestAfter = committed(tableDir)
     val changedBuckets = manifestAfter.filter { case (b, v) =>
       manifestBefore.get(b) != Some(v)
     }.keySet
@@ -178,7 +185,7 @@ class StreamingSpec extends AnyFunSuite {
     StateTable.applyBatchBucketed(seed, tableDir, batchId = 0, nBucketsIfNew = 4)
 
     // plant an orphan version (crashed attempt) and a stale staging dir
-    val (_, manifest) = StateTable.loadManifest(tableDir)
+    val manifest = committed(tableDir)
     val someBucket = manifest.keys.head
     val orphan = java.nio.file.Paths.get(tableDir, s"b$someBucket", "v_orphan")
     java.nio.file.Files.createDirectories(orphan)
@@ -219,7 +226,7 @@ class StreamingSpec extends AnyFunSuite {
     StateTable.applyBatchBucketed(seed, tableDir, batchId = 0, nBucketsIfNew = 8)
 
     def parquetFilesPerVersion(): Map[String, Int] = {
-      val (_, m) = StateTable.loadManifest(tableDir)
+      val m = committed(tableDir)
       m.map { case (b, v) =>
         s"b$b/$v" -> java.nio.file.Files.list(
             java.nio.file.Paths.get(tableDir, s"b$b", v))
@@ -236,7 +243,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(after == before)
     assert(parquetFilesPerVersion().values.forall(_ == 1))
     // every bucket dir holds exactly the one committed version
-    val (_, m2) = StateTable.loadManifest(tableDir)
+    val m2 = committed(tableDir)
     m2.foreach { case (b, v) =>
       val dirs = java.nio.file.Files.list(java.nio.file.Paths.get(tableDir, s"b$b"))
         .iterator().asScala.map(_.getFileName.toString).toSet
@@ -260,7 +267,7 @@ class StreamingSpec extends AnyFunSuite {
     val snapshot = StateTable.read(spark, tableDir)
     val expected = snapshot.select("key", "payload")
       .as[(String, String)].collect().toSet
-    val (_, m1) = StateTable.loadManifest(tableDir)
+    val m1 = committed(tableDir)
     val v1Dirs = m1.map { case (b, v) => java.nio.file.Paths.get(tableDir, s"b$b", v) }
 
     // commit 2 supersedes every bucket — inside the grace window the

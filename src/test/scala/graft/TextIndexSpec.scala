@@ -48,7 +48,7 @@ class TextIndexSpec extends AnyFunSuite {
     */
   private def currentDir(base: String, name: String, p: String): String = {
     val dir = s"$base/$name"
-    s"$dir/${TextIndex.loadState(dir).get.parts(p)}"
+    s"$dir/${Generations.load(dir).get.dir(p)}"
   }
 
   private def searchOf(name: String) =
@@ -285,21 +285,21 @@ class TextIndexSpec extends AnyFunSuite {
     val dir = tmpBase("atomic")
     TextIndex.build(spark, docs, "doc_id", "text", "tidx_at",
       nBuckets = 4, baseDir = Some(dir))
-    val st0 = TextIndex.loadState(s"$dir/tidx_at").get
-    assert(st0.gen == 0 && st0.parts.values.toSet ==
+    val st0 = Generations.load(s"$dir/tidx_at").get
+    assert(st0.gen == 0 && st0.current.values.flatten.toSet ==
       Set("postings", "dl", "stats", "meta"))
     TextIndex.delete(spark, "tidx_at",
       docs.filter(col("doc_id") % 3 === 0).select(col("doc_id")), "doc_id")
-    val st1 = TextIndex.loadState(s"$dir/tidx_at").get
+    val st1 = Generations.load(s"$dir/tidx_at").get
     assert(st1.gen == 1)
     // ONE commit: every part's current dir carries the same generation
     // tag — there is no state where postings moved but stats/meta
     // lagged (the advice-r13 df/N inflation window)
     for (p <- Seq("postings", "dl", "stats", "meta"))
-      assert(st1.parts(p).startsWith(s"${p}_g1_"),
-        s"$p not committed at gen 1: ${st1.parts(p)}")
+      assert(st1.dir(p).startsWith(s"${p}_g1_"),
+        s"$p not committed at gen 1: ${st1.dir(p)}")
     // and the four generation dirs share one commit uid
-    val uids = st1.parts.map { case (pn, d) => d.stripPrefix(s"${pn}_g1_") }
+    val uids = st1.current.map { case (pn, ds) => ds.head.stripPrefix(s"${pn}_g1_") }
     assert(uids.toSet.size == 1)
     // served scores reflect the corrected stats (survivor-exactness is
     // pinned by the delete law test; here just the consistency probe)
@@ -438,16 +438,16 @@ class TextIndexSpec extends AnyFunSuite {
     TextIndex.build(spark, quarter(0), "doc_id", "text", "tidx_gr",
       nBuckets = 4, baseDir = Some(dir))
     val idx = s"$dir/tidx_gr"
-    def dirsOf(st: TextIndex.IndexState) = st.parts.values.toSet
+    def dirsOf(st: Generations.State) = st.current.values.flatten.toSet
     def onDisk(names: Set[String]) = names.forall(n =>
       java.nio.file.Files.isDirectory(java.nio.file.Paths.get(idx, n)))
-    val gen0 = dirsOf(TextIndex.loadState(idx).get)
+    val gen0 = dirsOf(Generations.load(idx).get)
 
     // commit 1 carries grace=2: gen0 is retired but KEPT — a reader
     // that resolved the old state keeps a complete file set
     TextIndex.append(spark, "tidx_gr", quarter(1), "doc_id", "text",
       graceCommits = 2)
-    val gen1 = dirsOf(TextIndex.loadState(idx).get)
+    val gen1 = dirsOf(Generations.load(idx).get)
     assert(onDisk(gen0), "graced generation swept early")
     val d1 = TextIndex.describe(spark, "tidx_gr").collect()
     assert(d1.length == 4)
@@ -462,7 +462,7 @@ class TextIndexSpec extends AnyFunSuite {
 
     // commit 3: gen0 leaves the window and is reclaimed; gen1/gen2
     // stay; serving is the full union throughout
-    val gen2 = dirsOf(TextIndex.loadState(idx).get)
+    val gen2 = dirsOf(Generations.load(idx).get)
     TextIndex.append(spark, "tidx_gr", quarter(3), "doc_id", "text")
     assert(!gen0.exists(n =>
       java.nio.file.Files.isDirectory(java.nio.file.Paths.get(idx, n))),
@@ -484,16 +484,16 @@ class TextIndexSpec extends AnyFunSuite {
     TextIndex.append(spark, "tidx_grl",
       docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
       graceCommits = 3)
-    assert(TextIndex.loadState(idx).get.grace == 3)
+    assert(Generations.load(idx).get.grace == 3)
     // the ratchet still holds for every NON-reset op
     TextIndex.compact(spark, "tidx_grl")
-    assert(TextIndex.loadState(idx).get.grace == 3)
-    assert(TextIndex.loadState(idx).get.retired.nonEmpty)
+    assert(Generations.load(idx).get.grace == 3)
+    assert(Generations.load(idx).get.retired.nonEmpty)
     // the explicit operator action lowers it — and the sweep reclaims
     // everything the narrower window no longer covers
     TextIndex.compact(spark, "tidx_grl", graceCommits = 0,
       resetGrace = true)
-    val st = TextIndex.loadState(idx).get
+    val st = Generations.load(idx).get
     assert(st.grace == 0 && st.retired.isEmpty)
     assert(searchOf("tidx_grl") == inPlan(docs))
   }
@@ -591,7 +591,7 @@ class TextIndexSpec extends AnyFunSuite {
       "doc_id", "text", "tidx_leg", nBuckets = 4, baseDir = Some(dir))
     val idx = s"$dir/tidx_leg"
     // forge the legacy layout: canonical part dirs, NO state file
-    Files.delete(java.nio.file.Paths.get(idx, "index.current"))
+    Files.delete(java.nio.file.Paths.get(idx, Generations.StateFile))
     // maintenance must refuse directory-guessing outright
     val e = intercept[RuntimeException] {
       TextIndex.append(spark, "tidx_leg",
@@ -603,9 +603,9 @@ class TextIndexSpec extends AnyFunSuite {
     for (p <- Seq("postings", "dl", "stats", "meta"))
       spark.sql(s"DROP TABLE IF EXISTS tidx_leg_$p")
     TextIndex.register(spark, "tidx_leg", dir)
-    val st = TextIndex.loadState(idx)
+    val st = Generations.load(idx)
     assert(st.isDefined && st.get.gen == 0L &&
-      st.get.parts("postings") == "postings")
+      st.get.current("postings") == Seq("postings"))
     TextIndex.append(spark, "tidx_leg",
       docs.filter(col("doc_id") % 2 === 1), "doc_id", "text")
     assert(searchOf("tidx_leg") == inPlan(docs))
@@ -629,10 +629,10 @@ class TextIndexSpec extends AnyFunSuite {
     val ups = (replaced ++ inserted).toDF("doc_id", "text")
     val dels = rows.map(_._1).filter(_ % 5 == 1).toDF("doc_id")
 
-    val gen0 = TextIndex.loadState(idx).get.gen
+    val gen0 = Generations.load(idx).get.gen
     TextIndex.upsert(spark, "tidx_ups", ups, "doc_id", "text",
       delIds = Some(dels), delCol = "doc_id", batchId = Some("ups_1"))
-    assert(TextIndex.loadState(idx).get.gen == gen0 + 1,
+    assert(Generations.load(idx).get.gen == gen0 + 1,
       "upsert must be exactly ONE generation commit")
 
     val expected = (rows.toMap -- rows.map(_._1).filter(_ % 5 == 1)
@@ -651,12 +651,12 @@ class TextIndexSpec extends AnyFunSuite {
     // marked replay: O(1) no-op, generation unchanged
     TextIndex.upsert(spark, "tidx_ups", ups, "doc_id", "text",
       delIds = Some(dels), delCol = "doc_id", batchId = Some("ups_1"))
-    assert(TextIndex.loadState(idx).get.gen == gen0 + 1)
+    assert(Generations.load(idx).get.gen == gen0 + 1)
     // un-marked replay: removes its own rows, re-adds the same content
     // — one more generation, identical serving
     TextIndex.upsert(spark, "tidx_ups", ups, "doc_id", "text",
       delIds = Some(dels), delCol = "doc_id")
-    assert(TextIndex.loadState(idx).get.gen == gen0 + 2)
+    assert(Generations.load(idx).get.gen == gen0 + 2)
     assert(searchOf("tidx_ups") == got)
   }
 
@@ -669,7 +669,7 @@ class TextIndexSpec extends AnyFunSuite {
         docs.filter(col("doc_id") % 4 === q), "doc_id", "text")
     }
     val idx = s"$dir/tidx_ac"
-    def maxFiles(): Int = TextIndex.loadState(idx).get.parts.values.map {
+    def maxFiles(): Int = Generations.load(idx).get.current.values.flatten.map {
       d => Files.list(java.nio.file.Paths.get(idx, d)).iterator().asScala
         .count { f =>
           val n = f.getFileName.toString
@@ -682,8 +682,8 @@ class TextIndexSpec extends AnyFunSuite {
     assert(maxFiles() <= 4, "compact leaves ≤ one file per bucket")
     assert(searchOf("tidx_ac") == before)
     // now under threshold: the check is a filesystem-metadata no-op
-    val gen = TextIndex.loadState(idx).get.gen
+    val gen = Generations.load(idx).get.gen
     assert(!TextIndex.maybeCompact(spark, "tidx_ac", maxFilesPerPart = 6))
-    assert(TextIndex.loadState(idx).get.gen == gen)
+    assert(Generations.load(idx).get.gen == gen)
   }
 }

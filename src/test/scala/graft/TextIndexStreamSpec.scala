@@ -269,7 +269,7 @@ class TextIndexStreamSpec extends AnyFunSuite {
     q.stop()
 
     val idx = s"$dir/tidxs_ac"
-    val maxFiles = TextIndex.loadState(idx).get.parts.values.map { d =>
+    val maxFiles = Generations.load(idx).get.current.values.flatten.map { d =>
       Files.list(java.nio.file.Paths.get(idx, d)).iterator().asScala
         .count { f =>
           val n = f.getFileName.toString

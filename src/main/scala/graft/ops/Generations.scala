@@ -6,7 +6,7 @@ import scala.collection.JavaConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The ONE crash-safe commit protocol behind every persisted artifact
   * ([[Index]], [[TextIndex]], [[GraphStore]]) and every bucketed
@@ -152,6 +152,16 @@ private[graft] object Generations {
     commit(root, base, dirs, graceCommits = graceCommits,
       resetGrace = resetGrace)
   }
+
+  /** Bucket-write `df` as `entry` of artifact `name` into
+    * `<root>/.staging/<entry>_<tag>` through the throwaway stage table
+    * `<name>_<entry>_stage_<tag>`; returns the staged data files (none
+    * for an empty frame). What every owner's maintenance stages with.
+    */
+  def stage(df: DataFrame, root: String, name: String, entry: String,
+      tag: String, key: String, buckets: Int): Seq[Path] =
+    Bucketing.stageBucketed(df, s"${name}_${entry}_stage_$tag", key,
+      buckets, Paths.get(root, Staging, s"${entry}_$tag").toString)
 
   /** A (re)build: generation 0 with exactly `current`, no retirees and
     * no grace promise carried over from whatever the root held before —

@@ -197,6 +197,9 @@ object GraphStore {
     * byte-identical. IDEMPOTENT under replay: ids already in the
     * artifact are dropped up front, so at-least-once delivery
     * ([[graft.streaming.GraphStream.maintain]]) cannot double-merge.
+    * Precondition (upsert's): `newEmbs` holds each id at most once —
+    * an id twice in one call fails with "duplicate ids" and commits
+    * nothing, since two vectors for one id have no winner to keep.
     */
   def append(spark: SparkSession, name: String, newEmbs: DataFrame,
       idCol: String, vecCol: String, seedCol: String): Unit = {
@@ -205,17 +208,8 @@ object GraphStore {
     val fresh = newEmbs.join(labels.select(col("id").as(s"__seen_$idCol")),
       newEmbs(idCol) === col(s"__seen_$idCol"), "left_anti")
     upsertImpl(spark, name, Some((fresh, idCol, vecCol, seedCol)), None,
-      idCol)
+      idCol, knownNew = true)
   }
-
-  /** Bucket-write `df` as part `p` into `.staging/<p>_<tag>` (a
-    * throwaway stage table); returns the staged data files.
-    */
-  private def stage(spark: SparkSession, name: String, dir: String,
-      df: DataFrame, p: String, nBuckets: Int,
-      tag: String): Seq[java.nio.file.Path] =
-    Bucketing.stageBucketed(df, s"${part(name, p)}_stage_$tag",
-      BucketKeys(p), nBuckets, s"$dir/${Generations.Staging}/${p}_$tag")
 
   /** Takedown for the graph artifact — the [[graft.ops.Index.delete]]
     * analog: the result equals a full rebuild at the STORED centroids
@@ -281,8 +275,8 @@ object GraphStore {
     *  - ingested sources take the top-k of their full candidate set;
     *  - every other source keeps its stored rows, and untouched
     *    bucket FILES hard-link into the fresh generation
-    *    byte-identical ([[delete]]'s pruning; the ingest's rows land
-    *    as new files).
+    *    byte-identical ([[delete]]'s pruning, extended with the
+    *    ingest's own buckets).
     *
     * Replay-idempotent WITHOUT markers (the [[Index.upsert]]
     * argument): a replayed upsert removes exactly the ids it itself
@@ -304,23 +298,34 @@ object GraphStore {
     * rewrites stage concurrently while the catalog still serves the
     * old generation, then all three parts commit in ONE
     * [[Generations]] swap — a crash leaves the old graph or the new
-    * one, never a mix of parts.
+    * one, never a mix of parts. `knownNew`: the ingest's ids are
+    * absent from the graph ([[append]] drops held ids first), so they
+    * need no removal pass, and their rows land as new files beside
+    * the byte-identical committed ones (append's delta-append);
+    * otherwise the buckets the ingest hashes into are rewritten with
+    * its rows.
     */
   private def upsertImpl(spark: SparkSession, name: String,
       ingest: Option[(DataFrame, String, String, String)],
-      delIds: Option[DataFrame], delCol: String): Unit = {
+      delIds: Option[DataFrame], delCol: String,
+      knownNew: Boolean = false): Unit = {
+    import spark.implicits._
     val (k, massign, nBuckets) = metaOf(spark, name)
     // removal set: every ingested id leaves first (an upsert of a
     // graphed id must REPLACE its vector), plus the explicit
     // tombstones. Explicit persist + finally-unpersist: the streaming
     // feeds call this once per micro-batch with batch-unique plans
     // (self-review r13 — the CounterStore-family cache discipline).
+    // An empty set stays a literal empty relation, so the optimizer
+    // drops every removal join of a pure append.
     val removalSrcs =
-      ingest.map { case (df, ic, _, _) =>
+      ingest.filterNot(_ => knownNew).map { case (df, ic, _, _) =>
         df.select(col(ic).cast("long").as("__del")) }.toSeq ++
       delIds.map(_.select(col(delCol).cast("long").as("__del"))).toSeq
-    if (removalSrcs.isEmpty) return
-    val del = removalSrcs.reduce(_ unionByName _).distinct().persist()
+    if (ingest.isEmpty && delIds.isEmpty) return
+    val del =
+      if (removalSrcs.isEmpty) Seq.empty[Long].toDF("__del")
+      else removalSrcs.reduce(_ unionByName _).distinct().persist()
     val ingestBase = ingest.map { case (df, ic, vc, _) => baseOf(df, ic, vc) }
     try {
       // ONE bounded probe job (r18: was three — requireUniqueIds,
@@ -422,12 +427,12 @@ object GraphStore {
 
         def bucketOf(c: org.apache.spark.sql.Column) =
           pmod(hash(c), lit(nBuckets))
-        // per-part touched-bucket digests (≤ nBuckets values each) —
-        // the buckets whose rows can change; the ingest's rows stage
-        // as new files beside the kept ones (a bucket may hold several
-        // files; [[compact]] re-pins one). ONE tagged-union collect for
-        // all three parts (r18: three separate ~0.1 s digest jobs fused
-        // into one — same sets, same ≤ 3·nBuckets bound)
+        // per-part touched-bucket digests (≤ nBuckets values each);
+        // unless `knownNew`, the ingest's own ids/clusters join the
+        // touched sets, so every staged row hashes into a rewritten
+        // bucket. ONE tagged-union collect for all three parts (r18:
+        // three separate ~0.1 s digest jobs fused into one — same
+        // sets, same ≤ 3·nBuckets bound)
         def tagb(df: DataFrame, t: String) =
           df.select(lit(t).as("t"), col("b"))
         val digests = (Seq(
@@ -437,7 +442,11 @@ object GraphStore {
             tagb(blocks.join(del, blocks("id") === col("__del"), "left_semi")
               .select(bucketOf(col("cl")).as("b")), "b")) ++
           gainedOnly.map(g =>
-            tagb(g.select(bucketOf(col("src_id")).as("b")), "e")))
+            tagb(g.select(bucketOf(col("src_id")).as("b")), "e")) ++
+          newBlocks.filterNot(_ => knownNew).toSeq.flatMap(nb => Seq(
+            tagb(nb.select(bucketOf(col("id")).as("b")), "e"),
+            tagb(nb.select(bucketOf(col("id")).as("b")), "l"),
+            tagb(nb.select(bucketOf(col("cl")).as("b")), "b"))))
           .reduce(_ unionByName _).distinct().collect()
           .groupBy(_.getString(0))
           .map { case (t, rs) => t -> rs.map(_.getInt(1)).toSet }
@@ -465,9 +474,10 @@ object GraphStore {
             kept: DataFrame => DataFrame,
             add: Seq[DataFrame]): () => Seq[java.nio.file.Path] = () =>
           if (rew.isEmpty && !hasIngest) Nil
-          else stage(spark, name, dir,
+          else Generations.stage(
             ((if (rew.isEmpty) None else Some(kept(readFiles(rew)))).toSeq
-              ++ add).reduce(_ unionByName _), p, nBuckets, u)
+              ++ add).reduce(_ unionByName _),
+            dir, name, p, u, BucketKeys(p), nBuckets)
         val staged = Par.collect(Seq(
           // rows of the touched edge files whose src neither died,
           // re-ranks nor merges, plus the recomputed top-ks
@@ -495,11 +505,10 @@ object GraphStore {
   }
 
   /** Offline file-count maintenance — [[Index.compact]]'s graph
-    * analog. [[append]] delta-appends `blocks` and `labels` (one file
-    * set per batch: incremental by construction), and every bucketed
-    * write can emit one file per (task × bucket) it holds, so a long
-    * maintenance history accretes small files even though the edges
-    * CONTENT compacts on each rewrite. This rewrites the three big
+    * analog. [[append]] delta-appends (one file set per batch:
+    * incremental by construction), and every bucketed write can emit
+    * one file per (task × bucket) it holds, so a long maintenance
+    * history accretes small files. This rewrites the three big
     * tables with an explicit pre-partition on their bucket key —
     * `repartition(n, key)` and `bucketBy(n, key)` share the same
     * murmur3 hash partitioning, so each write task holds exactly one

@@ -601,17 +601,16 @@ object Index {
         if (key != "id") (files, Seq.empty[java.nio.file.Path])
         else files.partition(f => ArtifactFiles
           .bucketIdOf(f.getFileName.toString).forall(touched.contains))
-      def stage(df: DataFrame, tag: String): Seq[java.nio.file.Path] =
-        Bucketing.stageBucketed(df, s"${part(name, p)}_stage_$tag$u", key,
-          meta.nBuckets, s"$dir/${Generations.Staging}/${p}_$tag$u")
       val rewritten =
         if (rewrite.isEmpty) Nil
-        else stage(spark.read.parquet(rewrite.map(_.toString): _*)
+        else Generations.stage(spark.read.parquet(rewrite.map(_.toString): _*)
           .join(del, col("id") === col("__del_id"), "left_anti")
-          .repartition(meta.nBuckets, col(key)), "r")
+          .repartition(meta.nBuckets, col(key)),
+          dir, name, p, s"r$u", key, meta.nBuckets)
       // the ingest delta joins the SAME generation — removal and
       // ingest publish in one swap
-      p -> (keep ++ rewritten ++ deltaOf.get(p).toSeq.flatMap(stage(_, "i")))
+      p -> (keep ++ rewritten ++ deltaOf.get(p).toSeq.flatMap(
+        Generations.stage(_, dir, name, p, s"i$u", key, meta.nBuckets)))
     })
     attachParts(spark, name, dir,
       Generations.commitFiles(dir, st, staged.toMap, graceCommits),

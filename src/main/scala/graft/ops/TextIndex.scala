@@ -290,19 +290,6 @@ object TextIndex {
       "n_files", "bytes")
   }
 
-  /** Bucket-write `df` into `.staging/<p>_<u>` through a throwaway
-    * external stage table (the only way to bucketBy-write to a path);
-    * returns the staging directory. An empty delta stages zero files.
-    */
-  private def stageBucketed(spark: SparkSession, name: String,
-      dir: String, df: DataFrame, p: String, nBuckets: Int,
-      u: String): java.nio.file.Path = {
-    val target = java.nio.file.Paths.get(dir, Generations.Staging, s"${p}_$u")
-    Bucketing.stageBucketed(df, s"${part(name, p)}_stage_$u", BucketKeys(p),
-      nBuckets, target.toString)
-    target
-  }
-
   private def stageMeta(spark: SparkSession, dir: String,
       rows: Seq[(Long, Long, Int)], u: String): java.nio.file.Path = {
     import spark.implicits._
@@ -593,29 +580,28 @@ object TextIndex {
     val hasPos = st.current.contains("pos")
     val posJob =
       if (!hasPos) Seq.empty
-      else Seq(() => stageBucketed(spark, name, dir,
+      else Seq(() => Generations.stage(
         partDf("pos").repartition(nBuckets, col("tok")),
-        "pos", nBuckets, u))
+        dir, name, "pos", u, "tok", nBuckets))
     val staged = Par.collect(Seq(
-      () => stageBucketed(spark, name, dir,
+      () => Generations.stage(
         partDf("postings").repartition(nBuckets, col("tok")),
-        "postings", nBuckets, u),
-      () => stageBucketed(spark, name, dir,
+        dir, name, "postings", u, "tok", nBuckets),
+      () => Generations.stage(
         partDf("dl").repartition(nBuckets, col("id")),
-        "dl", nBuckets, u),
-      () => stageBucketed(spark, name, dir,
+        dir, name, "dl", u, "id", nBuckets),
+      () => Generations.stage(
         partDf("stats").groupBy(col("tok")).agg(sum(col("df")).as("df"))
           .filter(col("df") =!= 0)
           .repartition(nBuckets, col("tok")),
-        "stats", nBuckets, u)) ++ posJob)
+        dir, name, "stats", u, "tok", nBuckets)) ++ posJob)
     val mS = stageMeta(spark, dir, Seq((n, sumdl, nBuckets)), u)
     val base = Map(
-      "postings" -> Generations.dataFiles(staged(0)),
-      "dl" -> Generations.dataFiles(staged(1)),
-      "stats" -> Generations.dataFiles(staged(2)),
+      "postings" -> staged(0),
+      "dl" -> staged(1),
+      "stats" -> staged(2),
       "meta" -> Generations.dataFiles(mS))
-    val withPos =
-      if (hasPos) base + ("pos" -> Generations.dataFiles(staged(3))) else base
+    val withPos = if (hasPos) base + ("pos" -> staged(3)) else base
     commit(spark, name, dir, st, nBuckets, withPos,
       batchId = None, graceCommits = graceCommits,
       resetGrace = resetGrace)
@@ -734,24 +720,23 @@ object TextIndex {
       // phase 1 (concurrent): stage the deltas — invisible to
       // readers until the swap
       val posJob = ptoksDelta.toSeq.map(pt =>
-        () => stageBucketed(spark, name, dir, pt, "pos", nBuckets, u))
+        () => Generations.stage(pt, dir, name, "pos", u, "tok", nBuckets))
       val staged = Par.collect(Seq(
-        () => stageBucketed(spark, name, dir, tf, "postings", nBuckets, u),
-        () => stageBucketed(spark, name, dir, dl, "dl", nBuckets, u),
-        () => stageBucketed(spark, name, dir, dfT, "stats", nBuckets, u))
+        () => Generations.stage(tf, dir, name, "postings", u, "tok", nBuckets),
+        () => Generations.stage(dl, dir, name, "dl", u, "id", nBuckets),
+        () => Generations.stage(dfT, dir, name, "stats", u, "tok", nBuckets))
         ++ posJob)
       val mS = stageMeta(spark, dir, Seq((n, sumdl.getOrElse(0L), nBuckets)), u)
       // phase 2: fresh generations = current files + delta files, one
       // atomic swap across all parts
       val base = Map(
-        "postings" -> (currentFiles(dir, st, "postings") ++ Generations.dataFiles(staged(0))),
-        "dl" -> (currentFiles(dir, st, "dl") ++ Generations.dataFiles(staged(1))),
-        "stats" -> (currentFiles(dir, st, "stats") ++ Generations.dataFiles(staged(2))),
+        "postings" -> (currentFiles(dir, st, "postings") ++ staged(0)),
+        "dl" -> (currentFiles(dir, st, "dl") ++ staged(1)),
+        "stats" -> (currentFiles(dir, st, "stats") ++ staged(2)),
         "meta" -> (currentFiles(dir, st, "meta") ++ Generations.dataFiles(mS)))
       val withPos =
         if (hasPos)
-          base + ("pos" -> (currentFiles(dir, st, "pos")
-            ++ Generations.dataFiles(staged(3))))
+          base + ("pos" -> (currentFiles(dir, st, "pos") ++ staged(3)))
         else base
       commit(spark, name, dir, st, nBuckets, withPos, batchId,
         graceCommits)
@@ -886,12 +871,11 @@ object TextIndex {
         // ingest deltas, and both stats corrections — all invisible
         // until the one swap
         def rewrite(files: Seq[java.nio.file.Path],
-            p: String): Option[java.nio.file.Path] =
-          if (files.isEmpty) None
-          else Some(stageBucketed(spark, name, dir,
-            readPart(spark, p, files.map(_.toString))
+            p: String): Seq[java.nio.file.Path] =
+          if (files.isEmpty) Nil
+          else Generations.stage(readPart(spark, p, files.map(_.toString))
               .join(del, col("id") === col("__del"), "left_anti"),
-            p, nBuckets, s"rw_$u"))
+            dir, name, p, s"rw_$u", BucketKeys(p), nBuckets)
         val dfNeg = delPost.groupBy(col("tok"))
           .agg((-count(lit(1))).as("df"))
         val hasNew = nNew > 0
@@ -903,27 +887,27 @@ object TextIndex {
         // draft staged three empty frames per delete and the suite
         // paid minutes for it)
         val stats = if (hasNew) dfNeg.unionByName(dfPos) else dfNeg
-        val jobs: Seq[(String, () => Option[java.nio.file.Path])] =
+        val jobs: Seq[(String, () => Seq[java.nio.file.Path])] =
           Seq(
             "rwP" -> (() => rewrite(rewriteP, "postings")),
             "rwD" -> (() => rewrite(rewriteD, "dl")),
-            "st" -> (() => Some(stageBucketed(spark, name, dir, stats,
-              "stats", nBuckets, u)))) ++
+            "st" -> (() => Generations.stage(stats, dir, name, "stats", u,
+              "tok", nBuckets))) ++
           (if (hasNew) Seq(
-            "newP" -> (() => Some(stageBucketed(spark, name, dir, tf.get,
-              "postings", nBuckets, s"new_$u"))),
-            "newD" -> (() => Some(stageBucketed(spark, name, dir,
-              dlNew.get, "dl", nBuckets, s"new_$u")))) else Seq.empty) ++
+            "newP" -> (() => Generations.stage(tf.get, dir, name,
+              "postings", s"new_$u", "tok", nBuckets)),
+            "newD" -> (() => Generations.stage(dlNew.get, dir, name, "dl",
+              s"new_$u", "id", nBuckets))) else Seq.empty) ++
           (if (hasPos) Seq(
             "rwX" -> (() => rewrite(rewriteX, "pos"))) else Seq.empty) ++
           (if (hasPos && hasNew) Seq(
-            "newX" -> (() => Some(stageBucketed(spark, name, dir,
-              ptoksDelta.get, "pos", nBuckets, s"new_$u"))))
+            "newX" -> (() => Generations.stage(ptoksDelta.get, dir, name,
+              "pos", s"new_$u", "tok", nBuckets)))
            else Seq.empty)
         val staged = jobs.map(_._1)
           .zip(Par.collect(jobs.map(_._2))).toMap
         def filesOf(k: String): Seq[java.nio.file.Path] =
-          staged.get(k).flatten.toSeq.flatMap(Generations.dataFiles)
+          staged.getOrElse(k, Nil)
         val mS = stageMeta(spark, dir,
           Seq((nNew - nGone,
             dlNewSum.getOrElse(0L) - dlGone.getOrElse(0L), nBuckets)), u)

@@ -21,6 +21,11 @@ import graft.ops.GraphStore
   */
 object GraphStream {
 
+  /** Each micro-batch must carry an id at most once ([[GraphStore.append]]'s
+    * precondition): a batch holding one id twice fails the query
+    * before anything commits. Multi-version feeds go through
+    * [[applyChanges]], which collapses them last-writer-wins first.
+    */
   def maintain(embs: DataFrame, idCol: String, vecCol: String,
       seedCol: String, graphName: String, checkpointDir: String,
       autoCompactFiles: Option[Int] = None): StreamingQuery =

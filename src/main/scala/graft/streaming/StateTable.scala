@@ -2,6 +2,10 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
+import scala.collection.JavaConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -49,6 +53,11 @@ import graft.streaming.LwwMerge.KeyedChange
   * replay converges to the identical winners. Orphaned versions of a
   * crashed attempt are swept the next time their bucket is touched.
   *
+  * A table committed by the earlier layout keeps its commit in
+  * `manifest.json`; it reads as the same state (buckets, retirees,
+  * bucket count, generation, grace) and the next commit moves it to
+  * `_state.json`.
+  *
   * == Concurrency contract (single writer, snapshot-unsafe GC) ==
   *
   * One maintenance writer at a time — the stream's checkpoint already
@@ -91,7 +100,8 @@ object StateTable {
     * buckets, so [[applyBatchBucketed]] always prefers the stored
     * value. An uncommitted table is empty.
     */
-  private[graft] final case class Manifest(state: Generations.State) {
+  private[graft] final case class Manifest(state: Generations.State,
+      legacy: Boolean = false) {
     def nBuckets: Option[Int] = state.layout.get("nBuckets")
     def gen: Long = state.gen
     def buckets: Map[Int, String] = state.current.map { case (e, ds) =>
@@ -99,7 +109,38 @@ object StateTable {
   }
 
   private[graft] def manifestOf(tableDir: String): Manifest =
-    Manifest(Generations.load(tableDir).getOrElse(Generations.Empty))
+    Generations.load(tableDir).map(Manifest(_))
+      .orElse(legacyManifest(tableDir))
+      .getOrElse(Manifest(Generations.Empty))
+
+  private val LegacyFile = "manifest.json"
+
+  /** The earlier layout's commit file — `nBuckets`, `gen`, `grace`,
+    * `buckets` (bucket → version) and `retired` ({b, v, gen}) — read as
+    * the equivalent state: entry `b<k>` → `b<k>/<version>`, retirees
+    * grouped by the generation that retired them. Read-only; the next
+    * [[commitPartitioned]] writes the state file and removes this one.
+    */
+  private def legacyManifest(tableDir: String): Option[Manifest] = {
+    val f = Paths.get(tableDir, LegacyFile)
+    if (!Files.exists(f)) None
+    else {
+      val n = new ObjectMapper().readTree(Files.readString(f))
+      val current = n.get("buckets").properties().asScala.map { e =>
+        s"b${e.getKey}" -> Seq(s"b${e.getKey}/${e.getValue.asText}") }.toMap
+      val retired = Option(n.get("retired")).toSeq
+        .flatMap(_.elements().asScala)
+        .groupBy(_.get("gen").asLong).toSeq.sortBy(_._1)
+        .map { case (g, rs) =>
+          g -> rs.groupBy(r => s"b${r.get("b").asInt}").map { case (e, es) =>
+            e -> es.map(r => s"$e/${r.get("v").asText}") } }
+      Some(Manifest(Generations.State(
+        Option(n.get("gen")).map(_.asLong).getOrElse(0L),
+        Option(n.get("grace")).map(_.asInt).getOrElse(0),
+        current, retired, Map("nBuckets" -> n.get("nBuckets").asInt)),
+        legacy = true))
+    }
+  }
 
   /** Operational snapshot of a committed table: one row per LIVE
     * bucket — (bucket, version, n_files, bytes) straight from the
@@ -275,6 +316,7 @@ object StateTable {
       moved.map(b => s"b$b" -> Seq(s"b$b/$version")).toMap,
       removed = emptied.filterNot(moved.contains).map(b => s"b$b"),
       graceCommits = graceCommits, layout = Map("nBuckets" -> nBuckets))
+    if (st.legacy) Files.deleteIfExists(Paths.get(tableDir, LegacyFile))
   }
 
   /** Remove `del`'s keys (single column `keyCol`) from a committed

@@ -141,6 +141,24 @@ class GraphStoreSpec extends AnyFunSuite {
     assert(spark.table("g_str_labels").count() == embs.count())
   }
 
+  test("append refuses an ingest that holds one id twice and commits nothing") {
+    val dir = tmpBase("dup")
+    GraphStore.build(spark, embs.filter(col("vec_id") % 2 === 0), "vec_id",
+      "embedding", "label", "g_dup", k = 4, iters = 1, massign = 2,
+      nBuckets = 4, baseDir = Some(dir))
+    def edges() = GraphStore.edges(spark, "g_dup")
+      .as[(Long, Long, Long, Long)].collect().sorted.toSeq
+    val before = edges()
+    val odd = embs.filter(col("vec_id") % 2 === 1)
+    val e = intercept[IllegalArgumentException] {
+      GraphStore.append(spark, "g_dup", odd.unionByName(odd.limit(1)),
+        "vec_id", "embedding", "label")
+    }
+    assert(e.getMessage.contains("duplicate ids"))
+    assert(Generations.load(s"$dir/g_dup").get.gen == 0L)
+    assert(edges() == before)
+  }
+
   test("delete equals a fixed-centroid rebuild over the survivors; serves follow") {
     val dir = tmpBase("del")
     GraphStore.build(spark, embs, "vec_id", "embedding", "label",

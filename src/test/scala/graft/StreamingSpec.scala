@@ -291,6 +291,56 @@ class StreamingSpec extends AnyFunSuite {
     assert(cur.size == 16 && cur("k3") == "d3")
   }
 
+  test("state table: a table committed in the earlier manifest.json layout keeps its rows, bucket count and graced retirees across the next batch") {
+    val root = Files.createTempDirectory("graft_state_legacy").toString
+    val tableDir = s"$root/table"
+    import graft.streaming.StateTable
+    import spark.implicits._
+
+    def batch(tag: String, keys: Seq[Int]) = keys.map(i =>
+      KeyedChange(s"k$i", ChangeOp.Update, tag.hashCode.abs.toLong,
+        tag.hashCode.toLong, 1, s"$tag$i")).toDF()
+    StateTable.applyBatchBucketed(batch("a", 1 to 16), tableDir, 0, 4,
+      graceCommits = 2)
+    StateTable.applyBatchBucketed(batch("b", 1 to 16), tableDir, 1, 4,
+      graceCommits = 2)
+
+    // rewrite the committed state as the earlier layout's manifest.json
+    // (bucket → version, retired {b, v, gen}) and drop _state.json
+    val st = graft.ops.Generations.load(tableDir).get
+    val buckets = committed(tableDir).toSeq.sortBy(_._1)
+      .map { case (b, v) => s""""$b": "$v"""" }.mkString(", ")
+    val retiredDirs = st.retired.flatMap { case (g, d) =>
+      d.values.flatten.map(g -> _) }
+    assert(retiredDirs.nonEmpty && retiredDirs.forall(_._1 == 2L))
+    val retired = retiredDirs.map { case (g, d) =>
+      val Array(b, v) = d.split("/")
+      s"""{"b": ${b.stripPrefix("b")}, "v": "$v", "gen": $g}"""
+    }.mkString(", ")
+    Files.writeString(java.nio.file.Paths.get(tableDir, "manifest.json"),
+      s"""{"nBuckets": 4, "gen": ${st.gen}, "grace": 2, "buckets": {$buckets}, "retired": [$retired]}""")
+    Files.delete(java.nio.file.Paths.get(tableDir,
+      graft.ops.Generations.StateFile))
+
+    def current() = Merge.current(StateTable.read(spark, tableDir))
+      .select("key", "payload").as[(String, String)].collect().toMap
+    val before = current()
+    assert(before.size == 16 && before("k3") == "b3")
+
+    // the next batch (asking for 8 buckets, grace 0) must hash with the
+    // stored 4, keep every untouched row and the graced retirees, and
+    // move the commit into _state.json
+    StateTable.applyBatchBucketed(batch("c", Seq(1, 99)), tableDir, 2, 8)
+    assert(current() == before ++ Map("k1" -> "c1", "k99" -> "c99"))
+    val next = graft.ops.Generations.load(tableDir).get
+    assert(next.gen == st.gen + 1 && next.grace == 2 &&
+      next.layout == Map("nBuckets" -> 4))
+    assert(next.current.keySet.forall(e => e.stripPrefix("b").toInt < 4))
+    assert(retiredDirs.forall { case (_, d) =>
+      Files.exists(java.nio.file.Paths.get(tableDir, d)) })
+    assert(!Files.exists(java.nio.file.Paths.get(tableDir, "manifest.json")))
+  }
+
   test("state table: replaying the same batch after a partial commit converges (idempotent)") {
     implicit val sqlCtx = spark.sqlContext
     val root = Files.createTempDirectory("graft_state_replay").toString

@@ -11,7 +11,8 @@ import org.apache.spark.sql.execution.ExplainMode
   * section states the property the plan must exhibit (pruned scan,
   * early filter, broadcast, partial agg, long join keys), then shows
   * the plan that exhibits it. PlanSpec asserts the same properties in
-  * CI; this file is the human-readable twin.
+  * CI; this file is the human-readable twin. Given query names, it
+  * renders just their plans (before/after evidence for a plan claim).
   */
 object Plans {
 
@@ -358,7 +359,7 @@ object Plans {
         |build seeded nlist from the id space instead of the 10
         |labels, so list OCCUPANCY stays bounded as the corpus grows
         |(the sf1.0 point measured the label seeding at ~quadratic;
-        |ScaleProbe: 13× from the seeding alone).""".stripMargin,
+        |`Probe scale`: 13× from the seeding alone).""".stripMargin,
     "q_mm_audio" ->
       """REAL WAV decode, same shape as q_mm_decode: encode+parse in
         |one per-partition chain, no shuffle, doc_id-only
@@ -529,28 +530,31 @@ object Plans {
         |corpus-wide shuffle beyond the BM25 index build the ranker
         |itself owns.""".stripMargin)
 
+  /** PLANS.md for the load-bearing queries, with their commentary; or,
+    * given query names, only those queries' formatted plans.
+    */
+  def render(spark: SparkSession, sfDir: String,
+      names: Seq[String] = Nil): String = {
+    def section(name: String, note: Option[String]): String = {
+      val plan = SparkEntry.queries(name)(spark, sfDir)
+        .queryExecution.explainString(ExplainMode.fromString("formatted"))
+      s"\n## $name\n\n${note.fold("")(_ + "\n\n")}```\n$plan```\n"
+    }
+    if (names.nonEmpty) names.map(section(_, None)).mkString
+    else "# PLANS — formatted physical plans of the load-bearing queries\n\n" +
+      "Generated by `graft.Plans` at sf0.001; the same properties are\n" +
+      "asserted by `PlanSpec` in CI.\n" +
+      commentary.map { case (name, note) => section(name, Some(note)) }.mkString
+  }
+
+  /** `Plans [out] [sfDir] [q_name...]` */
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("PLANS.md")
     val sfDir = args.drop(1).headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    val sb = new StringBuilder
-    sb.append("# PLANS — formatted physical plans of the load-bearing queries\n\n")
-    sb.append("Generated by `graft.Plans` at sf0.001; the same properties are\n")
-    sb.append("asserted by `PlanSpec` in CI.\n")
-    for ((name, note) <- commentary) {
-      val plan = SparkEntry.queries(name)(spark, sfDir)
-        .queryExecution.explainString(ExplainMode.fromString("formatted"))
-      sb.append(s"\n## $name\n\n$note\n\n```\n$plan```\n")
-    }
-    Files.write(Paths.get(out), sb.toString.getBytes(StandardCharsets.UTF_8))
+    val spark = SessionConf.session(4)
+    try Files.write(Paths.get(out),
+      render(spark, sfDir, args.drop(2).toSeq).getBytes(StandardCharsets.UTF_8))
+    finally spark.stop()
     println(s"[plans] wrote $out")
-    spark.stop()
   }
 }

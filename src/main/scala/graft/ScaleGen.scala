@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf1.0 scale-point generator: 10 statistically-faithful copies of
@@ -37,9 +37,9 @@ import org.apache.spark.sql.functions._
   *    replica index, so tail-gram document frequency stops growing
   *    with corpus size while within-copy structure, lengths, dup
   *    pairs, and the in-copy df profile are untouched. This is the
-  *    realistic-vocabulary regime `graft.VocabProbe` measured
-  *    (round 10); the flag makes it a REUSABLE scale point instead
-  *    of a probe-side derivation.
+  *    realistic-vocabulary regime `graft.Probe vocab` measures; the
+  *    flag makes it a REUSABLE scale point instead of a probe-side
+  *    derivation.
   *
   * Usage: `runMain graft.ScaleGen [srcDir] [outDir] [copies] [--vocab-grow]`
   * (defaults: /root/testdata/sf0.1 → testdata-sf1.0, 10 copies).
@@ -50,9 +50,8 @@ object ScaleGen {
     * documents frame: words whose type-hash coin lands odd get
     * suffixed with the row's replica index (`doc_id div nDoc` — the
     * inverse of ScaleGen's id offsetting), making them copy-local.
-    * Shared by the `--vocab-grow` generator flag and
-    * [[graft.VocabProbe]], so the probe measures exactly the corpus
-    * the generator ships.
+    * Shared by the `--vocab-grow` generator flag and `Probe vocab`, so
+    * the probe measures exactly the corpus the generator ships.
     */
   def vocabGrown(docs: DataFrame, nDoc: Long): DataFrame = {
     val k = (col("doc_id") / lit(nDoc)).cast("int")
@@ -72,14 +71,7 @@ object ScaleGen {
     val src = positional.lift(0).getOrElse("/root/testdata/sf0.1")
     val out = positional.lift(1).getOrElse("testdata-sf1.0")
     val copies = positional.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SessionConf.session(32)
 
     def t(name: String): DataFrame =
       spark.read.parquet(s"$src/$name.parquet")

@@ -2,11 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Scale-adaptive session tuning shared by the driver-contract mains
-  * (Bench, Verify) and the measurement probes — guide §2.2 / §2.4 and
-  * the round-18 brief's "make partitioning scale-adaptive (AQE
-  * coalescing / derive from input size) rather than a constant tuned
-  * for either local mode or the cluster".
+/** The one session every entry point (Bench, Verify, ScaleGen, Plans,
+  * Probe) runs on, and the scale-adaptive tuning it applies — guide
+  * §2.2 / §2.4 and the round-18 brief's "make partitioning
+  * scale-adaptive (AQE coalescing / derive from input size) rather
+  * than a constant tuned for either local mode or the cluster".
   *
   * `spark.sql.shuffle.partitions` stays at the core count (the upper
   * bound AQE starts from), but AQE's partition COALESCING is switched
@@ -29,6 +29,28 @@ import org.apache.spark.sql.SparkSession
   * reproducible and the production value is a conf, not a code edit.
   */
 object SessionConf {
+
+  /** `SPARK_GRAFT_CPUS`, or the entry point's own default core count. */
+  def cpus(default: Int): String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", default.toString)
+
+  /** `local[cpus]` with as many shuffle partitions, UTC, UI off,
+    * [[tuned]], log level WARN. `conf` adds static settings an entry
+    * point needs before the session starts.
+    */
+  def session(defaultCpus: Int, conf: (String, String)*): SparkSession = {
+    val n = cpus(defaultCpus)
+    val spark = tuned(conf.foldLeft(SparkSession.builder()
+      .master(s"local[$n]")
+      .config("spark.sql.shuffle.partitions", n)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")) { case (b, (k, v)) =>
+        b.config(k, v)
+      }).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   def tuned(b: SparkSession.Builder): SparkSession.Builder = {
     val base = b
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",

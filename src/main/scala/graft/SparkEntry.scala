@@ -1138,7 +1138,7 @@ object SparkEntry {
     // label-seeded twin above freezes nlist at the 10 labels (per-
     // list occupancy, and with it the Σ|list|² block join, then grows
     // linearly with the corpus — the sf1.0 point measured ~quadratic
-    // growth, and ScaleProbe measured 13x from the seeding alone).
+    // growth, and `Probe scale` measured 13x from the seeding alone).
     // Here nlist derives from a hash of the id space (32 ≈ √n at the
     // gate SF; real deployments size nlist ∝ √n), so list occupancy
     // — not list COUNT — is what stays bounded as data grows. Same
@@ -1161,7 +1161,7 @@ object SparkEntry {
     // not the 10 labels — list OCCUPANCY stays bounded as the corpus
     // grows, so the Σ|list|² block join scales ~n^1.5 instead of the
     // ~quadratic growth the label seeding measured at sf1.0
-    // (BASELINE.md; ScaleProbe isolated 13x from the seeding alone).
+    // (BASELINE.md; `Probe scale` isolated 13x from the seeding alone).
     "q_sim_graph_delete" -> ((s, dir) => {
       val embs = T(s, dir, "embeddings")
         .withColumn("seed", pmod(col("vec_id"), lit(32L)))

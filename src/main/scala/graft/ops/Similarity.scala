@@ -300,7 +300,7 @@ object Similarity {
     // on the DRIVER: collect the round's aggregate (the one job a
     // round fundamentally needs) and rebuild a LocalRelation. The old
     // shape did the merge as a cents⟗computed join + localCheckpoint —
-    // 3-4 extra scheduled jobs per round of pure overhead (JobProbe:
+    // 3-4 extra scheduled jobs per round of pure overhead (job counts:
     // queries here run 1-task jobs at ~0.1 s fixed cost each) plus
     // checkpoint blocks the ContextCleaner had to chase (the
     // Bench System.gc() note). Values are bit-identical: same

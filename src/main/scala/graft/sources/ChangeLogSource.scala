@@ -422,44 +422,39 @@ case class ChangeLogPartition(file: String, from: Long, until: Long,
 class ChangeLogReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[ChangeLogPartition]
-    if (ChangeLog.isBinlog(p.file)) new PartitionReader[InternalRow] {
-      // wire-framed segment: decode events → row-changes, slice the
-      // same (from, until) row window the offsets planned
-      private val it = Binlog
-        .decodeFile(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(p.file)))
-        .changes.iterator.zipWithIndex
-        .filter { case (_, i) => i >= p.from && i < p.until }
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (it.hasNext) {
-          val (rc, i) = it.next()
-          current = InternalRow(
-            UTF8String.fromString(rc.op), UTF8String.fromString(rc.db),
-            UTF8String.fromString(rc.table),
-            rc.before.map(UTF8String.fromString).orNull,
-            rc.after.map(UTF8String.fromString).orNull,
-            rc.tsSec * 1000000L, // binlog header epoch sec → micros
-            UTF8String.EMPTY_UTF8, // pkey empty on live changes
-            p.seqBase + i)
-          true
-        } else false
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    } else new PartitionReader[InternalRow] {
-      private val mapper = new ObjectMapper()
-      private val src = scala.io.Source.fromFile(p.file)
-      private val it = src.getLines().filter(_.nonEmpty).zipWithIndex
-        .filter { case (_, i) => i >= p.from && i < p.until }
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (it.hasNext) {
-          val (line, i) = it.next()
-          current = ChangeLog.parseLine(mapper, line, p.seqBase + i)
-          true
-        } else false
-      override def get(): InternalRow = current
-      override def close(): Unit = src.close()
+    // the (from, until) row window the offsets planned, as one index
+    // slice: reading stops at `until`
+    def window[A](rows: Iterator[A]): Iterator[(A, Int)] =
+      rows.zipWithIndex.dropWhile(_._2 < p.from).takeWhile(_._2 < p.until)
+    if (ChangeLog.isBinlog(p.file)) {
+      // wire-framed segment: decode events → row-changes
+      val changes = Binlog.decodeFile(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(p.file))).changes.iterator
+      reader(window(changes).map { case (rc, i) =>
+        InternalRow(
+          UTF8String.fromString(rc.op), UTF8String.fromString(rc.db),
+          UTF8String.fromString(rc.table),
+          rc.before.map(UTF8String.fromString).orNull,
+          rc.after.map(UTF8String.fromString).orNull,
+          rc.tsSec * 1000000L, // binlog header epoch sec → micros
+          UTF8String.EMPTY_UTF8, // pkey empty on live changes
+          p.seqBase + i)
+      }, () => ())
+    } else {
+      val mapper = new ObjectMapper()
+      val src = scala.io.Source.fromFile(p.file)
+      reader(window(src.getLines().filter(_.nonEmpty)).map { case (line, i) =>
+        ChangeLog.parseLine(mapper, line, p.seqBase + i)
+      }, () => src.close())
     }
+  }
+
+  private def reader(rows: Iterator[InternalRow], onClose: () => Unit)
+      : PartitionReader[InternalRow] = new PartitionReader[InternalRow] {
+    private var current: InternalRow = _
+    override def next(): Boolean =
+      rows.hasNext && { current = rows.next(); true }
+    override def get(): InternalRow = current
+    override def close(): Unit = onClose()
   }
 }

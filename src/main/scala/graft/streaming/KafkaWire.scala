@@ -580,9 +580,10 @@ object KafkaWire {
       changes.writeStream
         .option("checkpointLocation", checkpointDir)
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          if (!batch.isEmpty)
-            publishFrame(Sink.kafkaFrame(batch, topic, transform), bs,
-              batchCreateTime(batch))
+          // no emptiness probe (a job per trigger): an empty batch
+          // publishes nothing, since publishFrame skips empty partitions
+          publishFrame(Sink.kafkaFrame(batch, topic, transform), bs,
+            batchCreateTime(batch))
         }
         .start()
     }

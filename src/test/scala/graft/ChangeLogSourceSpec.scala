@@ -2,9 +2,12 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.sources.{ChangeLogPartition, ChangeLogReaderFactory}
 
 /** DSv2 change-log source (SURVEY §2.1 S1-S3): (file,row) offsets ≙
   * binlog (filename,pos); rotation ≙ next file; checkpoint resume ≙
@@ -24,6 +27,29 @@ class ChangeLogSourceSpec extends AnyFunSuite {
       s"""{"op":"$op","db":"db${i % 2}","table":"users","before":$before,"after":$after,"ts":${1700000000 + i},"pkey":"id"}"""
     }
     Files.write(Paths.get(dir, name), lines.mkString("\n").getBytes)
+  }
+
+  /** The rows the reader serves for one `[from, until)` window of `file`. */
+  private def readSlice(file: String, from: Long, until: Long): Seq[InternalRow] = {
+    val r = new ChangeLogReaderFactory()
+      .createReader(ChangeLogPartition(file, from, until, seqBase = 100L))
+    try Iterator.continually(r).takeWhile(_.next()).map(_.get().copy()).toVector
+    finally r.close()
+  }
+
+  /** A mid-file slice returns exactly the rows, `seq` included, that a
+    * whole-file read gives in `[from, until)`.
+    */
+  private def assertMidFileSlice(file: String, from: Long, until: Long): Unit = {
+    val whole = readSlice(file, 0L, Long.MaxValue)
+    assert(0 < from && from < until && until < whole.size, "a mid-file window")
+    val seqIdx = graft.sources.ChangeLog.schema.fieldIndex("seq")
+    val slice = readSlice(file, from, until)
+    assert(slice.map(_.getLong(seqIdx)) == (100L + from until 100L + until))
+    assert(slice == whole.filter { r =>
+      val i = r.getLong(seqIdx) - 100L
+      i >= from && i < until
+    })
   }
 
   test("batch read: whole log, schema + null/ts semantics") {
@@ -52,6 +78,7 @@ class ChangeLogSourceSpec extends AnyFunSuite {
     // the LWW tie-break — rather than colliding at 0 per file
     assert(seqs.size == 9 && seqs.toSet.size == 9)
     assert(seqs.toSet == ((0L until 5L) ++ (5L until 9L).map(i => (1L << 40) + i - 5)).toSet)
+    assertMidFileSlice(s"$dir/log.000001.jsonl", 1L, 4L)
   }
 
   test("driver row-count scans are memoized: one scan per sealed segment") {
@@ -274,6 +301,7 @@ class ChangeLogSourceSpec extends AnyFunSuite {
     assert(r.getAs[String]("db") == "shop")
     assert(r.getAs[String]("pkey") == "") // empty on live changes
     assert(r.getAs[java.sql.Timestamp]("ts").getTime == 1700000002000L)
+    assertMidFileSlice(s"$dir/log.000001.binlog", 1L, 2L)
 
     def drain(): Long = {
       val q = spark.readStream.format(Fmt).option("path", dir)

@@ -434,6 +434,47 @@ class KafkaWireSpec extends AnyFunSuite {
     assert(KafkaWire.batchCreateTime(allNull) == 0L)
   }
 
+  test("wireSink publishes every change-log record exactly once across triggers; an empty frame opens no connection") {
+    val broker = new ScriptedBroker(nPartitions = 3)
+    val empty = new ScriptedBroker(nPartitions = 3)
+    try {
+      val dir = java.nio.file.Files.createTempDirectory("kw_log")
+      val ckp = java.nio.file.Files.createTempDirectory("kw_ckp").toString
+      for (f <- 1 to 2) {
+        val lines = (f * 5 until f * 5 + 5).map { i =>
+          s"""{"op":"Insert","db":"db${i % 2}","table":"users","before":null,"after":{"id":"$i"},"ts":${1700000000 + i},"pkey":"id"}"""
+        }
+        java.nio.file.Files.write(dir.resolve(s"log.00000$f.jsonl"),
+          lines.mkString("\n").getBytes(UTF_8))
+      }
+      def batchRead = spark.read.format("graft-changelog")
+        .option("path", dir.toString).load()
+      val stream = spark.readStream.format("graft-changelog")
+        .option("path", dir.toString).option("maxRowsPerTrigger", "3").load()
+      val q = KafkaWire.wireSink(stream, ckp,
+        Some(s"localhost:${broker.server.getLocalPort}")).get
+      try q.processAllAvailable() finally q.stop()
+      assert(q.recentProgress.count(_.numInputRows > 0) >= 4)
+
+      def strings(rows: Seq[(Array[Byte], Array[Byte], String)]) =
+        rows.map(r => (new String(r._1, UTF_8), new String(r._2, UTF_8), r._3))
+          .sorted
+      val want = strings(Sink.kafkaFrame(batchRead)
+        .select("key", "value", "topic")
+        .as[(Array[Byte], Array[Byte], String)].collect().toSeq)
+      val got = strings(broker.produced.synchronized {
+        broker.produced.toSeq.flatMap { p =>
+          decodeBatch(p.batch).map { case (k, v) => (k, v, p.topic) }
+        }
+      })
+      assert(want.size == 10 && got == want)
+
+      KafkaWire.publishFrame(Sink.kafkaFrame(batchRead.limit(0)),
+        s"localhost:${empty.server.getLocalPort}", timestampMs = 0L)
+      assert(empty.accepted.get == 0 && empty.produced.isEmpty)
+    } finally { broker.stop(); empty.stop(); KafkaWire.poolClear() }
+  }
+
   test("wireSink is integration-gated exactly like kafkaSink: None without a broker env") {
     val changes = cdc.ChangeSource.fromEvents(
       cdc.Io.table(spark, "/root/testdata/sf0.001", "events"))

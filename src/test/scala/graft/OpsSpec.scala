@@ -642,9 +642,9 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("skewed-slice ladder: the profile surfaces the hot key and salting provably spreads its reducer work") {
-    // the SkewBench fixture shape at spec scale: boilerplate in 20%
+    // the `Probe skew` fixture shape at spec scale: boilerplate in 20%
     // of docs -> its shingles are the hot join keys
-    val docs = SkewBench.skewedDocs(
+    val docs = Probe.skewedDocs(
       (0 until 50).map(i => (i.toLong,
         s"u${i}a u${i}b u${i}c u${i}d u${i}e u${i}f u${i}g u${i}h"))
         .toDF("doc_id", "text").withColumn("lang", lit("en"))

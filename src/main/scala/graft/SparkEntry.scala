@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.cdc._
 import graft.ops._
+import graft.streaming.TrilogyStream
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -2087,17 +2088,10 @@ object SparkEntry {
           col("event_id").as("seq"))
         .join(donors, col("key") % 250 === col("dkey"))
         .select(col("key"), col("text"), col("dvec").as("vec"),
+          pmod(col("key"), lit(64L)).as("seed"),
           col("op"), col("ts_sec"), col("seq"))
       // ONE LWW collapse, shared by all three upserts
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("key"))
-        .orderBy(col("ts_sec").desc, col("seq").desc)
-      val winners = Caching.cachedOnce(
-        live.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn"))
-      val ups = winners.filter(col("op") =!= ChangeOp.Delete)
-      val tombs = winners.filter(col("op") === ChangeOp.Delete)
-        .select(col("key"))
+      val winners = Caching.cachedOnce(TrilogyStream.collapse(live, "key"))
       // pay-once bases (the vector ones shared with X158/X159)
       if (!TextIndex.exists(s, "graft_tidx_all"))
         TextIndex.build(s, docs, "doc_id", "text", "graft_tidx_all",
@@ -2120,20 +2114,11 @@ object SparkEntry {
             .withColumn("seed", pmod(col("vec_id"), lit(64L))),
           "vec_id", "embedding", "seed")
       }
-      // three upserts from the one winners frame — concurrent,
-      // exactly the TrilogyStream.applyChanges batch body
-      graft.ops.Par.jobs(Seq(
-        () => TextIndex.upsert(s, "graft_tidx_all",
-          ups.select(col("key"), col("text")), "key", "text",
-          delIds = Some(tombs), delCol = "key"),
-        () => Index.upsert(s, "graft_idx_cdc",
-          ups.select(col("key"), col("vec")), "key", "vec",
-          delIds = Some(tombs), delCol = "key"),
-        () => GraphStore.upsert(s, "graft_knng_cdc",
-          ups.select(col("key"), col("vec"),
-            pmod(col("key"), lit(64L)).as("seed")),
-          "key", "vec", "seed",
-          delIds = Some(tombs), delCol = "key")))
+      // the feed's batch body: three upserts from the one winners frame
+      TrilogyStream.upsertWinners(s, winners, "key", "op", Seq(
+        TrilogyStream.Text("graft_tidx_all", "text"),
+        TrilogyStream.Ann("graft_idx_cdc", "vec"),
+        TrilogyStream.Graph("graft_knng_cdc", "vec", "seed")))
       // three serves, one aligned frame
       val text = TextIndex.search(s, "graft_tidx_all", k = 10)
         .select(lit("text").as("fam"), col("qid").cast("long").as("q"),
@@ -2149,7 +2134,8 @@ object SparkEntry {
           col("embedding").cast("array<double>").as("vec"))
         .join(winners.select(col("key").as("id")), Seq("id"),
           "left_anti")
-        .unionByName(ups.select(col("key").as("id"), col("vec")))
+        .unionByName(winners.filter(col("op") =!= ChangeOp.Delete)
+          .select(col("key").as("id"), col("vec")))
       val ann = Index.search(s, "graft_idx_cdc", mergedCorpus,
           "id", "vec", col("id") < 8, k = 5, nprobe = 4, rerank = 40)
         .select(lit("ann").as("fam"), col("qid").cast("long").as("q"),

@@ -331,7 +331,7 @@ object GraphStore {
       // ONE bounded probe job (r18: was three — requireUniqueIds,
       // ingest isEmpty, del isEmpty): the unique-ingest-id
       // precondition (advice r16; multi-version batches LWW-collapse
-      // first in GraphStream.applyChanges) and "a present-but-empty
+      // first in TrilogyStream.applyChanges) and "a present-but-empty
       // ingest frame is a pure takedown" (the r16 verdict-#2
       // discipline: no empty delta staging) read off one aggregate.
       val probe = (Seq(del.select(lit("d").as("t"), col("__del").as("k"))) ++

@@ -491,7 +491,7 @@ object Index {
     * exactly the rows it itself added (the removal set is its own
     * ingest ids) and re-encodes the same vectors at the same fixed
     * params — byte-equal state, so the streaming CDC feed
-    * ([[graft.streaming.IndexStream.applyChanges]]) needs no marker
+    * ([[graft.streaming.TrilogyStream.applyChanges]]) needs no marker
     * table (unlike [[TextIndex]], whose append-side content guards
     * made un-marked replays observable in the stats).
     *
@@ -547,7 +547,7 @@ object Index {
     //    restricted to the del side's bucket values);
     //  - the unique-ingest-id precondition (advice r16;
     //    multi-version batches LWW-collapse first in
-    //    IndexStream.applyChanges) and "a PRESENT-but-empty ingest
+    //    TrilogyStream.applyChanges) and "a PRESENT-but-empty ingest
     //    frame is a pure takedown" (verdict r16 #2: it used to
     //    bucket-write and link four empty delta files per
     //    generation) both read off the same aggregate.

@@ -166,7 +166,8 @@ object TextIndex {
 
   /** The ONLY marker shape the high-watermark rule may prune:
     * `<feed><ns8hex>_<epoch>` — exactly what the
-    * [[graft.streaming.TextIndexStream]] feeds write. The epoch
+    * [[graft.streaming.TextIndexStream]] feeds and the
+    * [[graft.streaming.TrilogyStream]] CDC feed write. The epoch
     * argument (foreachBatch serializes epochs; only the LAST
     * uncommitted one redelivers) holds for those namespaces alone; a
     * MANUAL caller's batchIds ("job_1".."job_7") carry no ordering
@@ -797,7 +798,7 @@ object TextIndex {
       .distinct().persist()
     try {
       // unique-ingest-id precondition (advice r16; multi-version
-      // batches LWW-collapse first in TextIndexStream.applyChanges)
+      // batches LWW-collapse first in TrilogyStream.applyChanges)
       newDocs.foreach(ArtifactFiles.requireUniqueIds)
       val postingsDir = java.nio.file.Paths.get(dir, st.dir("postings"))
       val dlDir = java.nio.file.Paths.get(dir, st.dir("dl"))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -29,9 +29,11 @@ import graft.ops.{Index, Vectors}
   * rather than hidden.
   *
   * IndexStreamSpec proves a MemoryStream of probe vectors produces
-  * EXACTLY the batch [[graft.ops.Index.search]] rows.
+  * EXACTLY the batch [[graft.ops.Index.search]] rows. Change streams
+  * maintain the index through [[TrilogyStream.applyChanges]].
   */
 object IndexStream {
+  import TrilogyStream.streaming
 
   /** Start the probe stream. `queries` is a streaming DataFrame with
     * (`idCol`, `vecCol`); `corpus` the static indexed table (exact
@@ -41,20 +43,8 @@ object IndexStream {
   def probe(queries: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, indexName: String, k: Int, nprobe: Int,
       rerank: Int, outDir: String, checkpointDir: String): StreamingQuery =
-    queries.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val base = Index.baseOf(corpus, idCol, vecCol)
-          val qb = batch.select(col(idCol).as("qid"),
-              Vectors.toDouble(col(vecCol)).as("qv"))
-            .withColumn("qnrm", Vectors.norm(col("qv")))
-          Index.searchQueries(spark, indexName, base, qb, k, nprobe, rerank)
-            .write.mode("append").parquet(outDir)
-        }
-      }
-      .start()
+    probeWith(queries, corpus, idCol, vecCol, outDir, checkpointDir)(
+      Index.searchQueries(_, indexName, _, _, k, nprobe, rerank))
 
   /** [[probe]] against the SQ serving tier ([[graft.ops.Index
     * .searchSq]]): same stream-static shape, but arriving vectors
@@ -65,20 +55,8 @@ object IndexStream {
   def probeSq(queries: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, indexName: String, k: Int, nprobe: Int,
       rerank: Int, outDir: String, checkpointDir: String): StreamingQuery =
-    queries.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val base = Index.baseOf(corpus, idCol, vecCol)
-          val qb = batch.select(col(idCol).as("qid"),
-              Vectors.toDouble(col(vecCol)).as("qv"))
-            .withColumn("qnrm", Vectors.norm(col("qv")))
-          Index.searchSqQueries(spark, indexName, base, qb, k, nprobe, rerank)
-            .write.mode("append").parquet(outDir)
-        }
-      }
-      .start()
+    probeWith(queries, corpus, idCol, vecCol, outDir, checkpointDir)(
+      Index.searchSqQueries(_, indexName, _, _, k, nprobe, rerank))
 
   /** [[probe]] against the BQ serving tier ([[graft.ops.Index
     * .searchBq]]): same stream-static shape, but arriving vectors cut
@@ -89,130 +67,62 @@ object IndexStream {
   def probeBq(queries: DataFrame, corpus: DataFrame, idCol: String,
       vecCol: String, indexName: String, k: Int, rerank: Int,
       outDir: String, checkpointDir: String): StreamingQuery =
-    queries.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val spark = batch.sparkSession
-          val base = Index.baseOf(corpus, idCol, vecCol)
-          val qb = batch.select(col(idCol).as("qid"),
-              Vectors.toDouble(col(vecCol)).as("qv"))
-            .withColumn("qnrm", Vectors.norm(col("qv")))
-          Index.searchBqQueries(spark, indexName, base, qb, k, rerank)
-            .write.mode("append").parquet(outDir)
-        }
-      }
-      .start()
+    probeWith(queries, corpus, idCol, vecCol, outDir, checkpointDir)(
+      Index.searchBqQueries(_, indexName, _, _, k, rerank))
+
+  /** Each trigger's (`qid`, `qv`, `qnrm`) query frame, searched by
+    * `search(spark, base, queries)` and appended to `outDir`.
+    */
+  private def probeWith(queries: DataFrame, corpus: DataFrame,
+      idCol: String, vecCol: String, outDir: String, checkpointDir: String)(
+      search: (SparkSession, DataFrame, DataFrame) => DataFrame)
+      : StreamingQuery =
+    streaming(queries, checkpointDir) { (batch, _) =>
+      val qb = batch.select(col(idCol).as("qid"),
+          Vectors.toDouble(col(vecCol)).as("qv"))
+        .withColumn("qnrm", Vectors.norm(col("qv")))
+      search(batch.sparkSession, Index.baseOf(corpus, idCol, vecCol), qb)
+        .write.mode("append").parquet(outDir)
+    }
 
   /** Streaming index MAINTENANCE — the other half of the lifecycle:
     * each micro-batch of arriving embeddings is encoded at the stored
     * centroids/codebooks and committed to the bucketed postings/codes
     * as ONE atomic generation ([[graft.ops.Index.appendCommitted]] —
     * cost ∝ batch, committed files untouched, readers keep their
-    * snapshot for `graceCommits` further batches). The stream's
-    * checkpoint serializes batches, matching the index's single-writer
-    * contract; a crashed trigger leaves NO trace in the served index
-    * (the generation commit is all-or-nothing) and its replay
-    * re-encodes the same vectors — SEARCH RESULTS are unaffected
-    * (candidate pairs are distinct and the ADC dedups code rows;
-    * IndexStreamSpec proves a double-append changes nothing), so the
-    * only replay cost is duplicate storage, reclaimed by
-    * [[graft.ops.Index.compact]]'s rewrite cadence. Retraining stays
-    * an offline policy, exactly like production IVF systems.
+    * snapshot for `graceCommits` further batches). A crashed trigger
+    * leaves NO trace in the served index (the generation commit is
+    * all-or-nothing) and its replay re-encodes the same vectors —
+    * SEARCH RESULTS are unaffected (candidate pairs are distinct and
+    * the ADC dedups code rows; IndexStreamSpec proves a double-append
+    * changes nothing), so the only replay cost is duplicate storage,
+    * reclaimed by [[graft.ops.Index.compact]]'s rewrite cadence.
+    * Retraining stays an offline policy, exactly like production IVF
+    * systems.
     */
   def maintain(embs: DataFrame, idCol: String, vecCol: String,
       indexName: String, checkpointDir: String,
       graceCommits: Int = 0, manifestCommit: Boolean = false,
       autoCompactFiles: Option[Int] = None): StreamingQuery =
-    embs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          Index.appendCommitted(batch.sparkSession, indexName, batch,
-            idCol, vecCol, graceCommits, manifestCommit)
-          // r14 verdict #7: a long-lived stream accretes one file set
-          // (or manifest segment) per batch — the threshold check
-          // keeps the artifact bounded without an operator cron
-          autoCompactFiles.foreach(
-            Index.maybeCompact(batch.sparkSession, indexName, _))
-        }
-      }
-      .start()
+    streaming(embs, checkpointDir, autoCompactFiles,
+        Index.maybeCompact(_, indexName, _)) { (batch, _) =>
+      Index.appendCommitted(batch.sparkSession, indexName, batch,
+        idCol, vecCol, graceCommits, manifestCommit)
+    }
 
   /** Streaming TAKEDOWN feed — a stream of delete requests (rows of
-    * `idCol`) applied to the index per micro-batch through
-    * [[graft.ops.Index.delete]]'s atomic generation commits. The
-    * checkpoint serializes batches (single-writer, like [[maintain]]);
-    * [[graft.ops.Index.delete]] is idempotent by construction (an
-    * anti-join against already-removed ids is a no-op), so an
-    * at-least-once replay cannot over-delete. `graceCommits` stays 0
-    * by default — the takedown retention bound.
+    * `idCol`) applied through [[graft.ops.Index.delete]]'s atomic
+    * generation commits. [[graft.ops.Index.delete]] is idempotent by
+    * construction (an anti-join against already-removed ids is a
+    * no-op), so an at-least-once replay cannot over-delete.
+    * `graceCommits` stays 0 by default — the takedown retention bound.
     */
   def retract(delIds: DataFrame, idCol: String, indexName: String,
       checkpointDir: String, graceCommits: Int = 0,
       autoCompactFiles: Option[Int] = None): StreamingQuery =
-    delIds.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          Index.delete(batch.sparkSession, indexName, batch, idCol,
-            graceCommits)
-          autoCompactFiles.foreach(
-            Index.maybeCompact(batch.sparkSession, indexName, _))
-        }
-      }
-      .start()
-
-  /** CDC feed (X158) — [[graft.streaming.TextIndexStream.applyChanges]]
-    * on the VECTOR artifact: decoded change rows (`keyCol`, `opCol` ∈
-    * [[graft.cdc.ChangeOp]], `vecCol` the row's current embedding,
-    * `tsCol`, `seqCol`) maintain the index as upserts + tombstones.
-    * Per micro-batch:
-    *
-    *  1. within-batch LWW — several changes to one key collapse to
-    *     the batch's (ts, seq)-winner BEFORE touching the artifact;
-    *  2. ONE [[graft.ops.Index.upsert]]: every winner key leaves the
-    *     encoded parts (an upsert of an indexed id must replace its
-    *     codes; an unknown key's removal is a no-op) and the
-    *     non-tombstone winners' vectors are encoded at the FIXED
-    *     trained params and ingested — removal rewrites and ingest
-    *     deltas publish in one generation of all parts.
-    *
-    * Applying batches in log order IS last-writer-wins (the binlog
-    * serializes a key's changes). Replay safety needs no marker
-    * table: a replayed upsert removes exactly the rows it itself
-    * added and re-encodes the same vectors at the same fixed params —
-    * byte-equal state (IndexStreamSpec proves replay == single
-    * application, and the stream == one batch upsert of the
-    * LWW-collapsed winners).
-    */
-  def applyChanges(changes: DataFrame, keyCol: String, opCol: String,
-      vecCol: String, indexName: String, checkpointDir: String,
-      tsCol: String = "ts_sec", seqCol: String = "seq",
-      graceCommits: Int = 0,
-      autoCompactFiles: Option[Int] = None): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val w = org.apache.spark.sql.expressions.Window
-            .partitionBy(col(keyCol))
-            .orderBy(col(tsCol).desc, col(seqCol).desc)
-          val winners = batch.withColumn("__rn", row_number().over(w))
-            .filter(col("__rn") === 1).drop("__rn").persist()
-          try {
-            Index.upsert(s, indexName,
-              winners.filter(col(opCol) =!= graft.cdc.ChangeOp.Delete)
-                .select(col(keyCol), col(vecCol)),
-              keyCol, vecCol,
-              delIds = Some(
-                winners.filter(col(opCol) === graft.cdc.ChangeOp.Delete)
-                  .select(col(keyCol))),
-              delCol = keyCol, graceCommits = graceCommits)
-            autoCompactFiles.foreach(Index.maybeCompact(s, indexName, _))
-          } finally winners.unpersist()
-        }
-      }
-      .start()
+    streaming(delIds, checkpointDir, autoCompactFiles,
+        Index.maybeCompact(_, indexName, _)) { (batch, _) =>
+      Index.delete(batch.sparkSession, indexName, batch, idCol,
+        graceCommits)
+    }
 }

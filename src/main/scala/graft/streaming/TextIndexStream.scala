@@ -1,11 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.cdc.ChangeOp
 import graft.ops.TextIndex
 
 /** Streaming maintenance for the persisted inverted text index
@@ -15,10 +12,8 @@ import graft.ops.TextIndex
   * (TextIndex's additive-stats law), and serving keeps reading the
   * same bucketed tables.
   *
-  * All feeds run their batch maintenance op inside `foreachBatch`;
-  * the stream's checkpoint serializes triggers, matching the
-  * artifact's single-writer contract. At-least-once is SAFE here by
-  * construction, not by cleanup — on two layers (advice r13):
+  * At-least-once is SAFE here by construction, not by cleanup — on
+  * two layers (advice r13):
   *
   *  - each trigger passes its epoch as the maintenance op's
   *    `batchId`; TextIndex commits all tables in ONE atomic state
@@ -42,18 +37,14 @@ import graft.ops.TextIndex
   * land in the SAME namespace on restart, or the O(1) replay dedup
   * silently degrades to full content-guard re-runs.
   *
-  * Each feed takes an optional `autoCompactFiles` threshold — after
-  * its maintenance commit it runs [[TextIndex.maybeCompact]], so a
-  * long-lived stream keeps the artifact's file count bounded without
-  * an operator cron (r14 verdict #7); under threshold the check is
-  * filesystem metadata only.
-  *
   * TextIndexStreamSpec proves micro-batched ingest (+ a replay)
   * serves the one-shot build's ranking bit-for-bit, micro-batched
   * retraction (+ a replay) the survivor build's, and the CDC feed
-  * ([[applyChanges]]) the LWW-merged corpus build's.
+  * ([[TrilogyStream.applyChanges]] with one text target) the
+  * LWW-merged corpus build's.
   */
 object TextIndexStream {
+  import TrilogyStream.streaming
 
   /** Stable per-stream marker namespace: the checkpoint directory is
     * the stream's durable identity (same across restarts, different
@@ -99,17 +90,11 @@ object TextIndexStream {
   def maintain(docs: DataFrame, idCol: String, textCol: String,
       name: String, checkpointDir: String,
       autoCompactFiles: Option[Int] = None): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        if (!batch.isEmpty) {
-          TextIndex.append(batch.sparkSession, name, batch, idCol,
-            textCol, batchId = Some(s"ing${ns(checkpointDir)}_$bid"))
-          autoCompactFiles.foreach(
-            TextIndex.maybeCompact(batch.sparkSession, name, _))
-        }
-      }
-      .start()
+    streaming(docs, checkpointDir, autoCompactFiles,
+        TextIndex.maybeCompact(_, name, _)) { (batch, bid) =>
+      TextIndex.append(batch.sparkSession, name, batch, idCol, textCol,
+        batchId = Some(s"ing${ns(checkpointDir)}_$bid"))
+    }
 
   /** Takedown feed: rows of `idCol` delete from `name` per
     * micro-batch through the bucket-pruned rewrite + negative stats
@@ -118,69 +103,9 @@ object TextIndexStream {
   def retract(delIds: DataFrame, idCol: String, name: String,
       checkpointDir: String,
       autoCompactFiles: Option[Int] = None): StreamingQuery =
-    delIds.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        if (!batch.isEmpty) {
-          TextIndex.delete(batch.sparkSession, name, batch, idCol,
-            batchId = Some(s"del${ns(checkpointDir)}_$bid"))
-          autoCompactFiles.foreach(
-            TextIndex.maybeCompact(batch.sparkSession, name, _))
-        }
-      }
-      .start()
-
-  /** CDC feed (X156) — the composite the reference's end state
-    * implies (a maintained downstream table, reference/README.md:11,
-    * re-expressed as a maintained RETRIEVAL artifact): decoded change
-    * rows (`keyCol`, `opCol` ∈ [[ChangeOp]], `textCol`, `tsCol`,
-    * `seqCol`) maintain the index as upserts + tombstones. Per
-    * micro-batch:
-    *
-    *  1. within-batch LWW — several changes to one key collapse to
-    *     the batch's (ts, seq)-winner BEFORE touching the artifact
-    *     (the [[graft.cdc.Merge.winners]] window, per batch);
-    *  2. ONE [[TextIndex.upsert]] commit: every winner key leaves the
-    *     index (an upsert of an indexed doc must replace it; an
-    *     unknown key's removal is a no-op) and the non-tombstone
-    *     winners' texts are ingested — removal rewrites, ingest
-    *     deltas, and both stats corrections publish in a single
-    *     atomic generation swap.
-    *
-    * Applying batches in log order IS last-writer-wins: the binlog is
-    * the serialized source of truth, so a key's changes arrive in
-    * commit order across batches. Replay safety: the single `cdc`
-    * batch id makes a redelivered epoch an O(1) no-op, and even an
-    * un-marked replay converges (the upsert removes the rows it
-    * itself added and re-adds the same content). Serving after the
-    * stream == a build over the LWW-merged surviving corpus,
-    * bit-for-bit (TextIndexStreamSpec).
-    */
-  def applyChanges(changes: DataFrame, keyCol: String, opCol: String,
-      textCol: String, name: String, checkpointDir: String,
-      tsCol: String = "ts_sec", seqCol: String = "seq",
-      autoCompactFiles: Option[Int] = None): StreamingQuery =
-    changes.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val w = Window.partitionBy(col(keyCol))
-            .orderBy(col(tsCol).desc, col(seqCol).desc)
-          val winners = batch.withColumn("__rn", row_number().over(w))
-            .filter(col("__rn") === 1).drop("__rn").persist()
-          try {
-            TextIndex.upsert(s, name,
-              winners.filter(col(opCol) =!= ChangeOp.Delete)
-                .select(col(keyCol), col(textCol)),
-              keyCol, textCol,
-              delIds = Some(winners.filter(col(opCol) === ChangeOp.Delete)
-                .select(col(keyCol))),
-              delCol = keyCol,
-              batchId = Some(s"cdc${ns(checkpointDir)}_$bid"))
-            autoCompactFiles.foreach(TextIndex.maybeCompact(s, name, _))
-          } finally winners.unpersist()
-        }
-      }
-      .start()
+    streaming(delIds, checkpointDir, autoCompactFiles,
+        TextIndex.maybeCompact(_, name, _)) { (batch, bid) =>
+      TextIndex.delete(batch.sparkSession, name, batch, idCol,
+        batchId = Some(s"del${ns(checkpointDir)}_$bid"))
+    }
 }

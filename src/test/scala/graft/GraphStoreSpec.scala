@@ -611,9 +611,10 @@ class GraphStoreSpec extends AnyFunSuite {
     val ckpt = Files.createTempDirectory("g_cdc_ckpt").toString
     val input =
       MemoryStream[(Long, String, Seq[Double], Long, Long, Long)]
-    val q = graft.streaming.GraphStream.applyChanges(
+    val q = graft.streaming.TrilogyStream.applyChanges(
       input.toDF().toDF("key", "op", "vec", "ts_sec", "seq", "label"),
-      "key", "op", "vec", "label", "g_cdc", ckpt)
+      "key", "op", Seq(graft.streaming.TrilogyStream.Graph("g_cdc", "vec",
+        "label")), ckpt)
     input.addData(b1: _*); q.processAllAvailable()
     input.addData(b2: _*); q.processAllAvailable()
     input.addData(b2: _*); q.processAllAvailable() // replay

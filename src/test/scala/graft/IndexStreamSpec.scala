@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.Index
-import graft.streaming.IndexStream
+import graft.streaming.{IndexStream, TrilogyStream}
 
 /** Streaming ANN probe == batch index search: vectors arriving over
   * several micro-batches score identically to one batch
@@ -285,10 +285,25 @@ class IndexStreamSpec extends AnyFunSuite {
       (7L, cdc.ChangeOp.Delete, vecOf(8L), 200L, 7L))
     val ckpt = Files.createTempDirectory("idx_cdc_ckpt").toString
     val input = MemoryStream[(Long, String, Seq[Double], Long, Long)]
-    val q = IndexStream.applyChanges(
-      input.toDF().toDF("key", "op", "vec", "ts_sec", "seq"),
-      "key", "op", "vec", "idx_cdcs", ckpt)
+    // the streaming frame drops negative keys, so a micro-batch of
+    // only those reaches the feed as a trigger with no rows
+    val q = TrilogyStream.applyChanges(
+      input.toDF().toDF("key", "op", "vec", "ts_sec", "seq")
+        .filter(col("key") >= 0),
+      "key", "op", Seq(TrilogyStream.Ann("idx_cdcs", "vec")), ckpt)
     input.addData(b1: _*); q.processAllAvailable()
+    def parts() = Index.describe(spark, "idx_cdcs")
+      .select("part", "gen", "n_files").as[(String, Long, Long)]
+      .collect().toSeq.sorted
+    val (before, lastBatch) = (parts(), q.lastProgress.batchId)
+    input.addData((-1L, cdc.ChangeOp.Insert, vecOf(8L), 150L, 9L))
+    q.processAllAvailable()
+    assert(q.recentProgress.exists(p =>
+      p.batchId > lastBatch && p.numInputRows == 1),
+      "the all-filtered micro-batch ran as a trigger")
+    assert(parts().map(_._2).toSet == before.map(_._2).toSet,
+      "an empty trigger advanced the state generation")
+    assert(parts() == before, "an empty trigger added part files")
     input.addData(b2: _*); q.processAllAvailable()
     input.addData(b2: _*); q.processAllAvailable() // replay
     q.stop()

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops._
-import graft.streaming.TextIndexStream
+import graft.streaming.{TextIndexStream, TrilogyStream}
 
 /** Streaming maintenance of the persisted text index: micro-batched
   * ingest/takedown (+ at-least-once replays) serve the EXACT ranking
@@ -170,9 +170,9 @@ class TextIndexStreamSpec extends AnyFunSuite {
 
     val ckpt = Files.createTempDirectory("tidxs_cdc_ckpt").toString
     val input = MemoryStream[(Long, String, String, Long, Long)]
-    val q = TextIndexStream.applyChanges(
+    val q = TrilogyStream.applyChanges(
       input.toDF().toDF("doc_id", "op", "text", "ts_sec", "seq"),
-      "doc_id", "op", "text", "tidxs_cdc", ckpt)
+      "doc_id", "op", Seq(TrilogyStream.Text("tidxs_cdc", "text")), ckpt)
     input.addData((ups ++ dels :+ dupA :+ dupB): _*)
     q.processAllAvailable()
     input.addData((news :+ late): _*); q.processAllAvailable()
@@ -234,8 +234,8 @@ class TextIndexStreamSpec extends AnyFunSuite {
       coalesce(get_json_object(col("after"), "$.text"), lit("")).as("text"),
       unix_timestamp(col("ts")).as("ts_sec"), col("seq"))
     val ckpt = Files.createTempDirectory("tidx_cl_ckpt").toString
-    val q = TextIndexStream.applyChanges(docsStream, "doc_id", "op",
-      "text", "tidx_cl", ckpt)
+    val q = TrilogyStream.applyChanges(docsStream, "doc_id", "op",
+      Seq(TrilogyStream.Text("tidx_cl", "text")), ckpt)
     q.processAllAvailable()
     q.stop()
 

@@ -1,5 +1,8 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.UTF_8
+
+import com.fasterxml.jackson.core.io.SerializedString
 import com.fasterxml.jackson.databind.ObjectMapper
 
 /** MySQL binlog FILE decoder — the wire-format half of the
@@ -112,6 +115,35 @@ object Binlog {
   final case class Decoded(changes: IndexedSeq[RowChange],
       rotate: Option[RotateTo])
 
+  /** Where the rows events of one file start: for each event that
+    * holds rows, its byte position and the ordinal of its first row,
+    * kept as two primitive arrays (no decoded row is retained). The
+    * driver builds it from its one decode of a segment; [[startOf]]
+    * gives a slice the `(startPos, startRow)` of [[decodeSlice]].
+    */
+  final class RowsIndex private (pos: Array[Long], firstRow: Array[Long]) {
+    /** The event that holds row `row`: its position and first-row
+      * ordinal, or the file start `(4, 0)` when the file has no rows.
+      * A row past the last event maps to the last event, from where a
+      * decode walks on to any rows appended since.
+      */
+    def startOf(row: Long): (Long, Long) = {
+      val k = java.util.Arrays.binarySearch(firstRow, row) match {
+        case i if i >= 0 => i
+        case i => -i - 2 // the last event whose first row is below `row`
+      }
+      if (k < 0) (4L, 0L) else (pos(k), firstRow(k))
+    }
+  }
+
+  object RowsIndex {
+    def of(changes: IndexedSeq[RowChange]): RowsIndex = {
+      val first = changes.indices
+        .filter(i => i == 0 || changes(i).pos != changes(i - 1).pos)
+      new RowsIndex(first.map(changes(_).pos).toArray, first.map(_.toLong).toArray)
+    }
+  }
+
   private final case class TableMap(tableId: Long, db: String, table: String,
       types: Array[Int], meta: Array[Int])
 
@@ -126,9 +158,21 @@ object Binlog {
     def i24(): Int = { val v = u8() | (u8() << 8) | (u8() << 16); (v << 8) >> 8 }
     def i32(): Int = u32().toInt
     def i64(): Long = u64()
+    /** `n` ≤ 8 bytes as one unsigned number, little- or big-endian. */
+    def le(n: Int): Long = {
+      var v = 0L; var k = 0
+      while (k < n) { v |= u8().toLong << (8 * k); k += 1 }
+      v
+    }
+    def be(n: Int): Long = {
+      var v = 0L; var k = 0
+      while (k < n) { v = (v << 8) | u8(); k += 1 }
+      v
+    }
     def bytes(n: Int): Array[Byte] = {
       val v = java.util.Arrays.copyOfRange(b, p, p + n); p += n; v
     }
+    def utf8(n: Int): String = { val v = new String(b, p, n, UTF_8); p += n; v }
     def lenenc(): Long = u8() match {
       case v if v < 0xfb => v.toLong
       case 0xfc => u16().toLong
@@ -138,13 +182,32 @@ object Binlog {
     }
   }
 
-  private def bit(bitmap: Array[Byte], i: Int): Boolean =
-    ((bitmap(i / 8) >> (i % 8)) & 1) != 0
+  private def bit(bitmap: Array[Byte], off: Int, i: Int): Boolean =
+    ((bitmap(off + i / 8) >> (i % 8)) & 1) != 0
 
   /** Bytes of a packed-decimal digit group: full groups are 9 digits
     * in 4 bytes; leftovers use this table (public format).
     */
   private val Dig2Bytes = Array(0, 1, 1, 2, 2, 3, 3, 4, 4, 4)
+
+  /** MySQL's column-count limit; a table map wider than this is corrupt. */
+  private val MaxColumns = 4096
+
+  /** Row-image column names `c0..c4095`, quoted once. */
+  private lazy val ColNames =
+    Array.tabulate(MaxColumns)(i => new SerializedString("c" + i))
+
+  /** Append `v` (≥ 0) with zeros in front up to `width` digits, as
+    * `%0<width>d` prints it.
+    */
+  private def pad(sb: java.lang.StringBuilder, v: Long,
+      width: Int): java.lang.StringBuilder = {
+    var digits = 1
+    var t = v / 10
+    while (t > 0) { digits += 1; t /= 10 }
+    while (digits < width) { sb.append('0'); digits += 1 }
+    sb.append(v)
+  }
 
   /** Decode MySQL's packed NEWDECIMAL: big-endian 9-digit/4-byte
     * groups for int and fraction parts, leftover digits in 1-4 bytes,
@@ -158,59 +221,44 @@ object Binlog {
     val b = raw.clone()
     val positive = (b(0) & 0x80) != 0
     b(0) = (b(0) ^ 0x80).toByte
-    if (!positive) (0 until b.length).foreach(i => b(i) = (~b(i)).toByte)
-    var p = 0
-    def group(nBytes: Int): Long = {
-      var v = 0L
-      (0 until nBytes).foreach(_ => { v = (v << 8) | (b(p) & 0xffL); p += 1 })
-      v
+    if (!positive) b.indices.foreach(i => b(i) = (~b(i)).toByte)
+    val c = new Cursor(b, 0)
+    val sb = new java.lang.StringBuilder(precision + 2)
+    // leading zero groups print nothing; the first nonzero one unpadded
+    def intGroup(digits: Int, nBytes: Int): Unit = {
+      val v = c.be(nBytes)
+      if (sb.length > 0) pad(sb, v, digits) else if (v != 0) sb.append(v)
     }
     val intDigits = precision - scale
-    val intFull = intDigits / 9
-    val intLeft = intDigits % 9
-    val fracFull = scale / 9
-    val fracLeft = scale % 9
-    val sb = new StringBuilder
-    if (intLeft > 0) sb.append(group(Dig2Bytes(intLeft)).toString
-      .reverse.padTo(intLeft, '0').reverse)
-    (0 until intFull).foreach(_ =>
-      sb.append(group(4).toString.reverse.padTo(9, '0').reverse))
-    val intStr = sb.toString.dropWhile(_ == '0') match {
-      case "" => "0"
-      case s => s
+    if (intDigits % 9 > 0) intGroup(intDigits % 9, Dig2Bytes(intDigits % 9))
+    (0 until intDigits / 9).foreach(_ => intGroup(9, 4))
+    var nonZero = sb.length > 0
+    if (!nonZero) sb.append('0')
+    if (scale > 0) {
+      sb.append('.')
+      def fracGroup(digits: Int, nBytes: Int): Unit = {
+        val v = c.be(nBytes)
+        nonZero ||= v != 0
+        pad(sb, v, digits)
+      }
+      (0 until scale / 9).foreach(_ => fracGroup(9, 4))
+      if (scale % 9 > 0) fracGroup(scale % 9, Dig2Bytes(scale % 9))
     }
-    val fb = new StringBuilder
-    (0 until fracFull).foreach(_ =>
-      fb.append(group(4).toString.reverse.padTo(9, '0').reverse))
-    if (fracLeft > 0) fb.append(group(Dig2Bytes(fracLeft)).toString
-      .reverse.padTo(fracLeft, '0').reverse)
-    val body = if (scale > 0) s"$intStr.${fb.toString}" else intStr
-    if (positive || (intStr == "0" && !fb.exists(_ != '0'))) body
-    else "-" + body
+    if (!positive && nonZero) sb.insert(0, '-')
+    sb.toString
   }
 
-  private def hexUpper(bytes: Array[Byte]): String =
-    bytes.map(b => f"${b & 0xff}%02X").mkString
-
-  /** The reference's `Value::Bytes` rule (main.rs:494-502): UTF-8
-    * text stays text, anything else becomes uppercase hex.
-    */
-  private def bytesValue(bytes: Array[Byte]): String = {
-    val dec = java.nio.charset.StandardCharsets.UTF_8.newDecoder()
-    try dec.decode(java.nio.ByteBuffer.wrap(bytes)).toString
-    catch { case _: java.nio.charset.CharacterCodingException =>
-      hexUpper(bytes)
-    }
-  }
+  private val Hex = java.util.HexFormat.of().withUpperCase()
 
   private def parseTableMap(c: Cursor): TableMap = {
     val tableId = c.u48()
     c.u16() // flags
     val dbLen = c.u8()
-    val db = new String(c.bytes(dbLen), "UTF-8"); c.u8() // NUL
+    val db = c.utf8(dbLen); c.u8() // NUL
     val tblLen = c.u8()
-    val table = new String(c.bytes(tblLen), "UTF-8"); c.u8() // NUL
+    val table = c.utf8(tblLen); c.u8() // NUL
     val n = c.lenenc().toInt
+    require(n >= 0 && n <= MaxColumns, s"table map of $db.$table has $n columns")
     val types = Array.tabulate(n)(_ => c.u8())
     c.lenenc() // metadata block length (we re-derive per type)
     val meta = types.map {
@@ -234,147 +282,172 @@ object Binlog {
     TableMap(tableId, db, table, types, meta)
   }
 
-  /** One row image over the present columns → JSON object text
-    * (columns c0.., null bits LSB-first over present columns).
+  /** Renders row images (columns c0.., null bits LSB-first over the
+    * present columns) as JSON object text through one streaming
+    * generator. The text is what `writeValueAsString` gives for an
+    * `ObjectNode` of the same values: the same generator class, hence
+    * the same escaping, and the same `writeNumber` overloads the
+    * node types call (int for TINY..LONG and YEAR, long for LONGLONG,
+    * float, double). Temporal and decimal text is built by hand.
     */
-  private def parseImage(c: Cursor, tm: TableMap, present: Array[Byte],
-      nPresent: Int, mapper: ObjectMapper): String = {
-    val nulls = c.bytes((nPresent + 7) / 8)
-    val node = mapper.createObjectNode()
-    var imgIdx = 0
-    var i = 0
-    while (i < tm.types.length) {
-      if (bit(present, i)) {
-        val name = s"c$i"
-        if (bit(nulls, imgIdx)) node.putNull(name)
-        else tm.types(i) match {
-          case TypeTiny => node.put(name, c.i8())
-          case TypeShort => node.put(name, c.i16())
-          case TypeInt24 => node.put(name, c.i24())
-          case TypeLong => node.put(name, c.i32())
-          case TypeLongLong => node.put(name, c.i64())
-          case TypeVarchar =>
-            val len = if (tm.meta(i) < 256) c.u8() else c.u16()
-            node.put(name, new String(c.bytes(len), "UTF-8"))
-          case TypeDate =>
-            // 3 bytes LE packed: day(5) | month(4)<<5 | year<<9 —
-            // emitted in the §2.6 TypeMap wire form
-            val v = c.u8() | (c.u8() << 8) | (c.u8() << 16)
-            node.put(name, f"${v >> 9}%04d-${(v >> 5) & 0xf}%02d-${v & 0x1f}%02d")
-          case TypeDatetime2 =>
-            // 5 bytes BIG-endian: sign(1) ym=year*13+month(17) day(5)
-            // hour(5) minute(6) second(6); non-negative ⇒ sign bit set.
-            // fsp > 0 appends ⌈fsp/2⌉ BIG-endian bytes holding the
-            // fraction in 10^-(2·⌈fsp/2⌉)-second units; the text form
-            // prints exactly fsp digits (MySQL semantics).
-            var v = 0L
-            (0 until 5).foreach(_ => v = (v << 8) | c.u8())
-            v &= (1L << 39) - 1 // clear the sign bit (dates ≥ epoch here)
-            val ym = (v >> 22) & 0x1ffff
-            val base =
-              f"${ym / 13}%04d-${ym % 13}%02d-${(v >> 17) & 0x1f}%02d " +
-                f"${(v >> 12) & 0x1f}%02d:${(v >> 6) & 0x3f}%02d:${v & 0x3f}%02d"
-            val fsp = tm.meta(i)
-            if (fsp == 0) node.put(name, base)
-            else {
-              val fracBytes = (fsp + 1) / 2
-              var frac = 0L
-              (0 until fracBytes).foreach(_ => frac = (frac << 8) | c.u8())
-              // stored unit has 2·fracBytes digits; print fsp of them
-              val printed = frac / (if (fsp % 2 == 1) 10 else 1)
-              node.put(name, base + "." +
-                ("%0" + fsp + "d").format(printed))
-            }
-          case TypeFloat =>
-            var bits = 0
-            (0 until 4).foreach(i => bits |= c.u8() << (8 * i))
-            node.put(name, java.lang.Float.intBitsToFloat(bits))
-          case TypeDouble =>
-            var bits = 0L
-            (0 until 8).foreach(i => bits |= c.u8().toLong << (8 * i))
-            node.put(name, java.lang.Double.longBitsToDouble(bits))
-          case TypeYear =>
-            // stored year-1900; 0 means the literal 0000
-            val v = c.u8()
-            node.put(name, if (v == 0) 0 else 1900 + v)
-          case TypeTimestamp2 =>
-            // 4 bytes BIG-endian epoch seconds + the DATETIME2-style
-            // fraction; emitted as the UTC datetime string (the
-            // session timezone is pinned UTC engine-wide)
-            var sec = 0L
-            (0 until 4).foreach(_ => sec = (sec << 8) | c.u8())
-            val dt = java.time.LocalDateTime.ofEpochSecond(sec, 0,
-              java.time.ZoneOffset.UTC)
-            val base = f"${dt.getYear}%04d-${dt.getMonthValue}%02d-" +
-              f"${dt.getDayOfMonth}%02d ${dt.getHour}%02d:" +
-              f"${dt.getMinute}%02d:${dt.getSecond}%02d"
-            val fsp = tm.meta(i)
-            if (fsp == 0) node.put(name, base)
-            else {
-              val fracBytes = (fsp + 1) / 2
-              var frac = 0L
-              (0 until fracBytes).foreach(_ => frac = (frac << 8) | c.u8())
-              val printed = frac / (if (fsp % 2 == 1) 10 else 1)
-              node.put(name, base + "." + ("%0" + fsp + "d").format(printed))
-            }
-          case TypeTime2 =>
-            // 3 bytes BIG-endian packed hms biased by 0x800000; the
-            // fraction extends the SAME fixed-point number, so a
-            // negative time complements int and fraction together —
-            // take |v| of the combined value, then split
-            val fsp = tm.meta(i)
-            val fracBytes = (fsp + 1) / 2
-            var v = 0L
-            (0 until 3 + fracBytes).foreach(_ => v = (v << 8) | c.u8())
-            val signed = v - (0x800000L << (8 * fracBytes))
-            val av = math.abs(signed)
-            val hms = av >> (8 * fracBytes)
-            val frac = av & ((1L << (8 * fracBytes)) - 1)
-            val micros = (frac / (if (fsp % 2 == 1) 10 else 1)) *
-              math.pow(10, 6 - fsp).toLong
-            // the reference's text form (main.rs:468-491): hours fold
-            // days in, 3-digit minimum; micros print 6 digits or none
-            val base = f"${(hms >> 12) & 0x3ff}%03d:${(hms >> 6) & 0x3f}%02d:" +
-              f"${hms & 0x3f}%02d"
-            val txt = (if (signed < 0) "-" else "") +
-              (if (micros == 0) base else base + f".$micros%06d")
-            node.put(name, txt)
-          case TypeNewDecimal =>
-            val (precision, scale) = (tm.meta(i) >> 8, tm.meta(i) & 0xff)
-            val intB = 4 * ((precision - scale) / 9) +
-              Dig2Bytes((precision - scale) % 9)
-            val fracB = 4 * (scale / 9) + Dig2Bytes(scale % 9)
-            node.put(name, decodeDecimal(c.bytes(intB + fracB),
-              precision, scale))
-          case TypeBlob =>
-            var len = 0L
-            (0 until tm.meta(i)).foreach(j => len |= c.u8().toLong << (8 * j))
-            node.put(name, bytesValue(c.bytes(len.toInt)))
-          case TypeString =>
-            // unpack the real type / max length from the two packed
-            // metadata bytes; CHAR is the supported real type here
-            val (m0, m1) = (tm.meta(i) >> 8, tm.meta(i) & 0xff)
-            val (realType, maxLen) =
-              if ((m0 & 0x30) != 0x30) (m0 | 0x30, m1 | (((m0 & 0x30) ^ 0x30) << 4))
-              else (m0, m1)
-            require(realType == TypeString,
-              s"unsupported STRING-family real type $realType in ${tm.table}")
-            val len = if (maxLen < 256) c.u8() else c.u16()
-            node.put(name, bytesValue(c.bytes(len)))
-          case t => sys.error(s"unsupported column type $t in ${tm.table}")
+  private final class Images {
+    private val out = new java.io.CharArrayWriter(256)
+    private val g = Json.getFactory.createGenerator(out)
+    g.setRootValueSeparator(null) // one object per image, nothing between
+    private val sb = new java.lang.StringBuilder(32)
+    private val utf8 = UTF_8.newDecoder()
+
+    /** The reference's `Value::Bytes` rule (main.rs:494-502): UTF-8
+      * text stays text, anything else becomes uppercase hex.
+      */
+    private def bytesValue(c: Cursor, len: Int): String = {
+      val v =
+        try utf8.decode(java.nio.ByteBuffer.wrap(c.b, c.p, len)).toString
+        catch { case _: java.nio.charset.CharacterCodingException =>
+          Hex.formatHex(c.b, c.p, c.p + len)
         }
-        imgIdx += 1
-      }
-      i += 1
+      c.p += len
+      v
     }
-    mapper.writeValueAsString(node)
+
+    private def date(year: Long, month: Long, day: Long): Unit = {
+      pad(sb, year, 4).append('-'); pad(sb, month, 2).append('-')
+      pad(sb, day, 2)
+    }
+
+    private def clock(hour: Long, minute: Long, second: Long,
+        hourDigits: Int): Unit = {
+      pad(sb, hour, hourDigits).append(':'); pad(sb, minute, 2).append(':')
+      pad(sb, second, 2)
+    }
+
+    /** DATETIME2/TIMESTAMP2 fraction: ⌈fsp/2⌉ BIG-endian bytes in
+      * 10^-(2·⌈fsp/2⌉)-second units, printed as exactly fsp digits
+      * (MySQL semantics).
+      */
+    private def fraction(c: Cursor, fsp: Int): Unit =
+      if (fsp > 0) {
+        val stored = c.be((fsp + 1) / 2)
+        pad(sb.append('.'), stored / (if (fsp % 2 == 1) 10 else 1), fsp)
+      }
+
+    /** Write, as one JSON string, the text `build` appends to `sb`. */
+    private def writeText(build: => Unit): Unit = {
+      sb.setLength(0)
+      build
+      g.writeString(sb.toString)
+    }
+
+    def image(c: Cursor, tm: TableMap, present: Array[Byte],
+        nPresent: Int): String = {
+      val nulls = c.p
+      c.p += (nPresent + 7) / 8
+      g.writeStartObject()
+      var imgIdx = 0
+      var i = 0
+      while (i < tm.types.length) {
+        if (bit(present, 0, i)) {
+          g.writeFieldName(ColNames(i))
+          if (bit(c.b, nulls, imgIdx)) g.writeNull()
+          else tm.types(i) match {
+            case TypeTiny => g.writeNumber(c.i8())
+            case TypeShort => g.writeNumber(c.i16())
+            case TypeInt24 => g.writeNumber(c.i24())
+            case TypeLong => g.writeNumber(c.i32())
+            case TypeLongLong => g.writeNumber(c.i64())
+            case TypeVarchar =>
+              g.writeString(c.utf8(if (tm.meta(i) < 256) c.u8() else c.u16()))
+            case TypeDate =>
+              // 3 bytes LE packed: day(5) | month(4)<<5 | year<<9 —
+              // emitted in the §2.6 TypeMap wire form
+              val v = c.le(3)
+              writeText(date(v >> 9, (v >> 5) & 0xf, v & 0x1f))
+            case TypeDatetime2 =>
+              // 5 bytes BIG-endian: sign(1) ym=year*13+month(17) day(5)
+              // hour(5) minute(6) second(6); non-negative ⇒ sign bit
+              // set (cleared here: dates ≥ epoch), then the fraction
+              val v = c.be(5) & ((1L << 39) - 1)
+              val ym = (v >> 22) & 0x1ffff
+              writeText {
+                date(ym / 13, ym % 13, (v >> 17) & 0x1f); sb.append(' ')
+                clock((v >> 12) & 0x1f, (v >> 6) & 0x3f, v & 0x3f, 2)
+                fraction(c, tm.meta(i))
+              }
+            case TypeFloat =>
+              g.writeNumber(java.lang.Float.intBitsToFloat(c.i32()))
+            case TypeDouble =>
+              g.writeNumber(java.lang.Double.longBitsToDouble(c.i64()))
+            case TypeYear =>
+              // stored year-1900; 0 means the literal 0000
+              val v = c.u8()
+              g.writeNumber(if (v == 0) 0 else 1900 + v)
+            case TypeTimestamp2 =>
+              // 4 bytes BIG-endian epoch seconds + the DATETIME2-style
+              // fraction; emitted as the UTC datetime string (the
+              // session timezone is pinned UTC engine-wide)
+              val dt = java.time.LocalDateTime.ofEpochSecond(c.be(4), 0,
+                java.time.ZoneOffset.UTC)
+              writeText {
+                date(dt.getYear, dt.getMonthValue, dt.getDayOfMonth)
+                sb.append(' ')
+                clock(dt.getHour, dt.getMinute, dt.getSecond, 2)
+                fraction(c, tm.meta(i))
+              }
+            case TypeTime2 =>
+              // 3 bytes BIG-endian packed hms biased by 0x800000; the
+              // fraction extends the SAME fixed-point number, so a
+              // negative time complements int and fraction together —
+              // take |v| of the combined value, then split
+              val fsp = tm.meta(i)
+              val fracBytes = (fsp + 1) / 2
+              val signed = c.be(3 + fracBytes) - (0x800000L << (8 * fracBytes))
+              val av = math.abs(signed)
+              val hms = av >> (8 * fracBytes)
+              val frac = av & ((1L << (8 * fracBytes)) - 1)
+              val micros = (frac / (if (fsp % 2 == 1) 10 else 1)) *
+                math.pow(10, 6 - fsp).toLong
+              // the reference's text form (main.rs:468-491): hours fold
+              // days in, 3-digit minimum; micros print 6 digits or none
+              writeText {
+                if (signed < 0) sb.append('-')
+                clock((hms >> 12) & 0x3ff, (hms >> 6) & 0x3f, hms & 0x3f, 3)
+                if (micros != 0) pad(sb.append('.'), micros, 6)
+              }
+            case TypeNewDecimal =>
+              val (precision, scale) = (tm.meta(i) >> 8, tm.meta(i) & 0xff)
+              val intB = 4 * ((precision - scale) / 9) +
+                Dig2Bytes((precision - scale) % 9)
+              val fracB = 4 * (scale / 9) + Dig2Bytes(scale % 9)
+              g.writeString(decodeDecimal(c.bytes(intB + fracB),
+                precision, scale))
+            case TypeBlob =>
+              g.writeString(bytesValue(c, c.le(tm.meta(i)).toInt))
+            case TypeString =>
+              // unpack the real type / max length from the two packed
+              // metadata bytes; CHAR is the supported real type here
+              val (m0, m1) = (tm.meta(i) >> 8, tm.meta(i) & 0xff)
+              val (realType, maxLen) =
+                if ((m0 & 0x30) != 0x30) (m0 | 0x30, m1 | (((m0 & 0x30) ^ 0x30) << 4))
+                else (m0, m1)
+              require(realType == TypeString,
+                s"unsupported STRING-family real type $realType in ${tm.table}")
+              g.writeString(bytesValue(c, if (maxLen < 256) c.u8() else c.u16()))
+            case t => sys.error(s"unsupported column type $t in ${tm.table}")
+          }
+          imgIdx += 1
+        }
+        i += 1
+      }
+      g.writeEndObject()
+      g.flush()
+      val s = out.toString
+      out.reset()
+      s
+    }
   }
 
-  /** Decode a whole binlog file. Table maps are stateful within the
-    * file (each rows event references the preceding TABLE_MAP by
-    * table_id — the protocol contract; MySQL re-emits maps after
-    * rotates, so files stay self-contained).
-    */
+  private val Json = new ObjectMapper()
+
   /** Read the FDE's trailing checksum-algorithm byte: present only
     * when the event's server-version field (5.6.1+) knows checksums.
     * Returns true for CRC32 (alg 1); 0xff/0 mean off.
@@ -391,16 +464,42 @@ object Binlog {
     supportsChecksum && (bytes(p + size - 5) & 0xff) == 1
   }
 
-  def decodeFile(bytes: Array[Byte]): Decoded = {
+  /** Decode a whole binlog file: the rows `[0, ∞)` from the file start. */
+  def decodeFile(bytes: Array[Byte]): Decoded =
+    decodeSlice(bytes, 4L, 0L, 0L, Long.MaxValue)
+
+  /** Decode the rows `[from, until)` of a binlog file, rows numbered
+    * from 0 at the file's first row. `(startPos, startRow)` names where
+    * decoding starts: the byte position of an event at or before row
+    * `from` and the ordinal of its first row ([[RowsIndex.startOf]]),
+    * or `(4, 0)`, the first event.
+    *
+    * Every event before `startPos` is still length-checked and
+    * CRC-verified, and its FORMAT_DESCRIPTION and TABLE_MAP bodies are
+    * parsed: the checksum mode and the table maps are file state (each
+    * rows event references the preceding TABLE_MAP by table_id — the
+    * protocol contract; MySQL re-emits maps after rotates, so files
+    * stay self-contained). Rows bodies there are skipped by size. From
+    * `startPos` rows decode, those before `from` are dropped, and
+    * decoding stops once the ordinal reaches `until`: no byte past the
+    * event holding row `until - 1` is read. A finite `until` the file
+    * does not reach fails loud.
+    */
+  def decodeSlice(bytes: Array[Byte], startPos: Long, startRow: Long,
+      from: Long, until: Long): Decoded = {
     require(bytes.length >= 4 && bytes.take(4).sameElements(Magic),
       "not a binlog file (bad magic)")
-    val mapper = new ObjectMapper()
+    require(startPos >= 4 && startRow <= from,
+      s"slice start ($startPos, row $startRow) is past row $from")
+    val images = new Images
     val tableMaps = scala.collection.mutable.HashMap.empty[Long, TableMap]
     val out = IndexedSeq.newBuilder[RowChange]
     var rotate: Option[RotateTo] = None
     var checksummed = false
+    val crc = new java.util.zip.CRC32()
+    var row = startRow
     var p = 4
-    while (p + 19 <= bytes.length) {
+    while (p + 19 <= bytes.length && row < until) {
       val h = new Cursor(bytes, p)
       val ts = h.u32()
       val typ = h.u8()
@@ -409,18 +508,17 @@ object Binlog {
       h.u32(); h.u16() // next_position, flags
       require(size >= 19 && p + size <= bytes.length,
         s"truncated event at $p (size $size)")
+      require(p >= startPos || p + size <= startPos,
+        s"slice start $startPos falls inside the event at $p")
       // the FDE announces the file's checksum mode (it applies to the
       // FDE itself too); a dump-stream preamble FDE re-announces it
       if (typ == FormatDescription)
         checksummed = fdeChecksumOn(bytes, p, size)
       if (checksummed) {
         require(size >= 19 + 4, s"checksummed event at $p too small")
-        val crc = new java.util.zip.CRC32()
+        crc.reset()
         crc.update(bytes, p, size - 4)
-        val stored = (bytes(p + size - 4) & 0xffL) |
-          ((bytes(p + size - 3) & 0xffL) << 8) |
-          ((bytes(p + size - 2) & 0xffL) << 16) |
-          ((bytes(p + size - 1) & 0xffL) << 24)
+        val stored = new Cursor(bytes, p + size - 4).u32()
         require(crc.getValue == stored,
           f"CRC32 mismatch at offset $p (event type $typ): " +
             f"stored 0x$stored%08x, computed 0x${crc.getValue}%08x")
@@ -433,42 +531,53 @@ object Binlog {
         case TableMapEvent =>
           val tm = parseTableMap(c)
           tableMaps.update(tm.tableId, tm)
-        case WriteRowsV2 | UpdateRowsV2 | DeleteRowsV2 =>
+        case WriteRowsV2 | UpdateRowsV2 | DeleteRowsV2 if p >= startPos =>
           val tableId = c.u48()
           c.u16() // flags
           val extraLen = c.u16() // self-inclusive
-          if (extraLen > 2) c.bytes(extraLen - 2)
+          if (extraLen > 2) c.p += extraLen - 2
           val tm = tableMaps.getOrElse(tableId,
             sys.error(s"rows event for unmapped table_id $tableId"))
           val n = c.lenenc().toInt
+          require(n == tm.types.length, s"rows event at $p has $n columns, " +
+            s"its table map ${tm.types.length}")
           val present1 = c.bytes((n + 7) / 8)
           val present2 =
             if (typ == UpdateRowsV2) c.bytes((n + 7) / 8) else present1
-          val nP1 = (0 until n).count(bit(present1, _))
-          val nP2 = (0 until n).count(bit(present2, _))
-          while (c.p < end) typ match {
-            case WriteRowsV2 =>
-              val after = parseImage(c, tm, present1, nP1, mapper)
-              out += RowChange(graft.cdc.ChangeOp.Insert, tm.db, tm.table,
-                None, Some(after), ts, p.toLong)
-            case DeleteRowsV2 =>
-              val before = parseImage(c, tm, present1, nP1, mapper)
-              out += RowChange(graft.cdc.ChangeOp.Delete, tm.db, tm.table,
-                Some(before), None, ts, p.toLong)
-            case UpdateRowsV2 =>
-              val before = parseImage(c, tm, present1, nP1, mapper)
-              val after = parseImage(c, tm, present2, nP2, mapper)
-              out += RowChange(graft.cdc.ChangeOp.Update, tm.db, tm.table,
-                Some(before), Some(after), ts, p.toLong)
+          val nP1 = (0 until n).count(bit(present1, 0, _))
+          val nP2 = (0 until n).count(bit(present2, 0, _))
+          while (c.p < end && row < until) {
+            val change = typ match {
+              case WriteRowsV2 =>
+                val after = images.image(c, tm, present1, nP1)
+                RowChange(graft.cdc.ChangeOp.Insert, tm.db, tm.table,
+                  None, Some(after), ts, p.toLong)
+              case DeleteRowsV2 =>
+                val before = images.image(c, tm, present1, nP1)
+                RowChange(graft.cdc.ChangeOp.Delete, tm.db, tm.table,
+                  Some(before), None, ts, p.toLong)
+              case UpdateRowsV2 =>
+                val before = images.image(c, tm, present1, nP1)
+                val after = images.image(c, tm, present2, nP2)
+                RowChange(graft.cdc.ChangeOp.Update, tm.db, tm.table,
+                  Some(before), Some(after), ts, p.toLong)
+            }
+            if (row >= from) out += change
+            row += 1
           }
+          require(c.p <= end, s"row images overrun the rows event at $p")
         case Rotate =>
           val pos = c.u64()
-          val next = new String(c.bytes(end - c.p), "UTF-8")
+          val next = c.utf8(end - c.p)
           rotate = Some(RotateTo(next, pos))
-        case _ => // FORMAT_DESCRIPTION, XID, STOP, ... — skip by size
+        case _ =>
+          // rows before the slice start, FORMAT_DESCRIPTION, XID, STOP,
+          // ... — skipped by size
       }
       p += size
     }
+    require(until == Long.MaxValue || row >= until,
+      s"binlog ends at row $row, before row $until")
     Decoded(out.result(), rotate)
   }
 }

@@ -18,14 +18,27 @@ import org.apache.spark.unsafe.types.UTF8String
   * reference's MySQL binlog reader (SURVEY §2.1 S1-S4;
   * reference/src/main.rs:202-303).
   *
-  * The log is a directory of immutable, lexicographically-ordered
-  * JSON-lines files of change envelopes. The streaming offset is
-  * `(file index, rows consumed in that file)` — exactly the binlog's
-  * `(filename, pos)` pair (reference/src/main.rs:137-141): advancing
-  * to the next file is the RotateEvent (S2, main.rs:233-237), and
-  * Structured Streaming's checkpoint persists the offset with the same
-  * at-least-once contract as the reference's SQLite upsert-per-
-  * table-map (S3, main.rs:238-255) — no bespoke state store needed.
+  * The log is a directory of lexicographically-ordered segments in
+  * either of two formats ([[ChangeLog.listLogFiles]]): JSON-lines files
+  * of change envelopes, or `.binlog` files of raw MySQL-framed events
+  * ([[Binlog]]). Segments only ever grow at their tail. The streaming
+  * offset is `(file index, rows consumed in that file)` — exactly the
+  * binlog's `(filename, pos)` pair (reference/src/main.rs:137-141):
+  * advancing to the next file is the RotateEvent (S2,
+  * main.rs:233-237), and Structured Streaming's checkpoint persists
+  * the offset with the same at-least-once contract as the reference's
+  * SQLite upsert-per-table-map (S3, main.rs:238-255) — no bespoke
+  * state store needed. A JSONL row is a complete line, one that ends
+  * in `\n`; a `.binlog` row is one row image (pair) of a rows event.
+  *
+  * The driver scans each segment once per size it observes: it counts
+  * the rows and, for a `.binlog`, keeps a rows-event index (each
+  * event's byte position and first-row ordinal, [[Binlog.RowsIndex]]).
+  * A planned slice `[from, until)` of a `.binlog` carries the
+  * `(startPos, startRow)` of the event holding row `from`, so its
+  * reader skips the prefix by event size and stops decoding at
+  * `until` ([[Binlog.decodeSlice]]); a JSONL slice reads lines up to
+  * `until`.
   *
   * Admission control: `maxRowsPerTrigger` bounds each micro-batch the
   * way `--backfill-batch-size` bounds the reference's pages.
@@ -222,18 +235,51 @@ object ChangeLog {
       new MasterTail(dir, hp, user, password, serverId, firstFile,
         pollMillis))
 
-  /** Row count of one segment — lines for JSONL, decoded row-changes
-    * for binlog (events are not rows: a multi-row WRITE_ROWS is
-    * several, a TABLE_MAP is none).
+  /** The complete lines of a JSONL segment, in order. A line counts
+    * once its `\n` is written (a `\r` before it is dropped); blank
+    * lines are skipped. An unterminated last line is a write still in
+    * flight, so neither the driver's row count nor the reader serves
+    * it until its `\n` lands.
     */
-  def countFileRows(f: java.io.File): Long =
-    if (isBinlog(f.getName))
-      Binlog.decodeFile(java.nio.file.Files.readAllBytes(f.toPath))
-        .changes.size.toLong
-    else {
-      val src = scala.io.Source.fromFile(f)
-      try src.getLines().count(_.nonEmpty) finally src.close()
+  private[sources] final class JsonlLines(f: java.io.File) extends Iterator[String]
+      with java.io.Closeable {
+    private val in = new java.io.FileInputStream(f)
+    private val buf = new Array[Byte](1 << 16)
+    private var filled = 0
+    private var at = 0
+    private val line = new java.io.ByteArrayOutputStream(256)
+    private var pending = advance()
+
+    private def advance(): String = {
+      while (true) {
+        if (at == filled) {
+          filled = in.read(buf)
+          at = 0
+          if (filled < 0) return null // EOF: a partial line stays unread
+        }
+        var j = at
+        while (j < filled && buf(j) != '\n') j += 1
+        line.write(buf, at, j - at)
+        at = j
+        if (j < filled) {
+          at += 1
+          val s = line.toString("UTF-8").stripSuffix("\r")
+          line.reset()
+          if (s.nonEmpty) return s
+        }
+      }
+      null
     }
+
+    override def hasNext: Boolean = pending != null
+    override def next(): String = {
+      if (pending == null) throw new NoSuchElementException("no more lines")
+      val s = pending
+      pending = advance()
+      s
+    }
+    override def close(): Unit = in.close()
+  }
 
   /** One JSON line → InternalRow. Field absence/null → SQL null for
     * before/after; ts is epoch seconds in the log (u32 in the
@@ -305,36 +351,60 @@ class ChangeLogScan(path: String, maxRowsPerTrigger: Option[Long]) extends Scan 
     new ChangeLogMicroBatchStream(path, maxRowsPerTrigger)
 }
 
+/** One driver scan of a segment, keyed to the size it observed: the
+  * row count and, for a `.binlog`, its rows-event index.
+  */
+private[sources] final case class SegmentScan(size: Long, rows: Long,
+    index: Option[Binlog.RowsIndex])
+
 class ChangeLogMicroBatchStream(path: String, maxRowsPerTrigger: Option[Long])
     extends MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
 
   import org.apache.spark.sql.connector.read.streaming.{ReadLimit, ReadMaxRows}
 
-  // driver-side listing; files are immutable once written (log segments)
+  // driver-side listing; segments only grow at their tail
   private def files = ChangeLog.listLogFiles(path)
 
-  /** Row counts memoized per path, keyed to the size observed at count
-    * time: sealed segments are scanned at most once per query lifetime
-    * instead of once per file per trigger; a still-growing active
-    * segment changes size, is recounted, and REPLACES its entry — so
-    * the map holds exactly one entry per segment (an actively-growing
-    * file would otherwise add one stale entry per observed size for
-    * the life of the query). Driver-side only.
+  /** Scans memoized per path: sealed segments are scanned at most once
+    * per query lifetime instead of once per file per trigger; a
+    * still-growing active segment changes size, is rescanned, and
+    * REPLACES its entry — so the map holds exactly one entry per
+    * segment (an actively-growing file would otherwise add one stale
+    * entry per observed size for the life of the query). Driver-side
+    * only.
     */
-  private val rowCounts =
-    scala.collection.mutable.HashMap.empty[String, (Long, Long)]
-  private def countRows(f: java.io.File): Long = synchronized {
+  private val scans = scala.collection.mutable.HashMap.empty[String, SegmentScan]
+
+  private def scan(f: java.io.File): SegmentScan = synchronized {
     val (path, size) = (f.getAbsolutePath, f.length())
-    rowCounts.get(path) match {
-      case Some((`size`, n)) => n
-      case _ =>
-        ChangeLog.scansPerformed.incrementAndGet()
-        val n = ChangeLog.countFileRows(f)
-        rowCounts.update(path, (size, n))
-        n
+    scans.get(path).filter(_.size == size).getOrElse {
+      ChangeLog.scansPerformed.incrementAndGet()
+      val s =
+        if (ChangeLog.isBinlog(path)) {
+          val changes = Binlog.decodeFile(
+            java.nio.file.Files.readAllBytes(f.toPath)).changes
+          SegmentScan(size, changes.size.toLong, Some(Binlog.RowsIndex.of(changes)))
+        } else {
+          val lines = new ChangeLog.JsonlLines(f)
+          try SegmentScan(size, lines.size.toLong, None) finally lines.close()
+        }
+      scans.update(path, s)
+      s
     }
   }
+
+  /** Where a slice of `f` starting at row `from` begins decoding: the
+    * `(startPos, startRow)` of the `.binlog` event holding that row,
+    * else the file start. Any scan of the path serves, whatever size it
+    * saw: segments only grow at the tail, so an older index still
+    * places every row it covers, and the decode walks on past its last
+    * event to later rows.
+    */
+  private def startOf(f: java.io.File, from: Long): (Long, Long) =
+    if (!ChangeLog.isBinlog(f.getName)) (4L, 0L)
+    else synchronized(scans.get(f.getAbsolutePath)).getOrElse(scan(f))
+      .index.fold((4L, 0L))(_.startOf(from))
 
   /** End-of-log snapshot taken when Trigger.AvailableNow starts: the
     * query drains up to here (possibly over several admission-limited
@@ -349,7 +419,7 @@ class ChangeLogMicroBatchStream(path: String, maxRowsPerTrigger: Option[Long])
   private def trueEnd(): ChangeLogOffset = {
     val fs = files
     if (fs.isEmpty) ChangeLogOffset(0, 0L)
-    else ChangeLogOffset(fs.size - 1, countRows(fs.last))
+    else ChangeLogOffset(fs.size - 1, scan(fs.last).rows)
   }
 
   override def initialOffset(): Offset = ChangeLogOffset(0, 0L)
@@ -381,7 +451,7 @@ class ChangeLogMicroBatchStream(path: String, maxRowsPerTrigger: Option[Long])
     while (!done) {
       val fileCap = if (idx == cap.fileIdx) cap.row
         else if (idx > cap.fileIdx) 0L else Long.MaxValue
-      val n = math.min(countRows(fs(idx)), fileCap)
+      val n = math.min(scan(fs(idx)).rows, fileCap)
       val take = math.max(math.min(n - row, left), 0L)
       row += take
       left -= take
@@ -401,10 +471,11 @@ class ChangeLogMicroBatchStream(path: String, maxRowsPerTrigger: Option[Long])
       val from = if (i == s.fileIdx) s.row else 0L
       val until = if (i == e.fileIdx) e.row else Long.MaxValue
       // seq base: file index in the high bits — a monotone log position
-      if (until > from)
+      if (until > from) {
+        val (startPos, startRow) = startOf(fs(i), from)
         Some(ChangeLogPartition(fs(i).getAbsolutePath, from, until,
-          i.toLong << 40).asInstanceOf[InputPartition])
-      else None
+          i.toLong << 40, startPos, startRow).asInstanceOf[InputPartition])
+      } else None
     }.toArray
   }
 
@@ -416,21 +487,24 @@ class ChangeLogMicroBatchStream(path: String, maxRowsPerTrigger: Option[Long])
     ChangeLogOffset.fromJson(json)
 }
 
+/** One file slice: rows `[from, until)` of `file`, `seq` = `seqBase` +
+  * row ordinal. For a `.binlog`, `(startPos, startRow)` is where the
+  * decode starts ([[Binlog.decodeSlice]]); the default `(4, 0)` is the
+  * file start, which serves any slice.
+  */
 case class ChangeLogPartition(file: String, from: Long, until: Long,
-    seqBase: Long) extends InputPartition
+    seqBase: Long, startPos: Long = 4L, startRow: Long = 0L)
+    extends InputPartition
 
 class ChangeLogReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[ChangeLogPartition]
-    // the (from, until) row window the offsets planned, as one index
-    // slice: reading stops at `until`
-    def window[A](rows: Iterator[A]): Iterator[(A, Int)] =
-      rows.zipWithIndex.dropWhile(_._2 < p.from).takeWhile(_._2 < p.until)
     if (ChangeLog.isBinlog(p.file)) {
-      // wire-framed segment: decode events → row-changes
-      val changes = Binlog.decodeFile(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(p.file))).changes.iterator
-      reader(window(changes).map { case (rc, i) =>
+      // wire-framed segment: decode only the slice's rows
+      val changes = Binlog.decodeSlice(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(p.file)), p.startPos, p.startRow, p.from,
+        p.until).changes
+      reader(changes.iterator.zipWithIndex.map { case (rc, k) =>
         InternalRow(
           UTF8String.fromString(rc.op), UTF8String.fromString(rc.db),
           UTF8String.fromString(rc.table),
@@ -438,14 +512,17 @@ class ChangeLogReaderFactory extends PartitionReaderFactory {
           rc.after.map(UTF8String.fromString).orNull,
           rc.tsSec * 1000000L, // binlog header epoch sec → micros
           UTF8String.EMPTY_UTF8, // pkey empty on live changes
-          p.seqBase + i)
+          p.seqBase + p.from + k)
       }, () => ())
     } else {
       val mapper = new ObjectMapper()
-      val src = scala.io.Source.fromFile(p.file)
-      reader(window(src.getLines().filter(_.nonEmpty)).map { case (line, i) =>
-        ChangeLog.parseLine(mapper, line, p.seqBase + i)
-      }, () => src.close())
+      val lines = new ChangeLog.JsonlLines(new java.io.File(p.file))
+      // the (from, until) line window the offsets planned: reading
+      // stops at `until`
+      reader(lines.zipWithIndex.dropWhile(_._2 < p.from)
+        .takeWhile(_._2 < p.until).map { case (line, i) =>
+          ChangeLog.parseLine(mapper, line, p.seqBase + i)
+        }, () => lines.close())
     }
   }
 

@@ -7,7 +7,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{ChangeLogPartition, ChangeLogReaderFactory}
+import org.apache.spark.sql.connector.read.InputPartition
+import org.apache.spark.sql.connector.read.streaming.ReadLimit
+
+import graft.sources.{ChangeLog, ChangeLogMicroBatchStream, ChangeLogOffset,
+  ChangeLogPartition, ChangeLogReaderFactory, ChangeLogScan}
 
 /** DSv2 change-log source (SURVEY §2.1 S1-S3): (file,row) offsets ≙
   * binlog (filename,pos); rotation ≙ next file; checkpoint resume ≙
@@ -19,23 +23,39 @@ class ChangeLogSourceSpec extends AnyFunSuite {
 
   private val Fmt = "graft.sources.ChangeLogSource"
 
-  private def writeLog(dir: String, name: String, from: Int, until: Int): Unit = {
-    val lines = (from until until).map { i =>
-      val op = Seq("Insert", "Update", "Delete")(i % 3)
-      val before = if (op == "Insert") "null" else s"""{"id":"$i","v":"old$i"}"""
-      val after = if (op == "Delete") "null" else s"""{"id":"$i","v":"new$i"}"""
-      s"""{"op":"$op","db":"db${i % 2}","table":"users","before":$before,"after":$after,"ts":${1700000000 + i},"pkey":"id"}"""
-    }
-    Files.write(Paths.get(dir, name), lines.mkString("\n").getBytes)
+  private def logLine(i: Int): String = {
+    val op = Seq("Insert", "Update", "Delete")(i % 3)
+    val before = if (op == "Insert") "null" else s"""{"id":"$i","v":"old$i"}"""
+    val after = if (op == "Delete") "null" else s"""{"id":"$i","v":"new$i"}"""
+    s"""{"op":"$op","db":"db${i % 2}","table":"users","before":$before,"after":$after,"ts":${1700000000 + i},"pkey":"id"}"""
   }
 
-  /** The rows the reader serves for one `[from, until)` window of `file`. */
-  private def readSlice(file: String, from: Long, until: Long): Seq[InternalRow] = {
-    val r = new ChangeLogReaderFactory()
-      .createReader(ChangeLogPartition(file, from, until, seqBase = 100L))
+  /** A segment of complete lines: each ends in its newline. */
+  private def writeLog(dir: String, name: String, from: Int, until: Int): Unit =
+    Files.write(Paths.get(dir, name),
+      (from until until).map(logLine(_) + "\n").mkString.getBytes)
+
+  private def readPartition(p: InputPartition): Seq[InternalRow] = {
+    val r = new ChangeLogReaderFactory().createReader(p)
     try Iterator.continually(r).takeWhile(_.next()).map(_.get().copy()).toVector
     finally r.close()
   }
+
+  /** The rows the reader serves for one `[from, until)` window of `file`. */
+  private def readSlice(file: String, from: Long, until: Long): Seq[InternalRow] =
+    readPartition(ChangeLogPartition(file, from, until, seqBase = 100L))
+
+  private val SeqIdx = ChangeLog.schema.fieldIndex("seq")
+
+  /** The driver's own offset planning over `dir`, as the stream does it. */
+  private def microBatchStream(dir: String): ChangeLogMicroBatchStream =
+    new ChangeLogScan(dir, None)
+      .toMicroBatchStream("") // the source keeps nothing in its checkpoint
+      .asInstanceOf[ChangeLogMicroBatchStream]
+
+  private def plan(s: ChangeLogMicroBatchStream, from: ChangeLogOffset,
+      until: ChangeLogOffset): Seq[ChangeLogPartition] =
+    s.planInputPartitions(from, until).toSeq.map(_.asInstanceOf[ChangeLogPartition])
 
   /** A mid-file slice returns exactly the rows, `seq` included, that a
     * whole-file read gives in `[from, until)`.
@@ -43,11 +63,10 @@ class ChangeLogSourceSpec extends AnyFunSuite {
   private def assertMidFileSlice(file: String, from: Long, until: Long): Unit = {
     val whole = readSlice(file, 0L, Long.MaxValue)
     assert(0 < from && from < until && until < whole.size, "a mid-file window")
-    val seqIdx = graft.sources.ChangeLog.schema.fieldIndex("seq")
     val slice = readSlice(file, from, until)
-    assert(slice.map(_.getLong(seqIdx)) == (100L + from until 100L + until))
+    assert(slice.map(_.getLong(SeqIdx)) == (100L + from until 100L + until))
     assert(slice == whole.filter { r =>
-      val i = r.getLong(seqIdx) - 100L
+      val i = r.getLong(SeqIdx) - 100L
       i >= from && i < until
     })
   }
@@ -100,6 +119,32 @@ class ChangeLogSourceSpec extends AnyFunSuite {
     assert(batches >= 4) // several admission-limited triggers ran ...
     // ... yet each immutable segment was line-scanned exactly once
     assert(graft.sources.ChangeLog.scansPerformed.get() - before == 2L)
+  }
+
+  test("a torn JSONL last line is planned and read only after its newline lands") {
+    val dir = Files.createTempDirectory("cl_torn").toString
+    val f = Paths.get(dir, "log.000001.jsonl")
+    writeLog(dir, "log.000001.jsonl", 0, 3)
+    val line3 = logLine(3)
+    def append(s: String): Unit =
+      Files.write(f, s.getBytes, java.nio.file.StandardOpenOption.APPEND)
+    append(line3.take(40)) // a writer caught mid-line
+    assert(spark.read.format(Fmt).option("path", dir).load().count() == 3)
+    val s = microBatchStream(dir)
+    val start = s.initialOffset().asInstanceOf[ChangeLogOffset]
+    val e1 = s.latestOffset(start, ReadLimit.allAvailable()).asInstanceOf[ChangeLogOffset]
+    assert(e1 == ChangeLogOffset(0, 3L))
+    // the whole file is the window, and the torn line still stays out
+    assert(readSlice(f.toString, 0L, Long.MaxValue).size == 3)
+    assert(plan(s, start, e1).flatMap(readPartition).map(_.getLong(SeqIdx)) == Seq(0L, 1L, 2L))
+    append(line3.drop(40) + "\n")
+    val e2 = s.latestOffset(e1, ReadLimit.allAvailable()).asInstanceOf[ChangeLogOffset]
+    assert(e2 == ChangeLogOffset(0, 4L))
+    val rows = plan(s, e1, e2).flatMap(readPartition)
+    assert(rows.map(_.getLong(SeqIdx)) == Seq(3L))
+    assert(rows.head.getUTF8String(ChangeLog.schema.fieldIndex("after")).toString ==
+      """{"id":"3","v":"new3"}""")
+    assert(spark.read.format(Fmt).option("path", dir).load().count() == 4)
   }
 
   test("micro-batch: offsets resume across file rotation, no reprocessing") {
@@ -285,6 +330,137 @@ class ChangeLogSourceSpec extends AnyFunSuite {
         .mkString("{", ",", "}"))
       assert(got == want, s"trial $trial types=$types")
     }
+  }
+
+  private def user(i: Int): Seq[V] =
+    Seq(I(i), if (i % 4 == 0) NULL else S(s"u$i"), I(i % 7 - 3), I(i * 1000003L))
+
+  /** A CRC32-checked segment of 12 rows in 5 rows events over two
+    * tables: rows 0-2 WRITE, 3-4 UPDATE, 5 WRITE, 6-7 DELETE, 8-11
+    * WRITE, then a rotate.
+    */
+  private def multiRowSeg(): Array[Byte] = file(Seq(
+    (1700000100L, Binlog.FormatDescription, fdePayload()),
+    (1700000101L, Binlog.TableMapEvent,
+      tableMapPayload(30L, "shop", "users", UserTypes, UserMetas)),
+    (1700000101L, Binlog.WriteRowsV2,
+      rowsPayload(30L, UserTypes, UserMetas, (1 to 3).map(user))),
+    (1700000102L, Binlog.UpdateRowsV2,
+      updateRowsPayload(30L, UserTypes, UserMetas,
+        Seq((user(1), user(11)), (user(2), user(12))))),
+    (1700000103L, Binlog.TableMapEvent,
+      tableMapPayload(31L, "crm", "accounts", UserTypes, UserMetas)),
+    (1700000103L, Binlog.WriteRowsV2,
+      rowsPayload(31L, UserTypes, UserMetas, Seq(user(4)))),
+    (1700000104L, Binlog.DeleteRowsV2,
+      rowsPayload(30L, UserTypes, UserMetas, Seq(user(3), user(11)))),
+    (1700000105L, Binlog.WriteRowsV2,
+      rowsPayload(31L, UserTypes, UserMetas, (5 to 8).map(user))),
+    (1700000106L, Binlog.Rotate, rotatePayload("log.000002.binlog"))),
+    checksum = true)
+
+  test("binlog slices: every [from, until) window the driver plans equals the whole-file read's, seq included") {
+    val dir = Files.createTempDirectory("cl_binlog_slices").toString
+    val f = Paths.get(dir, "log.000001.binlog")
+    Files.write(f, multiRowSeg())
+    Files.write(Paths.get(dir, "log.000002.binlog"), binlogSeg2())
+    val whole = readPartition(ChangeLogPartition(f.toString, 0L, Long.MaxValue, 0L))
+    val pos = Binlog.decodeFile(multiRowSeg()).changes.map(_.pos)
+    assert(whole.map(_.getLong(SeqIdx)) == (0L until 12L))
+    val s = microBatchStream(dir)
+    // every end inside the segment, and its end: a slice to (1, 0)
+    // reads the first segment to its last row
+    for (from <- 0 until 12;
+         end <- (from + 1 to 12).map(ChangeLogOffset(0, _)) :+ ChangeLogOffset(1, 0L)) {
+      val Seq(p) = plan(s, ChangeLogOffset(0, from), end)
+      // the slice starts at the event holding row `from`
+      assert((p.startPos, p.startRow) == (pos(from), pos.indexOf(pos(from)).toLong))
+      val until = if (end.fileIdx == 0) end.row.toInt else 12
+      assert(readPartition(p) == whole.slice(from, until), s"[$from, $until)")
+    }
+  }
+
+  test("a maxRowsPerTrigger 3 stream over .binlog segments yields exactly the batch read's rows") {
+    val dir = Files.createTempDirectory("cl_binlog_stream").toString
+    val ckp = Files.createTempDirectory("cl_binlog_stream_ckp").toString
+    Files.write(Paths.get(dir, "log.000001.binlog"), multiRowSeg())
+    Files.write(Paths.get(dir, "log.000002.binlog"), binlogSeg2())
+    val batch = spark.read.format(Fmt).option("path", dir).load().collect().toSeq
+    var streamed = Vector.empty[org.apache.spark.sql.Row]
+    var sizes = Vector.empty[Int]
+    val q = spark.readStream.format(Fmt).option("path", dir)
+      .option("maxRowsPerTrigger", "3").load()
+      .writeStream
+      .option("checkpointLocation", ckp)
+      .trigger(Trigger.AvailableNow())
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        val rows = b.collect()
+        sizes :+= rows.length
+        streamed ++= rows
+        ()
+      }.start()
+    q.awaitTermination()
+    assert(batch.size == 13 && sizes.sum == 13 && sizes.forall(_ <= 3))
+    assert(streamed == batch)
+  }
+
+  test("binlog slices keep the checks before their start and read nothing past until") {
+    val dir = Files.createTempDirectory("cl_binlog_checks").toString
+    val f = Paths.get(dir, "log.000001.binlog")
+    val clean = multiRowSeg()
+    val changes = Binlog.decodeFile(clean).changes
+    val index = Binlog.RowsIndex.of(changes)
+    def part(from: Long, until: Long) = {
+      val (startPos, startRow) = index.startOf(from)
+      ChangeLogPartition(f.toString, from, until, 0L, startPos, startRow)
+    }
+    Files.write(f, clean)
+    val want = readPartition(part(0L, Long.MaxValue))
+    // rows 4-6: from inside the UPDATE event (rows 3-4), into the DELETE
+    // event (rows 6-7); rows 4-7 end with the DELETE event
+    assert(part(4L, 7L).startPos == changes(3).pos && part(4L, 7L).startRow == 3L)
+    // garbage right after the DELETE event, which holds row until-1
+    Files.write(f, clean.take(changes(8).pos.toInt) ++ Array.fill[Byte](64)(0x5a))
+    val e0 = intercept[IllegalArgumentException](
+      Binlog.decodeFile(Files.readAllBytes(f)))
+    assert(e0.getMessage.contains(s"truncated event at ${changes(8).pos}"))
+    for (until <- Seq(7L, 8L))
+      assert(readPartition(part(4L, until)) == want.slice(4, until.toInt))
+    // one flipped CRC byte in the first WRITE event (rows 0-2), before
+    // the slice's start: the slice still fails on it
+    val bad = clean.clone()
+    val crcByte = changes(3).pos.toInt - 1 // the last byte of that event
+    bad(crcByte) = (bad(crcByte) ^ 0x01).toByte
+    Files.write(f, bad)
+    val e = intercept[IllegalArgumentException](readPartition(part(4L, 7L)))
+    assert(e.getMessage.contains(s"CRC32 mismatch at offset ${changes(0).pos}"))
+  }
+
+  test("row images render the bytes of an ObjectNode holding the same values") {
+    val types = Seq(Binlog.TypeVarchar, Binlog.TypeBlob, Binlog.TypeNewDecimal,
+      Binlog.TypeTime2, Binlog.TypeFloat, Binlog.TypeDouble, Binlog.TypeLongLong)
+    val metas = Seq(255, 2, (12 << 8) | 4, 6, 4, 8, 0)
+    val text = "q\"uote \\ back\u0001ctl \t é 日本 \ud83d\ude00"
+    val bytes = file(Seq(
+      (1L, Binlog.TableMapEvent, tableMapPayload(5L, "d", "t", types, metas)),
+      (2L, Binlog.WriteRowsV2, rowsPayload(5L, types, metas, Seq(
+        Seq(S(text), BLOB(Array(0xff, 0x00, 0xc3, 0x7f).map(_.toByte)),
+          DEC("-12345678.0042"), TM(neg = true, 838, 59, 59, 5),
+          F(-1.25e-3f), DBL(-6.02214076e23), I(Long.MinValue)),
+        Seq(S(""), BLOB(Array(0x80.toByte)), DEC("-0.0100"),
+          TM(neg = true, 0, 0, 0, 120000), F(Float.MaxValue), DBL(1e-300),
+          NULL))))))
+    val m = new com.fasterxml.jackson.databind.ObjectMapper()
+    val n0 = m.createObjectNode()
+    n0.put("c0", text); n0.put("c1", "FF00C37F"); n0.put("c2", "-12345678.0042")
+    n0.put("c3", "-838:59:59.000005"); n0.put("c4", -1.25e-3f)
+    n0.put("c5", -6.02214076e23); n0.put("c6", Long.MinValue)
+    val n1 = m.createObjectNode()
+    n1.put("c0", ""); n1.put("c1", "80"); n1.put("c2", "-0.0100")
+    n1.put("c3", "-000:00:00.120000"); n1.put("c4", Float.MaxValue)
+    n1.put("c5", 1e-300); n1.putNull("c6")
+    assert(Binlog.decodeFile(bytes).changes.map(_.after.get) ==
+      Seq(m.writeValueAsString(n0), m.writeValueAsString(n1)))
   }
 
   test("binlog segments read through the DSv2 source: envelope rows, batch + resume across rotation") {

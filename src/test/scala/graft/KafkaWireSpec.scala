@@ -445,7 +445,7 @@ class KafkaWireSpec extends AnyFunSuite {
           s"""{"op":"Insert","db":"db${i % 2}","table":"users","before":null,"after":{"id":"$i"},"ts":${1700000000 + i},"pkey":"id"}"""
         }
         java.nio.file.Files.write(dir.resolve(s"log.00000$f.jsonl"),
-          lines.mkString("\n").getBytes(UTF_8))
+          lines.mkString("", "\n", "\n").getBytes(UTF_8))
       }
       def batchRead = spark.read.format("graft-changelog")
         .option("path", dir.toString).load()

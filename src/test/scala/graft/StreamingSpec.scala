@@ -750,12 +750,12 @@ class StreamingSpec extends AnyFunSuite {
       s"""{"op":"$op","db":"d","table":"t","before":$before,"after":$after,"ts":$ts,"pkey":"id"}"""
     Files.write(java.nio.file.Paths.get(dir, "log.000001.jsonl"),
       (1 to 5).map(i => line("Backfill", "null", row(i, s"snap$i"), 1L))
-        .mkString("\n").getBytes)
+        .mkString("", "\n", "\n").getBytes)
     Files.write(java.nio.file.Paths.get(dir, "log.000002.jsonl"),
       Seq(
         line("Update", row(2, "snap2"), row(2, "live2"), 100L),
         line("Delete", row(3, "snap3"), "null", 101L),
-        line("Insert", "null", row(9, "new9"), 102L)).mkString("\n").getBytes)
+        line("Insert", "null", row(9, "new9"), 102L)).mkString("", "\n", "\n").getBytes)
 
     val changes = spark.readStream.format("graft-changelog").option("path", dir).load()
     val keyed = changes.select(

@@ -213,13 +213,13 @@ class TextIndexStreamSpec extends AnyFunSuite {
     Files.write(java.nio.file.Paths.get(logDir, "log.000001.jsonl"),
       snap.toSeq.sortBy(_._1)
         .map { case (i, t) => line("Backfill", "null", row(i, t), 1L) }
-        .mkString("\n").getBytes)
+        .mkString("", "\n", "\n").getBytes)
     Files.write(java.nio.file.Paths.get(logDir, "log.000002.jsonl"),
       Seq(
         line("Update", row(2, snap(2)), row(2, "fresh spark vector text"), 100L),
         line("Delete", row(3, snap(3)), "null", 101L),
         line("Insert", "null", row(9, "brand new hash doc"), 102L))
-        .mkString("\n").getBytes)
+        .mkString("", "\n", "\n").getBytes)
 
     val dir = Files.createTempDirectory("tidx_cl_idx").toString
     TextIndex.build(spark, Seq.empty[(Long, String)].toDF("doc_id", "text"),

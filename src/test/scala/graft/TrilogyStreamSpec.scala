@@ -67,11 +67,11 @@ class TrilogyStreamSpec extends AnyFunSuite {
         line("Insert", "null",
           row(7L, "brand new seven join", vecOf(8L)), 102L),
         line("Delete", row(6L, "", Nil), "null", 103L))
-        .mkString("\n").getBytes)
+        .mkString("", "\n", "\n").getBytes)
     Files.write(java.nio.file.Paths.get(logDir, "log.000002.jsonl"),
       Seq(line("Update", "null",
         row(0L, "final title zero scan", vecOf(3L)),
-        200L)).mkString("\n").getBytes)
+        200L)).mkString("", "\n", "\n").getBytes)
 
     def decoded() = {
       val changes = spark.readStream.format("graft-changelog")

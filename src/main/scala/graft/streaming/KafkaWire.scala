@@ -6,6 +6,7 @@ import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{coalesce, col, lit, max, unix_millis}
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.cdc.{Routing, Transform, Transforms}
@@ -37,23 +38,33 @@ import graft.cdc.{Routing, Transform, Transforms}
   * == Scale shape ==
   *
   * [[publishFrame]] publishes from `foreachPartition` — every
-  * EXECUTOR task opens its own broker connection and ships only its
-  * partition's rows (records grouped into one batch per (topic,
-  * partition) per task): no driver collect, no cross-executor
-  * funnel, exactly how the real connector's per-task producers
-  * behave. Produce requests are LEADER-ROUTED (r16): the Metadata v1
-  * exchange on the bootstrap broker reports every partition's leader
-  * node and every node's advertised address; each task groups its
-  * batches by leader and exchanges with each leader over the
-  * executor's POOLED connection to it (r17) — one cached socket per
-  * (executor, broker), invalidated on failure and re-dialed through
-  * fresh metadata, the same (node → channel) cache a stock
-  * producer's NetworkClient keeps. A long-running [[wireSink]] thus
-  * dials each broker once, not once per trigger.
+  * EXECUTOR task ships only its partition's rows (records grouped
+  * into one batch per (topic, partition) per task): no driver
+  * collect, no cross-executor funnel, exactly how the real
+  * connector's per-task producers behave. Produce requests are
+  * LEADER-ROUTED (r16): the Metadata v1 exchange on the bootstrap
+  * broker reports every partition's leader node and every node's
+  * advertised address; each task groups its batches by leader and
+  * exchanges with each leader over the executor's POOLED connection
+  * to it (r17) — one cached socket per (executor, broker), the same
+  * (node → channel) cache a stock producer's NetworkClient keeps.
+  * The Metadata answer is cached beside the pool, per executor and
+  * bootstrap address: a publish fetches it only for a topic the
+  * cache lacks, or after a failed attempt, which drops the entry
+  * (a stale-leader NACK, an IO error, a leaderless routed
+  * partition). A long-running [[wireSink]] thus dials each broker
+  * once and asks for metadata once, not once per trigger.
   * A topic missing from the Metadata response or a partition with no
   * elected leader fails the task loudly (advice r15: silently
   * assuming 1 partition pinned records to partition 0, breaking
   * keyed placement once the topic exists with more).
+  *
+  * [[wireSink]] runs ONE Spark job per trigger: the frame it
+  * publishes carries each record's CreateTime from the same
+  * projection as key/value/topic, and the frame is coalesced (no
+  * shuffle) into one task, which reads the trigger's file slices in
+  * log order — so one table's changes reach their partition in log
+  * order even when a trigger spans a segment rotate.
   */
 object KafkaWire {
 
@@ -138,24 +149,33 @@ object KafkaWire {
 
   // --------------------------------------------- record batch (v2)
 
-  /** One RecordBatch, magic 2: all records at `timestampMs`, no
-    * compression, idempotence off (producerId −1 — this client
-    * offers at-least-once like the reference's relay; exactly-once
-    * belongs to the checkpoint layer above).
+  /** One record to publish: key and value bytes, its topic, and its
+    * CreateTime in epoch milliseconds.
     */
-  private[graft] def encodeRecordBatch(
-      records: Seq[(Array[Byte], Array[Byte])],
-      timestampMs: Long): Array[Byte] = {
-    val recBytes = records.zipWithIndex.map { case ((k, v), i) =>
+  final case class Record(key: Array[Byte], value: Array[Byte],
+      topic: String, timestampMs: Long)
+
+  /** One RecordBatch, magic 2: each record at its own CreateTime
+    * (baseTimestamp = the first record's, zigzag deltas from it,
+    * maxTimestamp = the largest), no compression, idempotence off
+    * (producerId −1 — this client offers at-least-once like the
+    * reference's relay; exactly-once belongs to the checkpoint layer
+    * above).
+    */
+  private[graft] def encodeRecordBatch(records: Seq[Record])
+      : Array[Byte] = {
+    val baseTs = records.head.timestampMs
+    val recBytes = records.zipWithIndex.map { case (r, i) =>
+      val (k, v, tsDelta) = (r.key, r.value, r.timestampMs - baseTs)
       val keyLen = if (k == null) -1 else k.length
       val valLen = if (v == null) -1 else v.length
-      val body = 1 + varLen(0L) + varLen(i.toLong) +
+      val body = 1 + varLen(tsDelta) + varLen(i.toLong) +
         varLen(keyLen.toLong) + math.max(keyLen, 0) +
         varLen(valLen.toLong) + math.max(valLen, 0) + varLen(0L)
       val b = ByteBuffer.allocate(varLen(body.toLong) + body)
       writeVarLong(b, body.toLong)
       b.put(0.toByte)          // attributes
-      writeVarLong(b, 0L)      // timestampDelta
+      writeVarLong(b, tsDelta) // timestampDelta
       writeVarLong(b, i.toLong) // offsetDelta
       writeVarLong(b, keyLen.toLong)
       if (keyLen > 0) b.put(k)
@@ -170,8 +190,8 @@ object KafkaWire {
     val crcRegion = ByteBuffer.allocate(40 + recsLen)
     crcRegion.putShort(0)                           // attributes
     crcRegion.putInt(records.size - 1)              // lastOffsetDelta
-    crcRegion.putLong(timestampMs)                  // baseTimestamp
-    crcRegion.putLong(timestampMs)                  // maxTimestamp
+    crcRegion.putLong(baseTs)                       // baseTimestamp
+    crcRegion.putLong(records.map(_.timestampMs).max) // maxTimestamp
     crcRegion.putLong(-1L)                          // producerId
     crcRegion.putShort(-1)                          // producerEpoch
     crcRegion.putInt(-1)                            // baseSequence
@@ -321,8 +341,12 @@ object KafkaWire {
     }
   }
 
-  /** Test/operational hook: drop every pooled broker connection. */
-  private[graft] def poolClear(): Unit = ConnPool.clear()
+  /** Test/operational hook: drop every pooled broker connection and
+    * every cached Metadata answer.
+    */
+  private[graft] def poolClear(): Unit = {
+    ConnPool.clear(); metaCache.clear()
+  }
 
   /** Produce error codes a fresh-metadata redial can cure:
     * LEADER_NOT_AVAILABLE (5), NOT_LEADER_FOR_PARTITION (6) — the
@@ -355,7 +379,23 @@ object KafkaWire {
       brokers: Map[Int, (String, Int)],
       partitions: Map[String, Int],
       leaders: Map[(String, Int), Int],
-      partErrors: Map[(String, Int), Short])
+      partErrors: Map[(String, Int), Short]) {
+
+    /** This answer with `fresh`'s topics and brokers laid over it. */
+    def ++(fresh: ClusterMeta): ClusterMeta =
+      ClusterMeta(fresh.brokers, partitions ++ fresh.partitions,
+        leaders ++ fresh.leaders, partErrors ++ fresh.partErrors)
+  }
+
+  /** Per-JVM (= per-executor) Metadata cache keyed by bootstrap
+    * address, beside [[ConnPool]]: a publish asks the broker only for
+    * the topics its entry lacks. [[publish]] drops the entry on ANY
+    * failed attempt — a stale leader, a dead socket, a routed
+    * partition without a leader — so nothing a failure might blame on
+    * stale metadata is served from the cache again.
+    */
+  private val metaCache =
+    scala.collection.concurrent.TrieMap.empty[(String, Int), ClusterMeta]
 
   /** Partition-metadata codes a stock producer ignores when a leader
     * is elected: REPLICA_NOT_AVAILABLE (9) — one replica offline on an
@@ -457,29 +497,40 @@ object KafkaWire {
 
   // ------------------------------------------------------ public API
 
-  /** Publish (key, value, topic) records via the cluster reachable
-    * at bootstrap `host:port` — one Metadata v1 exchange on the
-    * bootstrap connection, then one record batch per (topic, murmur2
-    * partition) LEADER-ROUTED: batches group by their partition's
-    * leader node and each leader gets one connection and one Produce
-    * v3 (the bootstrap connection is reused when it IS the leader's
-    * advertised address). A topic the Metadata response omits fails
-    * fast — silently assuming one partition would pin records to
-    * partition 0 and break DefaultPartitioner placement (advice r15).
-    * Returns (topic, partition) → baseOffset as acked by the leaders.
+  /** Publish records via the cluster reachable at bootstrap
+    * `host:port` — Metadata v1 from the executor's cache (one exchange
+    * on the bootstrap connection when a topic is missing from it),
+    * then one record batch per (topic, murmur2 partition)
+    * LEADER-ROUTED: batches group by their partition's leader node and
+    * each leader gets one connection and one Produce v3 (the bootstrap
+    * connection is reused when it IS the leader's advertised address).
+    * A topic the Metadata response omits fails fast — silently
+    * assuming one partition would pin records to partition 0 and break
+    * DefaultPartitioner placement (advice r15). Returns (topic,
+    * partition) → baseOffset as acked by the leaders.
     */
-  def publish(host: String, port: Int,
-      records: Seq[(Array[Byte], Array[Byte], String)],
-      timestampMs: Long, clientId: String = "graft-wire",
+  def publish(host: String, port: Int, records: Seq[Record],
+      clientId: String = "graft-wire",
       timeoutMs: Int = 30000): Map[(String, Int), Long] = {
     if (records.isEmpty) return Map.empty
-    val topics = records.map(_._3).distinct
-    def attempt(): Map[(String, Int), Long] = {
-      // fresh metadata on the POOLED bootstrap connection — no dial
-      // on the steady path; a broken pooled socket re-dials inside
-      // the pool
-      val meta = ConnPool.withConn(host, port)(c =>
-        clusterMeta(c.out, c.in, clientId, topics, c.nextCorr()))
+    val topics = records.map(_.topic).distinct
+    // the cached answer, extended by one exchange on the POOLED
+    // bootstrap connection for the topics it lacks — no dial on the
+    // steady path; a broken pooled socket re-dials inside the pool
+    def metadata(): ClusterMeta = {
+      val cached = metaCache.get((host, port))
+      val missing = topics.filterNot(t => cached.exists(_.partitions.contains(t)))
+      if (missing.isEmpty) cached.get
+      else {
+        val fresh = ConnPool.withConn(host, port)(c =>
+          clusterMeta(c.out, c.in, clientId, missing, c.nextCorr()))
+        val meta = cached.fold(fresh)(_ ++ fresh)
+        metaCache.put((host, port), meta)
+        meta
+      }
+    }
+    def attempt(): Map[(String, Int), Long] = try {
+      val meta = metadata()
       topics.foreach { t =>
         require(meta.partitions.contains(t),
           s"metadata response omits topic '$t' — cannot place records " +
@@ -489,11 +540,11 @@ object KafkaWire {
           s"topic '$t' reports 0 partitions — creation in progress? " +
             "retry")
       }
+      // groupBy keeps each group's records in input order, so one
+      // partition's batch holds its records in log order
       val batches = records
-        .groupBy(r => (r._3, partitionFor(r._1, meta.partitions(r._3))))
-        .map { case (tp, rs) =>
-          tp -> encodeRecordBatch(rs.map(r => (r._1, r._2)), timestampMs)
-        }
+        .groupBy(r => (r.topic, partitionFor(r.key, meta.partitions(r.topic))))
+        .map { case (tp, rs) => tp -> encodeRecordBatch(rs) }
       // leader/error checks for exactly the partitions this call
       // ROUTES batches to (advice r16): a non-fatal code on a routed
       // partition (replica offline, leader fine) is tolerated like a
@@ -521,6 +572,10 @@ object KafkaWire {
         ConnPool.withConn(lh, lp)(c =>
           produce(c.out, c.in, clientId, c.nextCorr(), lb, timeoutMs))
       }.toMap
+    } catch {
+      // whatever failed may be stale metadata's fault: the next
+      // attempt, here or in a later publish, asks the broker afresh
+      case e: Throwable => metaCache.remove((host, port)); throw e
     }
     try attempt()
     catch {
@@ -536,20 +591,28 @@ object KafkaWire {
   }
 
   /** Publish a [[Sink.kafkaFrame]]-shaped frame ((key, value, topic)
-    * rows) from the EXECUTORS: each partition task ships its own rows
-    * over its own connection — no driver funnel. `timestampMs` is
-    * caller-supplied (one batch-constant stamp keeps replays
-    * byte-identical).
+    * rows) from the EXECUTORS, every record stamped `timestampMs`.
     */
   def publishFrame(frame: DataFrame, brokers: String,
-      timestampMs: Long): Unit = {
+      timestampMs: Long): Unit =
+    publishFrame(frame, brokers, lit(timestampMs))
+
+  /** Publish a [[Sink.kafkaFrame]]-shaped frame ((key, value, topic)
+    * rows) from the EXECUTORS: each partition task ships its own rows
+    * over its executor's pooled connections — no driver funnel. Each
+    * record's CreateTime is `timestamp` (epoch ms, a long column)
+    * evaluated on its own row, in the same projection as key, value
+    * and topic.
+    */
+  def publishFrame(frame: DataFrame, brokers: String,
+      timestamp: Column): Unit = {
     val (host, port) = hostPort(brokers)
-    frame.select("key", "value", "topic").foreachPartition {
-      rows: Iterator[org.apache.spark.sql.Row] =>
-        val recs = rows.map(r => (r.getAs[Array[Byte]](0),
-          r.getAs[Array[Byte]](1), r.getString(2))).toSeq
-        if (recs.nonEmpty) { publish(host, port, recs, timestampMs); () }
-    }
+    frame.select(col("key"), col("value"), col("topic"), timestamp)
+      .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
+        val recs = rows.map(r => Record(r.getAs[Array[Byte]](0),
+          r.getAs[Array[Byte]](1), r.getString(2), r.getLong(3))).toSeq
+        if (recs.nonEmpty) { publish(host, port, recs); () }
+      }
   }
 
   private def hostPort(brokers: String): (String, Int) = {
@@ -562,14 +625,17 @@ object KafkaWire {
   /** The [[Sink.kafkaSink]] twin that needs NO connector jar: the
     * same integration gate (`SPARK_GRAFT_KAFKA_BROKERS`), the same
     * [[Sink.kafkaFrame]] record contract, published per micro-batch
-    * through [[publishFrame]]. At-least-once: a replayed epoch
-    * re-publishes its records (Kafka consumers dedup on (key,
-    * offset) or idempotent reads downstream), matching the
-    * reference's relay semantics. Record CreateTime is the batch's
-    * max change event time — a REAL clock value (review r15: the
-    * epoch number stamped ~1970 timestamps, which a stock broker's
-    * time-based retention would delete immediately), and still a
-    * pure function of batch content so replays stay byte-identical.
+    * through [[publishFrame]] as ONE Spark job: the frame is
+    * coalesced, without a shuffle, into one task that publishes the
+    * trigger's slices in log order. At-least-once: a replayed epoch
+    * re-publishes its records (Kafka consumers dedup on (key, offset)
+    * or idempotent reads downstream), matching the reference's relay
+    * semantics. Each record's CreateTime is its own change's event
+    * time, [[createTime]], as Debezium's `ts_ms` is — a REAL clock
+    * value (review r15: the epoch number stamped ~1970 timestamps,
+    * which a stock broker's time-based retention would delete
+    * immediately), and a pure function of its row, so replays stay
+    * byte-identical.
     */
   def wireSink(changes: DataFrame, checkpointDir: String,
       brokers: Option[String] = sys.env.get("SPARK_GRAFT_KAFKA_BROKERS"),
@@ -580,23 +646,28 @@ object KafkaWire {
       changes.writeStream
         .option("checkpointLocation", checkpointDir)
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          // no emptiness probe (a job per trigger): an empty batch
-          // publishes nothing, since publishFrame skips empty partitions
-          publishFrame(Sink.kafkaFrame(batch, topic, transform), bs,
-            batchCreateTime(batch))
+          // no emptiness probe and no stamp aggregate (a job each per
+          // trigger): an empty batch publishes nothing, since
+          // publishFrame skips empty partitions
+          val frame = Sink.kafkaFrame(batch, topic, transform, Some(createTime))
+          publishFrame(frame.coalesce(1), bs, col("timestamp"))
         }
         .start()
     }
 
-  /** The batch's CreateTime stamp: max change event time — a REAL
-    * clock value (review r15) and a pure function of batch content so
-    * replays stay byte-identical. A non-empty batch whose `ts` values
-    * are ALL null has no event time; it stamps epoch 0 instead of
-    * NPE-ing the micro-batch permanently on every replay (advice
-    * r15) — retention risk is confined to that pathological batch.
+  /** A change's CreateTime: its event time in epoch ms. A null `ts`
+    * has no event time and stamps epoch 0 instead of failing the
+    * micro-batch on every replay (advice r15).
+    */
+  private[graft] def createTime: Column =
+    coalesce(unix_millis(col("ts")), lit(0L))
+
+  /** One stamp for a whole batch: its max change event time, epoch 0
+    * when every `ts` is null. An aggregate job of its own; the only
+    * caller outside the specs is perfbench's traced `live_tail` path,
+    * which re-implements [[wireSink]]'s batch body.
     */
   private[graft] def batchCreateTime(batch: DataFrame): Long = {
-    import org.apache.spark.sql.functions.{col, max, unix_millis}
     val r = batch.agg(max(unix_millis(col("ts")))).head()
     if (r.isNullAt(0)) 0L else r.getLong(0)
   }

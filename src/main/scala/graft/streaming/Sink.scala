@@ -33,17 +33,20 @@ object Sink {
     * the transformed wire payload ([[Transforms.toWire]] JSON
     * bytes); `topic` = the routing column ([[Routing.topicByTable]]
     * by default), which the kafka sink reads per-row when no global
-    * topic option is set. Works identically on batch and streaming
-    * frames.
+    * topic option is set. A `timestamp` column, a long of epoch ms
+    * per change, is added only when given (the wire sink's
+    * per-record CreateTime, computed in this same projection). Works
+    * identically on batch and streaming frames.
     */
   def kafkaFrame(changes: DataFrame,
       topic: Column = Routing.topicByTable(),
-      transform: Transform = Transforms.DebeziumEnvelope): DataFrame =
+      transform: Transform = Transforms.DebeziumEnvelope,
+      timestamp: Option[Column] = None): DataFrame =
     Routing.withTopic(Transforms.toWire(changes, transform), topic)
-      .select(
+      .select(Seq(
         concat(col("db"), lit("."), col("table")).cast("binary").as("key"),
         col("payload").cast("binary").as("value"),
-        col("topic"))
+        col("topic")) ++ timestamp.map(_.as("timestamp")): _*)
 
   /** Start the kafka-format writer for a streaming change frame.
     * Integration-gated: returns None (and starts nothing) unless a

@@ -47,13 +47,12 @@ import graft.cdc.{Routing, Transform, Transforms}
   * advertised address; each task groups its batches by leader and
   * exchanges with each leader over the executor's POOLED connection
   * to it (r17) — one cached socket per (executor, broker), the same
-  * (node → channel) cache a stock producer's NetworkClient keeps.
-  * The Metadata answer is cached beside the pool, per executor and
-  * bootstrap address: a publish fetches it only for a topic the
-  * cache lacks, or after a failed attempt, which drops the entry
-  * (a stale-leader NACK, an IO error, a leaderless routed
-  * partition). A long-running [[wireSink]] thus dials each broker
-  * once and asks for metadata once, not once per trigger.
+  * (node → channel) cache a stock producer's NetworkClient keeps,
+  * invalidated on failure and re-dialed through fresh metadata. A
+  * long-running [[wireSink]] thus dials each broker once, not once
+  * per trigger; each publish still asks the bootstrap broker for
+  * fresh metadata, so it follows partition additions and leader
+  * moves at once.
   * A topic missing from the Metadata response or a partition with no
   * elected leader fails the task loudly (advice r15: silently
   * assuming 1 partition pinned records to partition 0, breaking
@@ -341,12 +340,8 @@ object KafkaWire {
     }
   }
 
-  /** Test/operational hook: drop every pooled broker connection and
-    * every cached Metadata answer.
-    */
-  private[graft] def poolClear(): Unit = {
-    ConnPool.clear(); metaCache.clear()
-  }
+  /** Test/operational hook: drop every pooled broker connection. */
+  private[graft] def poolClear(): Unit = ConnPool.clear()
 
   /** Produce error codes a fresh-metadata redial can cure:
     * LEADER_NOT_AVAILABLE (5), NOT_LEADER_FOR_PARTITION (6) — the
@@ -379,23 +374,7 @@ object KafkaWire {
       brokers: Map[Int, (String, Int)],
       partitions: Map[String, Int],
       leaders: Map[(String, Int), Int],
-      partErrors: Map[(String, Int), Short]) {
-
-    /** This answer with `fresh`'s topics and brokers laid over it. */
-    def ++(fresh: ClusterMeta): ClusterMeta =
-      ClusterMeta(fresh.brokers, partitions ++ fresh.partitions,
-        leaders ++ fresh.leaders, partErrors ++ fresh.partErrors)
-  }
-
-  /** Per-JVM (= per-executor) Metadata cache keyed by bootstrap
-    * address, beside [[ConnPool]]: a publish asks the broker only for
-    * the topics its entry lacks. [[publish]] drops the entry on ANY
-    * failed attempt — a stale leader, a dead socket, a routed
-    * partition without a leader — so nothing a failure might blame on
-    * stale metadata is served from the cache again.
-    */
-  private val metaCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), ClusterMeta]
+      partErrors: Map[(String, Int), Short])
 
   /** Partition-metadata codes a stock producer ignores when a leader
     * is elected: REPLICA_NOT_AVAILABLE (9) — one replica offline on an
@@ -498,9 +477,8 @@ object KafkaWire {
   // ------------------------------------------------------ public API
 
   /** Publish records via the cluster reachable at bootstrap
-    * `host:port` — Metadata v1 from the executor's cache (one exchange
-    * on the bootstrap connection when a topic is missing from it),
-    * then one record batch per (topic, murmur2 partition)
+    * `host:port` — one Metadata v1 exchange on the bootstrap
+    * connection, then one record batch per (topic, murmur2 partition)
     * LEADER-ROUTED: batches group by their partition's leader node and
     * each leader gets one connection and one Produce v3 (the bootstrap
     * connection is reused when it IS the leader's advertised address).
@@ -514,23 +492,12 @@ object KafkaWire {
       timeoutMs: Int = 30000): Map[(String, Int), Long] = {
     if (records.isEmpty) return Map.empty
     val topics = records.map(_.topic).distinct
-    // the cached answer, extended by one exchange on the POOLED
-    // bootstrap connection for the topics it lacks — no dial on the
-    // steady path; a broken pooled socket re-dials inside the pool
-    def metadata(): ClusterMeta = {
-      val cached = metaCache.get((host, port))
-      val missing = topics.filterNot(t => cached.exists(_.partitions.contains(t)))
-      if (missing.isEmpty) cached.get
-      else {
-        val fresh = ConnPool.withConn(host, port)(c =>
-          clusterMeta(c.out, c.in, clientId, missing, c.nextCorr()))
-        val meta = cached.fold(fresh)(_ ++ fresh)
-        metaCache.put((host, port), meta)
-        meta
-      }
-    }
-    def attempt(): Map[(String, Int), Long] = try {
-      val meta = metadata()
+    def attempt(): Map[(String, Int), Long] = {
+      // fresh metadata on the POOLED bootstrap connection — no dial
+      // on the steady path; a broken pooled socket re-dials inside
+      // the pool
+      val meta = ConnPool.withConn(host, port)(c =>
+        clusterMeta(c.out, c.in, clientId, topics, c.nextCorr()))
       topics.foreach { t =>
         require(meta.partitions.contains(t),
           s"metadata response omits topic '$t' — cannot place records " +
@@ -572,10 +539,6 @@ object KafkaWire {
         ConnPool.withConn(lh, lp)(c =>
           produce(c.out, c.in, clientId, c.nextCorr(), lb, timeoutMs))
       }.toMap
-    } catch {
-      // whatever failed may be stale metadata's fault: the next
-      // attempt, here or in a later publish, asks the broker afresh
-      case e: Throwable => metaCache.remove((host, port)); throw e
     }
     try attempt()
     catch {

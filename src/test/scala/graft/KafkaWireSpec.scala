@@ -48,9 +48,6 @@ class KafkaWireSpec extends AnyFunSuite {
       partScript: Option[Int => (Short, Int)] = None,
       produceScript: Option[Int => Short] = None) {
     val server = new ServerSocket(0)
-    // the executor's connection pool and Metadata cache are keyed by
-    // address, and a fresh broker may reuse an earlier one's port
-    KafkaWire.poolClear()
     val produced = mutable.ArrayBuffer.empty[Produced]
     // connection/request counters — pin the pooled-connection
     // contract (one dial per broker, metadata refresh on retry)
@@ -326,14 +323,14 @@ class KafkaWireSpec extends AnyFunSuite {
         (lo until hi).map(i => record(s"key$i", s"val$i"))
       KafkaWire.publish("localhost", selfPort, recs(0, 20))
       KafkaWire.publish("localhost", selfPort, recs(20, 40))
-      // the second publish rode the first's sockets and its cached
-      // metadata: one dial per broker and ONE Metadata exchange
-      // across BOTH triggers
+      // the second publish rode the first's sockets: one dial per
+      // broker across BOTH triggers, metadata still refreshed per
+      // publish on the pooled bootstrap connection
       assert(bootstrap.accepted.get == 1,
         s"bootstrap dialed ${bootstrap.accepted.get}x")
       assert(brokerB.accepted.get == 1,
         s"leader B dialed ${brokerB.accepted.get}x")
-      assert(bootstrap.metaServed.get == 1)
+      assert(bootstrap.metaServed.get == 2)
       val decoded = (bootstrap.produced.synchronized {
         bootstrap.produced.toSeq
       } ++ brokerB.produced.synchronized { brokerB.produced.toSeq })
@@ -369,49 +366,6 @@ class KafkaWireSpec extends AnyFunSuite {
         (new String(k, UTF_8), new String(v, UTF_8)) }.sorted
       assert(decoded == strings(recs))
     } finally { broker.stop(); KafkaWire.poolClear() }
-  }
-
-  test("cached metadata: a topic not yet cached costs exactly one more Metadata exchange, a cached one none") {
-    val broker = new ScriptedBroker(nPartitions = 3)
-    try {
-      val port = broker.server.getLocalPort
-      KafkaWire.publish("localhost", port, Seq(record("k0", "v0")))
-      KafkaWire.publish("localhost", port, Seq(record("k1", "v1")))
-      assert(broker.metaServed.get == 1)
-      KafkaWire.publish("localhost", port,
-        Seq(record("k2", "v2"), record("k3", "v3", topic = "u")))
-      assert(broker.metaServed.get == 2)
-      KafkaWire.publish("localhost", port,
-        Seq(record("k4", "v4", topic = "u"), record("k5", "v5")))
-      assert(broker.metaServed.get == 2)
-      assert(broker.produced.synchronized(broker.produced.toSeq)
-        .flatMap(p => decodeBatch(p.batch)).size == 6)
-    } finally broker.stop()
-  }
-
-  test("cached metadata: a publish that failed on a leaderless routed partition leaves no cached entry; the next publish lands once a leader is elected") {
-    // partition 1 has no leader until `elected`: a cached copy of that
-    // answer would fail every later publish routed to it
-    @volatile var elected = false
-    val broker = new ScriptedBroker(nPartitions = 2,
-      partScript = Some(p =>
-        if (p == 1 && !elected) (5: Short, -1) else (0: Short, 0)))
-    try {
-      val port = broker.server.getLocalPort
-      val k1 = (0 until 100).map(i => s"k$i")
-        .find(k => KafkaWire.partitionFor(k.getBytes(UTF_8), 2) == 1).get
-      val e = intercept[IllegalArgumentException] {
-        KafkaWire.publish("localhost", port, Seq(record(k1, "v")))
-      }
-      assert(e.getMessage.contains("routed partition t/1"))
-      assert(broker.metaServed.get == 1)
-      elected = true
-      val offsets = KafkaWire.publish("localhost", port, Seq(record(k1, "v")))
-      assert(offsets.keySet == Set(("t", 1)))
-      assert(broker.metaServed.get == 2)
-      assert(broker.produced.synchronized(broker.produced.toSeq)
-        .flatMap(p => decodeBatch(p.batch)).size == 1)
-    } finally broker.stop()
   }
 
   test("a topic the Metadata response omits fails fast instead of pinning records to partition 0 (advice r15)") {

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.streaming.LocalCheckpointFiles
+
 /** The one session every entry point (Bench, Verify, ScaleGen, Plans,
   * Probe) runs on, and the scale-adaptive tuning it applies — guide
   * §2.2 / §2.4 and the round-18 brief's "make partitioning
@@ -27,6 +29,15 @@ import org.apache.spark.sql.SparkSession
   * scale instead of from whichever constant the session started with.
   * Both knobs stay env-overridable so the driver's bench point is
   * reproducible and the production value is a conf, not a code edit.
+  *
+  * [[tuned]] also installs [[CheckpointFiles]], the streaming
+  * checkpoint file manager: every offset log, commit log, state-store
+  * delta and snapshot of a streaming query is written through it.
+  * Spark's default manager forks `chmod` and `readlink` for each such
+  * file on a local filesystem without `libhadoop`, and those forks
+  * were most of a small trigger's commit time. The manager takes over
+  * only `file:` paths on Hadoop's `LocalFileSystem`; every other
+  * scheme keeps the manager Spark picks.
   */
 object SessionConf {
 
@@ -51,8 +62,15 @@ object SessionConf {
     spark
   }
 
+  /** The builder setting that installs [[LocalCheckpointFiles]]; every
+    * session of the program and its tests carries it.
+    */
+  val CheckpointFiles: (String, String) =
+    LocalCheckpointFiles.Key -> classOf[LocalCheckpointFiles].getName
+
   def tuned(b: SparkSession.Builder): SparkSession.Builder = {
     val base = b
+      .config(CheckpointFiles._1, CheckpointFiles._2)
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
         sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "false"))
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",

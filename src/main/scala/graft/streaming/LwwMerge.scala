@@ -42,11 +42,11 @@ object LwwMerge {
       state: GroupState[KeyedChange]): Iterator[KeyedChange] = {
     val incoming = it.reduceOption(wins)
     val winner = (state.getOption ++ incoming).reduceOption(wins)
-    winner match {
+    // a stored winner that still wins is neither rewritten nor emitted
+    winner.filterNot(state.getOption.contains) match {
       case Some(w) =>
-        val changed = !state.getOption.contains(w)
         state.update(w)
-        if (changed) Iterator.single(w) else Iterator.empty
+        Iterator.single(w)
       case None => Iterator.empty
     }
   }

@@ -24,6 +24,29 @@ class EntryPointsSpec extends AnyFunSuite {
       .map(n => s"graft/$n.scala"))
   }
 
+  test("every session builder sets SessionConf.tuned or SessionConf.CheckpointFiles") {
+    // a session without either writes its stream checkpoints through
+    // Spark's default manager, which forks per checkpoint file
+    val builder = """SparkSession\s*\.\s*builder""".r
+    val sources = Seq("src/main/scala", "src/test/scala")
+      .flatMap(d => Files.walk(Paths.get(d)).iterator().asScala)
+      .filter(_.toString.endsWith(".scala"))
+    val calls = for {
+      p <- sources
+      text = new String(Files.readAllBytes(p), "UTF-8")
+      m <- builder.findAllMatchIn(text)
+      lineStart = text.lastIndexOf('\n', m.start) + 1
+      if !text.substring(lineStart, m.start).trim.matches("""(\*|//).*""")
+      end = Some(text.indexOf("getOrCreate", m.end)).filter(_ >= 0).getOrElse(text.length)
+    } yield (s"${p.getFileName}:${text.take(m.start).count(_ == '\n') + 1}",
+      text.substring(lineStart, end))
+    assert(Set("SessionConf.scala", "TestSpark.scala")
+      .subsetOf(calls.map(_._1.takeWhile(_ != ':')).toSet), calls.map(_._1))
+    val bare = calls.collect { case (at, call)
+      if !call.contains("tuned(") && !call.contains("SessionConf.CheckpointFiles") => at }
+    assert(bare.isEmpty, s"builders without the checkpoint file manager: $bare")
+  }
+
   test("Probe rejects an unknown subcommand, naming the valid ones, without a session") {
     val before = SparkSession.getDefaultSession
     for (args <- Seq(Seq("nope", "x"), Nil)) {

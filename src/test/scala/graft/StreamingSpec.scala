@@ -81,6 +81,33 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed("k2").op == ChangeOp.Delete)
   }
 
+  test("LWW: a batch whose rows all lose to stored winners rewrites no state and emits nothing") {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[KeyedChange]
+    val q = LwwMerge.merge(input.toDS())
+      .writeStream.format("memory").queryName("lww_losers")
+      .outputMode("update").start()
+    try {
+      input.addData(
+        KeyedChange("k1", ChangeOp.Update, 10L, 1L, 1, "live1"),
+        KeyedChange("k2", ChangeOp.Insert, 11L, 2L, 1, "live2"))
+      q.processAllAvailable()
+      def lastBatch = q.recentProgress.filter(_.numInputRows > 0).last
+      assert(lastBatch.stateOperators.head.numRowsUpdated == 2)
+      // stale backfill and an older live change: every row loses
+      input.addData(
+        KeyedChange("k1", ChangeOp.Backfill, 1L, -1L, 0, "stale1"),
+        KeyedChange("k2", ChangeOp.Update, 5L, 0L, 1, "older2"))
+      q.processAllAvailable()
+      val progress = lastBatch
+      assert(progress.batchId == 1 && progress.numInputRows == 2)
+      assert(progress.stateOperators.head.numRowsUpdated == 0)
+      assert(progress.stateOperators.head.numRowsTotal == 2)
+      assert(spark.table("lww_losers").as[KeyedChange].collect().map(_.payload).sorted
+        .sameElements(Seq("live1", "live2")))
+    } finally q.stop()
+  }
+
   test("state table: current-state materialization and tombstone memory") {
     implicit val sqlCtx = spark.sqlContext
     val root = Files.createTempDirectory("graft_state").toString
